@@ -1,6 +1,6 @@
 package graft.codec
 
-/** Single-pass per-chunk statistics + an EXACT size model for every codec.
+/** Per-chunk statistics + an EXACT size model for every codec.
   *
   * This is the engine's replacement for the reference's adaptive probability
   * model (`Ppmd7_Update*`, `/root/reference/src/lib/ppmd/Ppmd7.c:661-710`):
@@ -8,6 +8,12 @@ package graft.codec
   * encoded size under each lightweight scheme, and pick the argmin
   * (SURVEY.md §4.1). Exactness (not sampling) makes the selector stable and
   * gives the property `chosenSize <= rawSize` by construction.
+  *
+  * The selector runs on every 256-token block, so `analyze` allocates
+  * nothing per block beyond the distinct-value array: varint lengths are
+  * branch-free, and a slice whose values span fewer than 2^16 sets bits in
+  * a per-thread bitmap that is read out already sorted (no hashing, no
+  * sort). Only wider ranges fall back to a hash set and a sort.
   *
   * All fields are mergeable except the exact varint sums, so the Spark-side
   * reporting aggregate (graft.stats) carries a mergeable subset; selection
@@ -77,54 +83,51 @@ object ChunkStats {
 
   def analyze(v: Array[Int]): ChunkStats = analyze(v, 0, v.length)
 
-  /** Single-pass analysis of the slice [from, until). */
+  /** Analysis of the slice [from, until): one pass for the range, runs and
+    * exact varint sums, then the sorted distinct set. */
   def analyze(v: Array[Int], from: Int, until: Int): ChunkStats = {
     val n = until - from
     if (n == 0) // dict payload for card=0: varint(0) + width byte = 2
       return ChunkStats(0, 0, 0, 0, 0, 0, Array.emptyIntArray, 0, 0, 2, 1)
 
-    var min = v(from)
-    var max = v(from)
+    var prev = v(from)
+    var min = prev
+    var max = prev
     var runCount = 1
     var maxRun = 1
     var curRun = 1
-    var rle = Varint.zlen(v(from).toLong) // first run's value; lengths added below
-    var delta = Varint.zlen(v(from).toLong)
-    var ulen = Varint.len(v(from).toLong & 0xffffffffL) // unsigned; valid if min>=0
-    var zlenSum = Varint.zlen(v(from).toLong)
-    // capacity: a vector of n values has at most n distinct — sizing the set
-    // to min(n, DictCap) keeps small-block analysis allocation-light (the
-    // fixed 2^17-slot table cost 512KB of zeroing per 256-token block).
-    val set = new IntHashSet(math.min(n, DictCap))
-    set.add(v(from))
+    var rle = Varint.zlen32(prev) // first run's value; lengths added below
+    var delta = Varint.zlen32(prev)
+    var ulen = Varint.len32(prev) // unsigned; valid if min>=0
+    var zlenSum = Varint.zlen32(prev)
     var i = from + 1
     while (i < until) {
       val x = v(i)
       if (x < min) min = x
       if (x > max) max = x
-      if (x == v(i - 1)) {
+      if (x == prev) {
         curRun += 1
       } else {
-        rle += Varint.len((curRun - 1).toLong)
-        rle += Varint.zlen(x.toLong)
+        rle += Varint.len32(curRun - 1) + Varint.zlen32(x)
         if (curRun > maxRun) maxRun = curRun
         curRun = 1
         runCount += 1
       }
-      delta += Varint.zlen(x.toLong - v(i - 1).toLong)
-      ulen += Varint.len(x.toLong & 0xffffffffL)
-      zlenSum += Varint.zlen(x.toLong)
-      set.add(x)
+      delta += Varint.zlen(x.toLong - prev.toLong)
+      ulen += Varint.len32(x)
+      zlenSum += Varint.zlen32(x)
+      prev = x
       i += 1
     }
-    rle += Varint.len((curRun - 1).toLong)
+    rle += Varint.len32(curRun - 1)
     if (curRun > maxRun) maxRun = curRun
 
+    val sorted =
+      if (max.toLong - min.toLong < BitmapSpan) distinctByBitmap(v, from, until, min, max)
+      else distinctByHash(v, from, until)
     var card = -1
-    var sorted: Array[Int] = Array.emptyIntArray
     var dictPayload = Int.MaxValue
-    if (!set.overflowed) {
-      sorted = set.toSortedArray
+    if (sorted != null) {
       card = sorted.length
       var hdr = Varint.len(card.toLong) + Varint.zlen(sorted(0).toLong)
       var j = 1
@@ -139,8 +142,61 @@ object ChunkStats {
     // the unsigned sum used `& 0xffffffffL` so it's only meaningful when all
     // values are non-negative; with negatives the codec flags zigzag mode.
     val varintPayload = 1 + (if (min >= 0) ulen else zlenSum)
-    ChunkStats(n, min, max, runCount, maxRun, card, sorted, rle, delta,
+    ChunkStats(n, min, max, runCount, maxRun, card,
+      if (sorted == null) Array.emptyIntArray else sorted, rle, delta,
       dictPayload, varintPayload)
+  }
+
+  /** Value ranges narrower than this take the bitmap path: 2^16 bits is an
+    * 8 KB scratch per thread, and at most 2^16 distinct values can never
+    * overflow `DictCap`. */
+  private final val BitmapSpan = 1 << 16
+
+  /** All-zero between calls: `distinctByBitmap` clears what it sets. */
+  private val bitmap = ThreadLocal.withInitial[Array[Long]](() => new Array[Long](BitmapSpan >>> 6))
+
+  /** Sorted distinct values of a slice whose range [min, max] is narrower
+    * than `BitmapSpan`: one bit per value offset, then the set bits read
+    * out in order (and cleared) with numberOfTrailingZeros. */
+  private def distinctByBitmap(v: Array[Int], from: Int, until: Int, min: Int,
+                               max: Int): Array[Int] = {
+    val bits = bitmap.get
+    var i = from
+    while (i < until) {
+      val d = v(i) - min
+      bits(d >>> 6) |= 1L << d
+      i += 1
+    }
+    val last = (max - min) >>> 6
+    var card = 0
+    var w = 0
+    while (w <= last) { card += java.lang.Long.bitCount(bits(w)); w += 1 }
+    val out = new Array[Int](card)
+    var k = 0
+    w = 0
+    while (w <= last) {
+      var word = bits(w)
+      if (word != 0L) {
+        bits(w) = 0L
+        val base = min + (w << 6)
+        while (word != 0L) {
+          out(k) = base + java.lang.Long.numberOfTrailingZeros(word)
+          k += 1
+          word &= word - 1L
+        }
+      }
+      w += 1
+    }
+    out
+  }
+
+  /** Sorted distinct values of a wide-range slice, or null once more than
+    * `DictCap` distinct values are seen. */
+  private def distinctByHash(v: Array[Int], from: Int, until: Int): Array[Int] = {
+    val set = new IntHashSet(math.min(until - from, DictCap))
+    var i = from
+    while (i < until && !set.overflowed) { set.add(v(i)); i += 1 }
+    if (set.overflowed) null else set.toSortedArray
   }
 }
 

@@ -52,12 +52,27 @@ object Fsst {
   private final val MagicS: Byte = 'S'
 
   final class SymbolTable(val symbols: Array[Array[Byte]]) {
-    // bucket by first byte, longest-first, for greedy longest match
+    // bucket by first byte, longest-first (then highest index first), for
+    // greedy longest match
     private[Fsst] val buckets: Array[Array[Int]] = {
-      val tmp = Array.fill(256)(List.empty[Int])
-      for (i <- symbols.indices)
-        tmp(symbols(i)(0) & 0xff) ::= i
-      tmp.map(_.sortBy(i => -symbols(i).length).toArray)
+      val size = new Array[Int](256)
+      symbols.foreach(s => size(s(0) & 0xff) += 1)
+      val out = size.map(new Array[Int](_))
+      java.util.Arrays.fill(size, 0)
+      var i = symbols.length - 1
+      while (i >= 0) { // insertion after every symbol at least as long
+        val b = symbols(i)(0) & 0xff
+        val bucket = out(b)
+        var j = size(b)
+        while (j > 0 && symbols(bucket(j - 1)).length < symbols(i).length) {
+          bucket(j) = bucket(j - 1)
+          j -= 1
+        }
+        bucket(j) = i
+        size(b) += 1
+        i -= 1
+      }
+      out
     }
 
     /** Longest symbol matching data at pos, or -1. */
@@ -86,7 +101,13 @@ object Fsst {
     * frequent adjacent symbol pairs, scored by gain = freq * length.
     * Oversized inputs are sampled by STRIDED slices spread over the whole
     * buffer — a prefix sample would bias the table toward the first rows of
-    * a chunk and miss vocabulary that only appears later. */
+    * a chunk and miss vocabulary that only appears later.
+    *
+    * Each generation counts codes and adjacent code pairs in primitive
+    * open-addressing tables, keys every candidate symbol (at most 8 bytes)
+    * by its bytes packed into a Long, and keeps the best `MaxSymbols` in a
+    * bounded heap ordered by -gain, then length, then unsigned byte order —
+    * a total order over distinct symbols, so the table is deterministic. */
   def train(data: Array[Byte], generations: Int = 4,
             sampleLimit: Int = 1 << 14): SymbolTable = {
     val sample =
@@ -115,56 +136,165 @@ object Fsst {
 
   private def refine(table: SymbolTable, sample: Array[Byte]): SymbolTable = {
     val nSym = table.symbols.length
-    // pseudo-code space: 0..nSym-1 = table symbols, 256 literals after
+    // pseudo-code space: 0..nSym-1 = table symbols, 256 literals after;
+    // each code's bytes packed big-endian into a Long, with its length
     val nCodes = nSym + 256
+    val codeVal = new Array[Long](nCodes)
+    val codeLen = new Array[Int](nCodes)
+    var c = 0
+    while (c < nCodes) {
+      if (c < nSym) {
+        codeVal(c) = packBytes(table.symbols(c))
+        codeLen(c) = table.symbols(c).length
+      } else {
+        codeVal(c) = (c - nSym).toLong
+        codeLen(c) = 1
+      }
+      c += 1
+    }
     val freq1 = new Array[Long](nCodes)
-    val pairGain = new java.util.HashMap[Long, Array[Long]]() // (a,b) -> [count]
+    val pairs = new PairCounts(math.min(sample.length.toLong, nCodes.toLong * nCodes).toInt)
     var pos = 0
     var prev = -1
     val n = sample.length
     while (pos < n) {
       val si = if (nSym == 0) -1 else table.findLongest(sample, pos, n)
-      val (code, len) =
-        if (si >= 0) (si, table.symbols(si).length)
-        else (nSym + (sample(pos) & 0xff), 1)
+      val code = if (si >= 0) si else nSym + (sample(pos) & 0xff)
       freq1(code) += 1
-      if (prev >= 0) {
-        val key = prev.toLong << 32 | code.toLong
-        val cell = pairGain.computeIfAbsent(key, _ => new Array[Long](1))
-        cell(0) += 1
-      }
+      if (prev >= 0) pairs.increment(prev * nCodes + code)
       prev = code
-      pos += len
+      pos += codeLen(code)
     }
     // candidates: existing symbols, literals, and pair concatenations
-    def codeBytes(c: Int): Array[Byte] =
-      if (c < nSym) table.symbols(c) else Array((c - nSym).toByte)
-    val cand = new java.util.HashMap[String, (Array[Byte], Long)]()
-    def offer(bytes: Array[Byte], gain: Long): Unit = {
-      if (bytes.length > MaxSymbolLen) return
-      val key = new String(bytes.map(b => (b & 0xff).toChar))
-      val cur = cand.get(key)
-      if (cur == null || cur._2 < gain) cand.put(key, (bytes, gain))
-    }
-    var c = 0
+    val cand = new Candidates(nCodes + pairs.size)
+    c = 0
     while (c < nCodes) {
-      if (freq1(c) > 0) offer(codeBytes(c), freq1(c) * codeBytes(c).length)
+      if (freq1(c) > 0) cand.offer(codeLen(c), codeVal(c), freq1(c) * codeLen(c))
       c += 1
     }
-    pairGain.forEach { (key, cnt) =>
-      val a = (key >>> 32).toInt
-      val b = (key & 0xffffffffL).toInt
-      val merged = codeBytes(a) ++ codeBytes(b)
-      if (merged.length <= MaxSymbolLen) offer(merged, cnt(0) * merged.length)
+    var slot = 0
+    while (slot < pairs.capacity) {
+      val key = pairs.keys(slot) - 1
+      if (key >= 0) {
+        val a = key / nCodes
+        val b = key % nCodes
+        val len = codeLen(a) + codeLen(b)
+        if (len <= MaxSymbolLen)
+          cand.offer(len, (codeVal(a) << (8 * codeLen(b))) | codeVal(b),
+            pairs.counts(slot).toLong * len)
+      }
+      slot += 1
     }
-    import scala.jdk.CollectionConverters._
-    val top = cand.values.asScala.toArray
-      .sortBy { case (bytes, gain) =>
-        (-gain, bytes.length, new String(bytes.map(b => (b & 0xff).toChar)))
-      } // deterministic order
-      .take(MaxSymbols)
-      .map(_._1)
-    new SymbolTable(top)
+    new SymbolTable(cand.top(MaxSymbols))
+  }
+
+  private def packBytes(b: Array[Byte]): Long = {
+    var v = 0L
+    var i = 0
+    while (i < b.length) { v = (v << 8) | (b(i) & 0xffL); i += 1 }
+    v
+  }
+
+  /** Power-of-two slot count that keeps `maxKeys` keys at most half full. */
+  private def tableSlots(maxKeys: Int): Int =
+    Integer.highestOneBit(math.max(16, 2 * maxKeys) - 1) << 1
+
+  /** Occurrence counts of non-negative Int keys, open addressing; a slot
+    * holds key + 1 (0 = empty). Sized for `maxKeys` distinct keys. */
+  private final class PairCounts(maxKeys: Int) {
+    val capacity: Int = tableSlots(maxKeys)
+    private val mask = capacity - 1
+    private val shift = Integer.numberOfLeadingZeros(mask)
+    val keys = new Array[Int](capacity)
+    val counts = new Array[Int](capacity)
+    var size = 0
+
+    def increment(key: Int): Unit = {
+      var i = (key * 0x9e3779b1) >>> shift
+      while (keys(i) != 0 && keys(i) != key + 1) i = (i + 1) & mask
+      if (keys(i) == 0) { keys(i) = key + 1; size += 1 }
+      counts(i) += 1
+    }
+  }
+
+  /** Candidate symbols keyed by (length, packed bytes), keeping the best
+    * gain offered for each; open addressing, sized for `maxKeys` keys. */
+  private final class Candidates(maxKeys: Int) {
+    private val capacity = tableSlots(maxKeys)
+    private val mask = capacity - 1
+    private val shift = java.lang.Long.numberOfLeadingZeros(mask.toLong)
+    private val lens = new Array[Int](capacity) // 0 = empty slot
+    private val vals = new Array[Long](capacity)
+    private val gains = new Array[Long](capacity)
+    private var size = 0
+
+    def offer(len: Int, v: Long, gain: Long): Unit = {
+      var i = (((v + len) * 0x9e3779b97f4a7c15L) >>> shift).toInt
+      while (lens(i) != 0 && (lens(i) != len || vals(i) != v)) i = (i + 1) & mask
+      if (lens(i) == 0) { lens(i) = len; vals(i) = v; gains(i) = gain; size += 1 }
+      else if (gains(i) < gain) gains(i) = gain
+    }
+
+    /** Slot x ranks before slot y: higher gain, then shorter, then lower
+      * unsigned bytes. */
+    private def before(x: Int, y: Int): Boolean =
+      if (gains(x) != gains(y)) gains(x) > gains(y)
+      else if (lens(x) != lens(y)) lens(x) < lens(y)
+      else java.lang.Long.compareUnsigned(vals(x), vals(y)) < 0
+
+    /** The best `k` candidates as symbols, best first: a bounded heap whose
+      * root is the worst symbol kept so far. */
+    def top(k0: Int): Array[Array[Byte]] = {
+      val k = math.min(k0, size)
+      val heap = new Array[Int](k)
+      var m = 0
+      def siftDown(i0: Int): Unit = {
+        var i = i0
+        var done = false
+        while (!done) {
+          var w = 2 * i + 1
+          if (w >= m) done = true
+          else {
+            if (w + 1 < m && before(heap(w), heap(w + 1))) w += 1
+            if (before(heap(i), heap(w))) {
+              val t = heap(i); heap(i) = heap(w); heap(w) = t
+              i = w
+            } else done = true
+          }
+        }
+      }
+      var slot = 0
+      while (slot < capacity) {
+        if (lens(slot) != 0) {
+          if (m < k) {
+            var i = m
+            heap(i) = slot
+            m += 1
+            while (i > 0 && before(heap((i - 1) / 2), heap(i))) {
+              val p = (i - 1) / 2
+              val t = heap(i); heap(i) = heap(p); heap(p) = t
+              i = p
+            }
+          } else if (k > 0 && before(slot, heap(0))) {
+            heap(0) = slot
+            siftDown(0)
+          }
+        }
+        slot += 1
+      }
+      val out = new Array[Array[Byte]](k)
+      while (m > 0) { // pop the worst into the last free place
+        val s = heap(0)
+        m -= 1
+        heap(0) = heap(m)
+        siftDown(0)
+        val sym = new Array[Byte](lens(s))
+        var j = 0
+        while (j < sym.length) { sym(j) = (vals(s) >>> (8 * (sym.length - 1 - j))).toByte; j += 1 }
+        out(m) = sym
+      }
+      out
+    }
   }
 
   def compressWith(table: SymbolTable, data: Array[Byte]): Array[Byte] = {

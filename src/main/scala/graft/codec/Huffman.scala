@@ -93,33 +93,41 @@ object Huffman {
     codes
   }
 
-  /** Encode `data` (bytes as symbols); returns the framed block. */
+  /** Encode `data` (bytes as symbols); returns the framed block. The block
+    * size is known before any byte is written (header + ceil(sum of
+    * freq * codeLen / 8)), so the output is allocated once at its exact size
+    * and the code stream goes straight into it, 32 bits at a time. */
   def encode(data: Array[Byte]): Array[Byte] = {
     val freq = new Array[Long](256)
     var i = 0
     while (i < data.length) { freq(data(i) & 0xff) += 1; i += 1 }
     val lens = codeLengths(freq)
     val codes = canonicalCodes(lens)
-    val bos = new java.io.ByteArrayOutputStream(data.length / 2 + 160)
     // alphabet range actually present (empty input -> degenerate [0,1) range)
     var lo = 0
     while (lo < 255 && lens(lo) == 0) lo += 1
     var hi = 255
     while (hi > lo && lens(hi) == 0) hi -= 1
     val cnt = hi - lo + 1
-    bos.write(lo)
-    bos.write(cnt - 1)
+    var bits = 0L
+    i = 0
+    while (i < 256) { bits += freq(i) * lens(i); i += 1 }
+    val header = 2 + (cnt + 1) / 2 + Varint.len(data.length.toLong)
+    val out = new Array[Byte](header + ((bits + 7) >>> 3).toInt)
+    out(0) = lo.toByte
+    out(1) = (cnt - 1).toByte
+    var p = 2
     i = lo
     while (i <= hi) { // two nibbles per byte
       val a = lens(i)
       val b = if (i + 1 <= hi) lens(i + 1) else 0
-      bos.write((a << 4) | b)
+      out(p) = ((a << 4) | b).toByte
+      p += 1
       i += 2
     }
-    // varint symbol count
-    var v = data.length.toLong
-    while ((v & ~0x7fL) != 0L) { bos.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    bos.write(v.toInt)
+    p = Varint.write(out, p, data.length.toLong)
+    // MSB-first: the low nBits of acc are pending; codes are <= 15 bits, so
+    // draining at 32 keeps at most 46 pending
     var acc = 0L
     var nBits = 0
     i = 0
@@ -127,14 +135,25 @@ object Huffman {
       val s = data(i) & 0xff
       acc = (acc << lens(s)) | codes(s).toLong
       nBits += lens(s)
-      while (nBits >= 8) {
-        nBits -= 8
-        bos.write(((acc >>> nBits) & 0xff).toInt)
+      if (nBits >= 32) {
+        nBits -= 32
+        val w = (acc >>> nBits).toInt
+        out(p) = (w >>> 24).toByte
+        out(p + 1) = (w >>> 16).toByte
+        out(p + 2) = (w >>> 8).toByte
+        out(p + 3) = w.toByte
+        p += 4
       }
       i += 1
     }
-    if (nBits > 0) bos.write(((acc << (8 - nBits)) & 0xff).toInt)
-    bos.toByteArray
+    while (nBits >= 8) {
+      nBits -= 8
+      out(p) = (acc >>> nBits).toByte
+      p += 1
+    }
+    if (nBits > 0) { out(p) = (acc << (8 - nBits)).toByte; p += 1 }
+    require(p == out.length, s"huffman size model mismatch: wrote $p, predicted ${out.length}")
+    out
   }
 
   /** Decode a block framed by encode() occupying [from, until). */

@@ -9,13 +9,20 @@ package graft.codec
   * columnar_encode north rule.
   */
 object Varint {
-  /** Bytes needed for an unsigned LEB128 of v (v interpreted unsigned). */
-  def len(v: Long): Int = {
-    var x = v
-    var n = 1
-    while ((x & ~0x7fL) != 0L) { x >>>= 7; n += 1 }
-    n
-  }
+  /** Bytes needed for an unsigned LEB128 of v (v interpreted unsigned):
+    * one per started 7-bit group of its significant bits, computed without
+    * a branch as (64 - nlz(v | 1) + 6) / 7 (`v | 1` makes 0 count as one
+    * bit). The division is `* 37 >>> 8`, exact for the 7..70 it sees. */
+  def len(v: Long): Int =
+    ((70 - java.lang.Long.numberOfLeadingZeros(v | 1L)) * 37) >>> 8
+
+  /** `len` of an Int read as unsigned 32-bit (`len(x & 0xffffffffL)`). */
+  def len32(x: Int): Int =
+    ((38 - Integer.numberOfLeadingZeros(x | 1)) * 37) >>> 8
+
+  /** `zlen(x.toLong)` in 32-bit arithmetic: the 32-bit zigzag of an Int,
+    * read unsigned, equals the 64-bit zigzag of its sign extension. */
+  def zlen32(x: Int): Int = len32((x << 1) ^ (x >> 31))
 
   def zigzag(v: Long): Long = (v << 1) ^ (v >> 63)
   def unzigzag(v: Long): Long = (v >>> 1) ^ -(v & 1L)

@@ -216,6 +216,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       case None => false
       case Some((loc, external)) =>
         java.nio.file.Files.delete(f.toPath)
+        ManifestCache.invalidate(loc)
         // managed data belongs to the catalog; external data is only
         // referenced, never owned (standard Spark DROP semantics)
         if (!external)

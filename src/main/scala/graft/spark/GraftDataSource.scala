@@ -638,7 +638,10 @@ private[spark] object ZonePrune {
   * coherence cost. Bounded two ways: a dir whose listed manifest bytes
   * exceed `graft.plan.localManifestBytes` is never read driver-side
   * (planning stays distributed — the 100-TB path), and cached entries are
-  * LRU-evicted past `graft.plan.cacheBytes` of estimated row bytes. */
+  * LRU-evicted past `graft.plan.cacheBytes` of estimated row bytes. Entries
+  * of deleted tables do not wait for eviction: each insert drops the
+  * entries whose `_lineage` dir is gone, and `GraftCatalog.dropTable`
+  * invalidates the dropped table's entries. */
 private[spark] object ManifestCache {
   private final class Entry(val marker: String,
                             val rows: Array[Lineage.ManifestRow],
@@ -679,6 +682,7 @@ private[spark] object ManifestCache {
         val e = new Entry(marker, rows, estBytes(rows))
         if (budget > 0 && e.bytes <= budget / 2) {
           e.tick = ticks.incrementAndGet()
+          dropDeleted(conf)
           cache.put(dir, e)
           evictTo(budget)
         } else cache.remove(dir)
@@ -696,7 +700,22 @@ private[spark] object ManifestCache {
     }
   }
 
+  /** Drops the entries whose table no longer has a `_lineage` dir. */
+  private def dropDeleted(conf: org.apache.hadoop.conf.Configuration): Unit =
+    cache.keySet.forEach { d =>
+      val p = new org.apache.hadoop.fs.Path(s"$d/_lineage")
+      if (!p.getFileSystem(conf).exists(p)) cache.remove(d)
+    }
+
+  /** Drops the entries of `dir` and of the batch dirs under it. */
+  def invalidate(dir: String): Unit =
+    cache.keySet.removeIf(d => d == dir || d.startsWith(dir + "/"))
+
   private[spark] def clear(): Unit = cache.clear() // specs
+  private[spark] def cachedDirs: Set[String] = { // specs
+    import scala.jdk.CollectionConverters._
+    cache.keySet.asScala.toSet
+  }
 }
 
 /** One copy of dir-level planning (dir resolution, manifest load, zone-map
