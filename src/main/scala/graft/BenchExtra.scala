@@ -34,21 +34,21 @@ object BenchExtra {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(plansDir).mkdirs()
 
-    def time[A](f: => A): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => wanted.isEmpty || wanted(n) }
+    // a query that throws in any run has no timing (None)
     val results = qs.map { case (name, fn) =>
       spark.sparkContext.setJobDescription(s"bench-extra: $name")
-      def once(): Double = time {
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench-extra] $name failed: $e") }
+      def once(): Option[Double] = {
+        val t0 = System.nanoTime()
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          Some((System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench-extra] $name failed: $e"); None }
       }
-      once() // warm
-      val t = (1 to reps).map(_ => once()).min
+      val runs = (0 to reps).map(_ => once()) // the first run is the warm-up
+      val t = if (runs.forall(_.isDefined)) Some(runs.tail.flatten.min) else None
       // plan dump AFTER the runs (DML scratch dirs exist by now)
       try {
         val plan = fn(spark, sfDir).queryExecution.explainString(
@@ -60,14 +60,24 @@ object BenchExtra {
       spark.sparkContext.setJobDescription(null)
       name -> t
     }
-    val js = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val json =
-      f"""{"metric":"noop_total","value":$total%.3f,"unit":"sec","queries":$js,"sf":"$sfDir","suffix":"$suffix"}"""
+    val json = summary(results, sfDir, suffix)
     println(json)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$plansDir/bench_extra_$suffix.json"), json + "\n")
     spark.stop()
+  }
+
+  /** The one-line JSON result. A failed query (None) is emitted as null,
+    * listed under "failed" and left out of noop_total. */
+  private[graft] def summary(results: Seq[(String, Option[Double])],
+                             sfDir: String, suffix: String): String = {
+    val js = results.map {
+      case (k, Some(v)) => "\"" + k + f"\":$v%.3f"
+      case (k, None) => "\"" + k + "\":null"
+    }.mkString("{", ",", "}")
+    val failed = results.collect { case (k, None) => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
+    val total = results.flatMap(_._2).sum
+    f"""{"metric":"noop_total","value":$total%.3f,"unit":"sec","queries":$js,"failed":$failed,"sf":"$sfDir","suffix":"$suffix"}"""
   }
 }

@@ -166,18 +166,6 @@ object ChunkBuilder {
     ChunkColumns(docIds, rowLens, srcIdx, srcDict, tokens, c.n_rows)
   }
 
-  /** All three side columns — (doc_id, n_tok, source) — WITHOUT decoding
-    * the token payload: the column-pruned read path. A rollup or id scan
-    * over a 100 TB table reads the few-KB meta sections of each chunk and
-    * never touches the compressed tokens. */
-  def openSide(c: EncodedChunk,
-               sharedMeta: MetaDict): Iterator[(String, Int, String)] = {
-    val (rowLens, srcIdx, srcDict, docIds) = openSections(c, sharedMeta,
-      withDocIds = true)
-    (0 until c.n_rows).iterator.map(i =>
-      (docIds(i), rowLens(i), srcOf(c, srcDict, srcIdx(i))))
-  }
-
   /** Decode only the side metadata (source, n_tok per row) without touching
     * the token payload OR the doc_id section (the biggest meta section and
     * the only shared-dict one — so this path needs no dictionary at all). */
@@ -189,7 +177,7 @@ object ChunkBuilder {
   }
 
   /** ONE copy of the meta-decode prologue (section split, shared-dict
-    * dispatch, validation) behind open/openSide/openMeta — the pruned
+    * dispatch, validation) behind openColumns/openMeta — the pruned
     * paths can never silently diverge from the full one. docIds is null
     * when withDocIds = false. */
   private def openSections(c: EncodedChunk, sharedMeta: MetaDict,

@@ -151,52 +151,6 @@ object Decoder {
     }
   }
 
-  /** Zone-map pruned decode over a chunk TABLE by doc_id range — the
-    * chunk-table twin of Lineage.decodeDocIdRange: the min/max_doc_id
-    * predicates push into a parquet chunk-table scan, so a point/range
-    * lookup reads the row groups of overlapping chunks only. */
-  def decodeDocIdRange(chunks: Dataset[EncodedChunk], lo: String,
-                       hi: String): Dataset[SeqRow] =
-    decodeDocIdRange(chunks, lo, hi, None)
-
-  def decodeDocIdRange(chunks: Dataset[EncodedChunk], lo: String, hi: String,
-                       sharedDict: Option[Array[Byte]]): Dataset[SeqRow] = {
-    import org.apache.spark.sql.functions.col
-    val spark = chunks.sparkSession
-    import spark.implicits._
-    // same UTF-8 binary order as the pruning predicates (Utf8Order doc);
-    // bound encodings hoisted out of the per-row path
-    val inRange = Utf8Order.inRange(Utf8Order.bytes(lo), Utf8Order.bytes(hi)) _
-    decodeTable(
-      chunks.filter(col("max_doc_id") >= lo && col("min_doc_id") <= hi),
-      sharedDict)
-      .filter(r => inRange(r.doc_id))
-  }
-
-  /** Containment-pruned decode over a chunk TABLE — the same two-level
-    * pruning as Lineage.decodeContainingToken but against a persisted
-    * Dataset[EncodedChunk] (e.g. a parquet chunk table, where the min/max
-    * column predicates PUSH into the scan and skip whole row groups before
-    * any payload bytes are read; the TokenSketch then prunes in-range
-    * chunks that don't hold the value). */
-  def decodeContainingToken(chunks: Dataset[EncodedChunk],
-                            tok: Int): Dataset[SeqRow] =
-    decodeContainingToken(chunks, tok, None)
-
-  def decodeContainingToken(chunks: Dataset[EncodedChunk], tok: Int,
-                            sharedDict: Option[Array[Byte]]): Dataset[SeqRow] = {
-    import org.apache.spark.sql.functions.col
-    val spark = chunks.sparkSession
-    import spark.implicits._
-    decodeTable(
-      chunks
-        .filter(col("min_tok") <= tok && col("max_tok") >= tok)
-        .filter((c: EncodedChunk) =>
-          TokenSketch.mightContain(c.tok_set, c.min_tok, tok)),
-      sharedDict)
-      .filter(_.tokens.contains(tok))
-  }
-
   /** Decode with verification against the source table; returns mismatched
     * doc_ids (empty = faithful). Each side is reduced map-side to
     * (doc_id, 64-bit content hash over n_tok + tokens + source) BEFORE the

@@ -834,12 +834,17 @@ object Lineage {
         } else {
           // roll BACK: the adds did not finish — delete the fresh pids
           // that did land (brand-new partitions; removing them restores
-          // the pre-DML state exactly)
+          // the pre-DML state exactly). A fresh pid with no committed
+          // generation may still hold its gen-0 data file (the swap died
+          // between the data and the manifest rename); vacuum keeps gen-0
+          // data without a manifest for resume, so it is removed here
           fresh.foreach { pid =>
-            byPid.getOrElse(pid, Array.empty[(Int, Int)]).foreach {
-              case (_, g) =>
+            byPid.get(pid) match {
+              case Some(gens) => gens.foreach { case (_, g) =>
                 fs.delete(manifestPath(dir, pid, g), false)
                 fs.delete(dataPath(dir, pid, g), false)
+              }
+              case None => fs.delete(dataPath(dir, pid, 0), false)
             }
           }
         }
@@ -958,52 +963,6 @@ object Lineage {
     files.length.toLong
   }
 
-  /** Decode a lineage dir back to rows: one task per chunk, seeking to its
-    * manifest offset — selective reads, the analog of length-delimited
-    * chunked decode (`test_ppmd7.py:95-146`). */
-  def decodeFromDir(spark: SparkSession, dir: String): Dataset[SeqRow] =
-    decodeManifest(spark, dir, readManifest(spark, dir))
-
-  /** Zone-map pruned decode: only chunks whose [min_doc_id, max_doc_id]
-    * range overlaps [lo, hi] are read and decoded — the manifest doubles as
-    * a zone map, so a point/range lookup touches a handful of chunks out of
-    * the whole table (at 10^12 rows this is the difference between a seek
-    * and a full scan). Rows are then exactly filtered. */
-  def decodeDocIdRange(spark: SparkSession, dir: String, lo: String,
-                       hi: String): Dataset[SeqRow] = {
-    import org.apache.spark.sql.functions.col
-    val pruned = readManifest(spark, dir)
-      .filter(col("max_doc_id") >= lo && col("min_doc_id") <= hi)
-    // exact filter in the SAME (UTF-8 binary) order the pruning used —
-    // Java String order disagrees for supplementary-plane characters;
-    // bound encodings hoisted out of the per-row path
-    val inRange = Utf8Order.inRange(Utf8Order.bytes(lo), Utf8Order.bytes(hi)) _
-    decodeManifest(spark, dir, pruned).filter(r => inRange(r.doc_id))
-  }
-
-  /** Content-predicate pruned decode: two manifest-level levels before any
-    * payload is touched — the [min_tok, max_tok] zone map (kills
-    * out-of-range probes; a pushed-down parquet filter once compacted),
-    * then the per-chunk TokenSketch containment index (kills in-range
-    * probes for chunks that don't actually hold the value — on a zipf
-    * vocab min/max alone passes nearly every chunk). Rows of surviving
-    * chunks are then exactly filtered by containment. */
-  def decodeContainingToken(spark: SparkSession, dir: String,
-                            tok: Int): Dataset[SeqRow] =
-    decodeManifest(spark, dir, manifestForToken(spark, dir, tok))
-      .filter(r => r.tokens.contains(tok))
-
-  /** The manifest rows (= chunks) that survive both pruning levels for a
-    * token probe — exposed so callers/tests can observe pruning
-    * selectivity without decoding. */
-  def manifestForToken(spark: SparkSession, dir: String,
-                       tok: Int): Dataset[ManifestRow] = {
-    import org.apache.spark.sql.functions.col
-    readManifest(spark, dir)
-      .filter(col("min_tok") <= tok && col("max_tok") >= tok)
-      .filter(m => TokenSketch.mightContain(m.tok_set, m.min_tok, tok))
-  }
-
   // ---- batch trees (streaming sink layout: root/batch=N/{data,_lineage}) ----
 
   /** Parse a batch dir's number from its NAME ("batch=123" -> 123). */
@@ -1032,49 +991,6 @@ object Lineage {
     else fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
       .filter(d => fs.exists(new Path(d, "_lineage")))
       .map(_.toString).sortBy(batchSortKey).toSeq
-  }
-
-  /** Tree root, validated LOUDLY: a missing root or a plain lineage dir
-    * (the thing decodeFromDir reads) must error, not return a silently
-    * empty Dataset indistinguishable from an empty tree. An existing
-    * non-lineage root with no batches yet is a legitimate pre-start tree
-    * and yields the empty list. */
-  private def treeDirs(spark: SparkSession, root: String): Seq[String] = {
-    val fs = FileSystem.get(new java.net.URI(root),
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(root)))
-      throw new IllegalArgumentException(
-        s"graft batch-tree root does not exist: $root")
-    if (fs.exists(new Path(s"$root/_lineage")))
-      throw new IllegalArgumentException(
-        s"$root is a plain lineage dir — use decodeFromDir " +
-          "(batch trees hold batch=N subdirectories)")
-    // deliberately the FULL at-rest view (BatchTreeSpec pins it): the
-    // engine-level decode API is the power-user path; marker-aware
-    // visibility for readers lives in the DSv2 source (visibleBatchDirs)
-    batchDirs(spark, root)
-  }
-
-  /** Decode an entire streaming batch tree as ONE Dataset. Each subdir
-    * resolves its own manifest and shared dictionary, so mixed-era and
-    * mixed-dictionary batches compose; the union is lazy (one Spark plan,
-    * chunks of every batch decode in parallel). */
-  def decodeBatchTree(spark: SparkSession, root: String): Dataset[SeqRow] = {
-    import spark.implicits._
-    treeDirs(spark, root).map(d => decodeFromDir(spark, d))
-      .reduceOption(_ union _)
-      .getOrElse(spark.emptyDataset[SeqRow])
-  }
-
-  /** Zone-map pruned tree decode: each batch prunes on its own manifest
-    * before any payload read — a point lookup over a year of micro-batches
-    * touches a handful of chunks per batch at most. */
-  def decodeDocIdRangeTree(spark: SparkSession, root: String, lo: String,
-                           hi: String): Dataset[SeqRow] = {
-    import spark.implicits._
-    treeDirs(spark, root).map(d => decodeDocIdRange(spark, d, lo, hi))
-      .reduceOption(_ union _)
-      .getOrElse(spark.emptyDataset[SeqRow])
   }
 
   /** Mark a batch dir fully committed. The streaming SOURCE
@@ -1174,7 +1090,7 @@ object Lineage {
     import spark.implicits._
     val dirs = readyBatchDirs(spark, root).filter(d =>
       batchNumber(d).exists(_ <= untilBatch))
-    val ds = dirs.map(d => decodeFromDir(spark, d))
+    val ds = dirs.map(d => spark.read.format("graft").load(d).as[SeqRow])
       .reduceOption(_ union _)
       .getOrElse(spark.emptyDataset[SeqRow])
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1206,16 +1122,6 @@ object Lineage {
       fs.delete(new Path(d), true)
     }
     victims.size.toLong
-  }
-
-  /** Containment-pruned tree decode (min/max zone map + TokenSketch per
-    * batch manifest). */
-  def decodeContainingTokenTree(spark: SparkSession, root: String,
-                                tok: Int): Dataset[SeqRow] = {
-    import spark.implicits._
-    treeDirs(spark, root).map(d => decodeContainingToken(spark, d, tok))
-      .reduceOption(_ union _)
-      .getOrElse(spark.emptyDataset[SeqRow])
   }
 
   /** Single-chunk fetch: seek to a manifest row's frame and unframe it.
@@ -1282,20 +1188,6 @@ object Lineage {
     * external readers that open chunks themselves. */
   def sharedDictBytes(spark: SparkSession, dir: String): Option[Array[Byte]] =
     loadSharedDict(spark, dir)
-
-  private def decodeManifest(spark: SparkSession, dir: String,
-                             manifest: Dataset[ManifestRow]): Dataset[SeqRow] = {
-    import spark.implicits._
-    val hconf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val dict = loadSharedDict(spark, dir) // a few KB, shipped in the closure
-    manifest.mapPartitions { ms =>
-      // models rebuilt once per task (bucket construction is the cost);
-      // inline-framed sections of mixed-era dirs decode through them too
-      val table = dict.map(MetaDict.fromBytes).orNull
-      ms.flatMap(m => ChunkBuilder.open(readChunk(hconf.value, dir, m), table))
-    }
-  }
 
   // ---- chunk record framing ---------------------------------------------------
   private[engine] def frameChunk(c: EncodedChunk): Array[Byte] = {

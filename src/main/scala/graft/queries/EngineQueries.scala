@@ -331,7 +331,10 @@ object EngineQueries {
     val cfg = EncoderConfig(chunkTokens = 1 << 17, numPartitions = 4)
     val first = Lineage.encodeToDir(ds, out, cfg)
     val resumed = Lineage.encodeToDir(ds, out, cfg) // must skip everything
-    val decoded = Lineage.decodeFromDir(s, out).count()
+    // toRdd.count pushes every payload through the columnar decode: a
+    // plain count() would ride the manifest-only aggregate and decode none
+    val decoded = s.read.format("graft").load(out)
+      .select("doc_id", "tokens").queryExecution.toRdd.count()
     val manifest = Lineage.readManifest(s, out)
     manifest.agg(sum("n_tokens").as("n_tokens"))
       .withColumn("partitions_first_run", lit(first))
@@ -466,42 +469,38 @@ object EngineQueries {
     Lineage.encodeToDir(ds.filter(col("n_tok") % 2 === 0).as[SeqRow],
       s"$base/b", cfg)
     // SPJ needs catalog tables: the bucket transform resolves through the
-    // table's FunctionCatalog; path-based relations have none
-    s.conf.set("spark.sql.catalog.graftspj",
+    // table's FunctionCatalog; path-based relations have none. The catalog
+    // and the plan confs live on a child session, so the caller's session
+    // conf is left exactly as it was
+    val q = s.newSession()
+    q.conf.set("spark.sql.catalog.graftspj",
       classOf[graft.spark.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftspj.root", s"$base/cat")
-    s.sql("CREATE NAMESPACE IF NOT EXISTS graftspj.q")
-    s.sql(s"CREATE TABLE IF NOT EXISTS graftspj.q.a USING graft LOCATION '$base/a'")
-    s.sql(s"CREATE TABLE IF NOT EXISTS graftspj.q.b USING graft LOCATION '$base/b'")
-    val keys = Seq("graft.read.spj", // SPJ is OPT-IN (caps scan parallelism at
-      // the bucket count in exchange for shuffle-free joins — the Iceberg
-      // preserve-data-grouping trade, and a join is exactly where it wins)
-      "spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "spark.sql.autoBroadcastJoinThreshold", // force a real SMJ, not broadcast
-      "spark.sql.adaptive.enabled") // stable executed-plan text for the pin
-    val old = keys.map(k => k -> s.conf.getOption(k))
-    keys.zip(Seq("true", "true", "true", "-1", "false"))
-      .foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      val q = s.sql(
-        """SELECT a.source, count(*) AS n_rows,
-          |  CAST(sum(a.n_tok) + sum(b.n_tok) AS BIGINT) AS n_tok2
-          |FROM graftspj.q.a a JOIN graftspj.q.b b ON a.doc_id = b.doc_id
-          |GROUP BY a.source""".stripMargin)
-      val plan = q.queryExecution.executedPlan.toString
-      val ex = plan.linesIterator.count(_.contains("Exchange"))
-      require(ex == 1,
-        s"storage-partitioned join regressed: expected ONLY the GROUP BY " +
-          s"exchange, found $ex:\n$plan")
-      // collected (few rows: one per source) so the conf restore below can't
-      // retroactively re-plan the result the driver writes out
-      val rows = q.collect().sortBy(_.getString(0)).toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), q.schema)
-    } finally old.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
+    q.conf.set("spark.sql.catalog.graftspj.root", s"$base/cat")
+    q.conf.set("graft.read.spj", "true") // SPJ is OPT-IN (caps scan
+    // parallelism at the bucket count in exchange for shuffle-free joins —
+    // the Iceberg preserve-data-grouping trade, and a join is exactly
+    // where it wins)
+    q.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    q.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
+    q.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // a real SMJ
+    q.conf.set("spark.sql.adaptive.enabled", "false") // stable plan text
+    q.sql("CREATE NAMESPACE IF NOT EXISTS graftspj.q")
+    q.sql(s"CREATE TABLE IF NOT EXISTS graftspj.q.a USING graft LOCATION '$base/a'")
+    q.sql(s"CREATE TABLE IF NOT EXISTS graftspj.q.b USING graft LOCATION '$base/b'")
+    val joined = q.sql(
+      """SELECT a.source, count(*) AS n_rows,
+        |  CAST(sum(a.n_tok) + sum(b.n_tok) AS BIGINT) AS n_tok2
+        |FROM graftspj.q.a a JOIN graftspj.q.b b ON a.doc_id = b.doc_id
+        |GROUP BY a.source""".stripMargin)
+    val plan = joined.queryExecution.executedPlan.toString
+    val ex = plan.linesIterator.count(_.contains("Exchange"))
+    require(ex == 1,
+      s"storage-partitioned join regressed: expected ONLY the GROUP BY " +
+        s"exchange, found $ex:\n$plan")
+    // collected (few rows: one per source) and handed back on the caller's
+    // session, which never sees the child session's catalog or confs
+    val rows = joined.collect().sortBy(_.getString(0)).toSeq
+    s.createDataFrame(s.sparkContext.parallelize(rows, 1), joined.schema)
   }
 
   val graftSpjSql: String =

@@ -6,7 +6,7 @@ import java.util.OptionalLong
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min, Sum}
@@ -544,8 +544,7 @@ class GraftScan(path: String, pushed: Array[Filter], required: StructType,
     new GraftReaderFactory(
       new SerializableConfiguration(
         SparkSession.active.sparkContext.hadoopConfiguration),
-      required,
-      SparkSession.active.conf.get("graft.read.columnar", "true").toBoolean)
+      required)
 }
 
 /** One scheduled task = MANY chunks (same dir, manifest-ordered so chunks
@@ -1347,8 +1346,7 @@ class GraftMicroBatchStream(root: String, pushed: Array[Filter],
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(
       new SerializableConfiguration(spark.sparkContext.hadoopConfiguration),
-      required,
-      spark.conf.get("graft.read.columnar", "true").toBoolean)
+      required)
 }
 
 // ---- write path ------------------------------------------------------------
@@ -1715,23 +1713,21 @@ private[spark] object MetaDictCache {
 }
 
 class GraftReaderFactory(conf: SerializableConfiguration,
-                         required: StructType,
-                         columnar: Boolean = true)
+                         required: StructType)
     extends PartitionReaderFactory {
   private def unwrap(p: InputPartition): GraftInputPartition = p match {
     case b: GraftBucketedInputPartition => b.p
     case g: GraftInputPartition => g
   }
+  // COLUMNAR is the only read path: emitting ColumnarBatch instead of one
+  // row object per row removes the per-row volcano overhead and lets Spark
+  // consume the scan through the same vectorized ColumnarToRow it uses for
+  // parquet — the zero-column projection (count(*)) included, as batches
+  // of row counts with no vectors, the way Spark's parquet reader serves it
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new GraftPartitionReader(conf.value, unwrap(p), required)
-  // COLUMNAR is the primary read path: emitting ColumnarBatch instead of
-  // one GenericInternalRow per row removes the per-row volcano overhead
-  // and lets Spark consume the scan through the same vectorized
-  // ColumnarToRow it uses for parquet. The row reader stays for the
-  // degenerate no-column projection and as the `graft.read.columnar=false`
-  // escape hatch.
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    columnar && required.fields.nonEmpty
+    throw new UnsupportedOperationException(
+      "graft scans are columnar: use createColumnarReader")
+  override def supportColumnarReads(p: InputPartition): Boolean = true
   override def createColumnarReader(
       p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new GraftColumnarReader(conf.value, unwrap(p), required)
@@ -1740,8 +1736,10 @@ class GraftReaderFactory(conf: SerializableConfiguration,
 /** Vectorized reader: consumes the chunk's COLUMNAR decode
   * (ChunkBuilder.openColumns — flat token array + row lens, no per-row
   * slices or SeqRows) and fills OnHeapColumnVectors with ONE bulk token
-  * copy per batch. Also prunes harder than the row path: a projection of
-  * `tokens` without `doc_id` skips the doc_id meta section entirely. */
+  * copy per batch. A payload-free projection reads only the chunk's meta
+  * section (readChunkMeta), and a projection without `doc_id` skips the
+  * doc_id meta section too; an empty projection fills no vector at all,
+  * only the batch's row count. */
 class GraftColumnarReader(conf: Configuration, p: GraftInputPartition,
                           required: StructType)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
@@ -1894,86 +1892,4 @@ class GraftColumnarReader(conf: Configuration, p: GraftInputPartition,
   }
   override def get(): ColumnarBatch = batch
   override def close(): Unit = batch.close()
-}
-
-class GraftPartitionReader(conf: Configuration, p: GraftInputPartition,
-                           required: StructType)
-    extends PartitionReader[InternalRow] {
-  // ordinal projection map computed ONCE — no per-row string matching on
-  // the innermost loop of the path this source advertises as fast
-  private val ordinals: Array[Int] = required.fieldNames.map {
-    case "doc_id" => 0
-    case "tokens" => 1
-    case "n_tok"  => 2
-    case "source" => 3
-    case other => GraftTable.MetaOrdinal.getOrElse(other,
-      throw new IllegalArgumentException(s"unknown graft column $other"))
-  }
-  private val needTokens = ordinals.contains(1)
-  private val needDocId = ordinals.contains(0)
-  private val dict = p.dict.map(MetaDictCache.get).orNull
-  private val samp = p.sample.orNull
-  // pushed TABLESAMPLE on the row path: same (chunk_id, row, seed)
-  // selection as the columnar reader — whole-chunk skips before I/O, then
-  // a per-row-index admit on whatever iterator the projection chose
-  private def admits[T](m: Lineage.ManifestRow, rows: Iterator[T])
-      : Iterator[T] =
-    if (samp == null) rows
-    else rows.zipWithIndex.collect {
-      case (r, idx) if samp.selected(m.chunk_id, idx) => r
-    }
-  private val it: Iterator[InternalRow] = p.rows.iterator.flatMap { m =>
-    if (samp != null && !samp.anySelected(m.chunk_id, m.n_rows))
-      Iterator.empty // no selected row: skipped without any read
-    else if (p.probes.nonEmpty)
-      // containment probes: EXACT row filter (pruning admitted this chunk
-      // as a MAYBE) — the payload must decode regardless of projection
-      admits(m, ChunkBuilder.open(Lineage.readChunk(conf, p.dir, m), dict))
-        .filter(r => p.probes.forall(r.tokens.contains))
-        .map(r => project(m, r.doc_id, r.tokens, r.n_tok, r.source))
-    else {
-      if (needTokens)
-        admits(m, ChunkBuilder.open(Lineage.readChunk(conf, p.dir, m), dict))
-          .map(r => project(m, r.doc_id, r.tokens, r.n_tok, r.source))
-      else {
-        // payload-free projection: readChunkMeta SEEKS past the payload —
-        // its bytes are neither decoded NOR transferred (two small range
-        // reads per chunk)
-        val chunk = Lineage.readChunkMeta(conf, p.dir, m)
-        if (needDocId)
-          admits(m, ChunkBuilder.openSide(chunk, dict))
-            .map { case (id, n, src) => project(m, id, null, n, src) }
-        else // neither payload NOR the doc_id section (the dominant cost)
-          admits(m, ChunkBuilder.openMeta(chunk))
-            .map { case (src, n) => project(m, null, null, n, src) }
-      }
-    }
-  }
-
-  private def project(m: Lineage.ManifestRow, id: String, toks: Array[Int],
-                      n: Int, src: String): InternalRow = {
-    val out = new GenericInternalRow(ordinals.length)
-    var i = 0
-    while (i < ordinals.length) {
-      ordinals(i) match {
-        case 0 => out.update(i, UTF8String.fromString(id))
-        case 1 => out.update(i, UnsafeArrayData.fromPrimitiveArray(toks))
-        case 2 => out.setInt(i, n)
-        case 3 => out.update(i, UTF8String.fromString(src))
-        // provenance metadata: per-chunk constants from the manifest row
-        // the reader is already holding — no extra I/O
-        case 4 => out.setInt(i, m.part_id)
-        case 5 => out.setLong(i, m.chunk_id)
-        case 6 => out.setInt(i, m.gen)
-      }
-      i += 1
-    }
-    out
-  }
-
-  private var cur: InternalRow = _
-  override def next(): Boolean =
-    if (it.hasNext) { cur = it.next(); true } else false
-  override def get(): InternalRow = cur
-  override def close(): Unit = ()
 }

@@ -39,39 +39,45 @@ object DriveBigRun {
       .as[(Long, Long, Long, Long)].first()
     println(f"BIG1 rows=$nRows chunks=$nChunks tokens=$nTokens raw=${rawBytes / 1e9}%.2fGB enc=${encBytes / 1e9}%.2fGB ratio=${encBytes.toDouble / rawBytes}%.4f encode=${tEnc}%.1fs (${nTokens / tEnc / 1e6}%.0fM tok/s incl. generation+disk)")
 
+    import org.apache.spark.sql.functions.{col, size, sum}
+    def g = spark.read.format("graft").load(dir)
     val t1 = System.nanoTime()
-    val decTokens = Lineage.decodeFromDir(spark, dir)
-      .map(_.n_tok.toLong).reduce(_ + _)
+    val decTokens = g.as[SeqRow].map(_.n_tok.toLong).reduce(_ + _)
     val tDec = (System.nanoTime() - t1) / 1e9
     println(f"BIG2 decode=${tDec}%.1fs (${decTokens / tDec / 1e6}%.0fM tok/s from disk) tokensMatch=${decTokens == nTokens}")
 
     // spot roundtrip: re-generate a slice deterministically and compare
     val lo = "doc-000002000000"; val hi = "doc-000002000499"
-    val slice = Lineage.decodeDocIdRange(spark, dir, lo, hi).collect()
-      .map(r => r.doc_id -> r).toMap
+    val slice = g.filter(col("doc_id") >= lo && col("doc_id") <= hi)
+      .as[SeqRow].collect().map(r => r.doc_id -> r).toMap
     val expect = (2000000L until 2000500L).map(i => Corpus.row(42L, i))
     val ok = expect.forall(e => slice.get(e.doc_id)
       .exists(d => d.tokens.sameElements(e.tokens) && d.source == e.source))
     println(s"BIG3 zonemap-slice rows=${slice.size}/500 bitIdentical=$ok")
 
     // round-3 index layers at scale: parquet-compact the manifest, then a
-    // rare-token containment probe — manifest pushdown + TokenSketch prune
+    // rare-token containment probe — zone + TokenSketch prune at planning,
+    // counted as planned chunks (one chunk per task)
     val t2 = System.nanoTime()
     val compacted = Lineage.compactManifest(spark, dir)
     val tCmp = (System.nanoTime() - t2) / 1e9
     val probe = Corpus.V - 1 // boundary-archetype token: present in ~5% of rows
+    def plannedFor(tok: Int): Int = {
+      spark.conf.set("graft.read.maxPartitionBytes", "1")
+      try spark.read.format("graft").option("containsToken", tok.toString)
+        .load(dir).rdd.getNumPartitions
+      finally spark.conf.unset("graft.read.maxPartitionBytes")
+    }
     val t3 = System.nanoTime()
-    val mTok = Lineage.manifestForToken(spark, dir, probe).count()
+    val mTok = plannedFor(probe)
     val tPrune = (System.nanoTime() - t3) / 1e9
     val oov = Corpus.V + 123
-    val mOov = Lineage.manifestForToken(spark, dir, oov).count()
-    println(f"BIG4 compact=$compacted%d parts in $tCmp%.1fs; sketch probe tok=$probe -> $mTok/$nChunks chunks (manifest-only, $tPrune%.1fs); oov probe -> $mOov chunks")
+    val mOov = plannedFor(oov)
+    println(f"BIG4 compact=$compacted%d parts in $tCmp%.1fs; sketch probe tok=$probe -> $mTok/$nChunks chunks (planning only, $tPrune%.1fs); oov probe -> $mOov chunks")
 
     // round-5: the DSv2 source at the same scale point — planning cost over
     // thousands of chunks broken out from read cost, plus each read shape
-    import org.apache.spark.sql.functions.{col, size, sum}
     val t4 = System.nanoTime()
-    val g = spark.read.format("graft").load(dir)
     val planned = g.rdd.getNumPartitions // forces the manifest plan+collect
     val tPlan = (System.nanoTime() - t4) / 1e9
     val t5 = System.nanoTime()

@@ -10,7 +10,7 @@ import graft.io.Corpus
   * getBytes(UTF_8) back to bytes for putByteArray). Both variants run in
   * the same JVM over the same decoded chunks, interleaved, so host-window
   * drift cannot masquerade as a code difference — the weakness of
-  * comparing two separate DriveColumnarAB sessions.
+  * comparing two separate read sessions.
   *
   * Run: sbt "Test/runMain graft.DriveDocIdBench [nRows]"
   */

@@ -36,7 +36,8 @@ object DriveEngine {
     val first = Lineage.encodeToDir(ds, dir, cfg)
     java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "_lineage", "part-00003.json"))
     val resumed = Lineage.encodeToDir(ds, dir, cfg)
-    val rows = Lineage.decodeFromDir(spark, dir).count()
+    val rows = spark.read.format("graft").load(dir)
+      .select("doc_id", "tokens").queryExecution.toRdd.count()
     println(s"DRIVE5 lineage first=$first resumed=$resumed decodedRows=$rows")
     spark.stop()
   }

@@ -31,11 +31,12 @@ class BatchTreeSpec extends AnyFunSuite {
     // marker-aware tree: batch reads see READY batches only (an in-flight
     // half-written batch is invisible)...
     assert(spark.read.format("graft").load(root).count() == 20L)
-    // ...while the at-rest decode API keeps the full view
-    assert(Lineage.decodeBatchTree(spark, root).count() == 30L)
+    // ...while the in-flight batch itself stays readable as a plain dir
+    assert(spark.read.format("graft").load(s"$root/batch=100").count() == 10L)
   }
 
   test("batch tree decodes as one dataset; pruned variants compose") {
+    import org.apache.spark.sql.functions.{array_contains, col}
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-tree").toString
     val cfg = EncoderConfig(chunkTokens = 1 << 10, numPartitions = 2)
@@ -50,34 +51,30 @@ class BatchTreeSpec extends AnyFunSuite {
     }
     assert(Lineage.batchDirs(spark, root).size == 3)
     // whole-tree decode = union of the batches, bit-identical
-    val back = Lineage.decodeBatchTree(spark, root).collect()
-      .map(r => r.doc_id -> r).toMap
+    def tree = spark.read.format("graft").load(root).as[SeqRow]
+    val back = tree.collect().map(r => r.doc_id -> r).toMap
     assert(back.size == all.size)
     all.foreach(r => assert(back(r.doc_id).tokens.sameElements(r.tokens)))
     // containment probe: token band 1 lives only in batch 1
     val probe = 100000 + 42
-    val hit = Lineage.decodeContainingTokenTree(spark, root, probe).collect()
+    val hit = tree.filter(array_contains(col("tokens"), probe)).collect()
     // rows 42 (first token) and 35 (second token, 100035+7) both hold it
     assert(hit.map(_.doc_id).sorted.toSeq ==
       Seq("doc-01-00000035", "doc-01-00000042"))
     // doc_id range across the tree
-    val ranged = Lineage.decodeDocIdRangeTree(spark, root,
-      "doc-02-00000010", "doc-02-00000014").collect()
+    val ranged = tree.filter(col("doc_id") >= "doc-02-00000010" &&
+      col("doc_id") <= "doc-02-00000014").collect()
     assert(ranged.map(_.doc_id).sorted.toSeq ==
       (10 to 14).map(i => f"doc-02-$i%08d"))
-    // misuse is LOUD: a missing root or a plain lineage dir (decodeFromDir
-    // territory) must error, not read as an empty tree
+    // a missing root is LOUD, not an empty tree
     intercept[IllegalArgumentException] {
-      Lineage.decodeBatchTree(spark, s"$root/nope")
-    }
-    intercept[IllegalArgumentException] {
-      Lineage.decodeBatchTree(spark, s"$root/batch=00000")
+      spark.read.format("graft").load(s"$root/nope").count()
     }
     // tree-wide manifest compaction: all 3x2 partitions, decode unchanged
     assert(Lineage.compactBatchTree(spark, root) == 6L)
-    assert(Lineage.decodeBatchTree(spark, root).count() == all.size.toLong)
-    // the DSv2 source auto-detects tree roots: one load over all batches,
-    // zone-map pruning still per batch manifest
+    assert(tree.select("doc_id", "tokens").queryExecution.toRdd.count() ==
+      all.size.toLong)
+    // one load over all batches, zone-map pruning still per batch manifest
     val df = spark.read.format("graft").load(root)
     assert(df.count() == all.size.toLong)
     val one = df.filter(org.apache.spark.sql.functions.col("doc_id") ===

@@ -121,7 +121,7 @@ class ChunkBuilderFuzzSpec extends AnyFunSuite with GenChecks {
     val dir = java.nio.file.Files.createTempDirectory("graft-fuzz").toString
     Lineage.encodeToDir(spark.createDataset(rows), dir,
       EncoderConfig(numPartitions = 1))
-    val back = Lineage.decodeFromDir(spark, dir).collect()
+    val back = spark.read.format("graft").load(dir).as[SeqRow].collect()
       .map(r => r.doc_id -> r).toMap
     assert(back.size == rows.length)
     rows.foreach { o =>

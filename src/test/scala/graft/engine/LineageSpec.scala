@@ -11,7 +11,20 @@ class LineageSpec extends AnyFunSuite {
   private def tmpDir(): String =
     Files.createTempDirectory("graft-lineage").toString
 
-  test("encodeToDir writes data + manifest; decodeFromDir roundtrips") {
+  /** A lineage dir read back through the DSv2 source, as rows. */
+  private def read(dir: String) = {
+    import spark.implicits._
+    spark.read.format("graft").load(dir).as[SeqRow]
+  }
+
+  /** Chunks the DSv2 scan plans for `df` (one chunk per task). */
+  private def plannedChunks(df: org.apache.spark.sql.DataFrame): Int = {
+    spark.conf.set("graft.read.maxPartitionBytes", "1")
+    try df.rdd.getNumPartitions
+    finally spark.conf.unset("graft.read.maxPartitionBytes")
+  }
+
+  test("encodeToDir writes data + manifest; the graft source roundtrips") {
     val dir = tmpDir()
     val ds = Corpus.table(spark, 400, partitions = 4)
     val encoded = Lineage.encodeToDir(ds, dir,
@@ -21,7 +34,7 @@ class LineageSpec extends AnyFunSuite {
     assert(manifest.nonEmpty)
     assert(manifest.map(_.part_id).toSet == Set(0, 1, 2, 3))
     assert(manifest.forall(m => m.length > 0 && m.enc_bytes > 0))
-    val decoded = Lineage.decodeFromDir(spark, dir).collect()
+    val decoded = read(dir).collect()
       .map(r => r.doc_id -> r).toMap
     val original = ds.collect().map(r => r.doc_id -> r).toMap
     assert(decoded.keySet == original.keySet)
@@ -57,29 +70,32 @@ class LineageSpec extends AnyFunSuite {
     Files.delete(Paths.get(dir, "_lineage", "part-00001.json"))
     Files.delete(Paths.get(dir, "data", "part-00001.graft"))
     assert(Lineage.encodeToDir(ds, dir, cfg) == 1L) // only the missing one
-    val decoded = Lineage.decodeFromDir(spark, dir).collect()
+    val decoded = read(dir).collect()
     assert(decoded.length == 300)
   }
 
   test("zone-map pruned decode reads only overlapping chunks") {
+    import org.apache.spark.sql.functions.col
     val dir = tmpDir()
     val ds = Corpus.table(spark, 500, partitions = 4)
     Lineage.encodeToDir(ds, dir, EncoderConfig(chunkTokens = 4096,
       numPartitions = 4))
     val lo = "doc-000000000100"; val hi = "doc-000000000140"
-    val got = Lineage.decodeDocIdRange(spark, dir, lo, hi).collect()
+    val range = col("doc_id") >= lo && col("doc_id") <= hi
+    val got = read(dir).filter(range).collect()
     assert(got.length == 41, s"got ${got.length}")
     assert(got.forall(r => r.doc_id >= lo && r.doc_id <= hi))
-    // pruning effectiveness: the overlapping chunk set is a strict subset
+    // pruning effectiveness: the planned chunks are exactly the ones whose
+    // zone overlaps the range, a strict subset
     val all = Lineage.readManifest(spark, dir).count()
     val touched = Lineage.readManifest(spark, dir)
-      .filter(org.apache.spark.sql.functions.col("max_doc_id") >= lo &&
-        org.apache.spark.sql.functions.col("min_doc_id") <= hi).count()
+      .filter(col("max_doc_id") >= lo && col("min_doc_id") <= hi).count()
     assert(touched < all, s"no pruning: $touched of $all")
+    assert(plannedChunks(read(dir).filter(range).toDF()) == touched)
   }
 
   test("token-value zone map prunes content-predicate decode") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{array_contains, col}
     val dir = tmpDir()
     val ds = Corpus.table(spark, 500, partitions = 4)
     Lineage.encodeToDir(ds, dir, EncoderConfig(chunkTokens = 4096,
@@ -87,19 +103,20 @@ class LineageSpec extends AnyFunSuite {
     // vocabulary-edge token (the `boundary` archetype emits V-1): present in
     // few rows, so both the chunk pruning and the row filter must fire
     val tok = graft.io.Corpus.V - 1
-    val got = Lineage.decodeContainingToken(spark, dir, tok).collect()
+    val got = read(dir).filter(array_contains(col("tokens"), tok)).collect()
     val expect = ds.collect().filter(_.tokens.contains(tok)).map(_.doc_id).toSet
     assert(got.map(_.doc_id).toSet == expect && expect.nonEmpty)
     // out-of-vocabulary probe decodes ZERO chunks (manifest-only answer)
     val oov = graft.io.Corpus.V + 7
-    assert(Lineage.decodeContainingToken(spark, dir, oov).count() == 0L)
+    val oovRead = read(dir).filter(array_contains(col("tokens"), oov))
+    assert(plannedChunks(oovRead.toDF()) == 0 && oovRead.count() == 0L)
     assert(Lineage.readManifest(spark, dir)
       .filter(col("min_tok") <= oov && col("max_tok") >= oov).count() == 0L)
   }
 
   test("containment sketch prunes in-vocab rare-token probes on a zipf " +
       "corpus where min/max alone decodes nearly everything") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{array_contains, col}
     import spark.implicits._
     val dir = tmpDir()
     // pure zipf(s=1.1) rows over the vocab (same inverse-CDF as the corpus
@@ -134,12 +151,13 @@ class LineageSpec extends AnyFunSuite {
     val all = Lineage.readManifest(spark, dir).count()
     val minmaxPass = Lineage.readManifest(spark, dir)
       .filter(col("min_tok") <= tok && col("max_tok") >= tok).count()
-    val sketchPass = Lineage.manifestForToken(spark, dir, tok).count()
+    val probed = read(dir).filter(array_contains(col("tokens"), tok))
+    val sketchPass = plannedChunks(probed.toDF()).toLong
     // min/max is blind here; the sketch (exact bitmap at vocab-sized
     // ranges) prunes to the single chunk that actually holds the token
     assert(minmaxPass >= all / 2, s"min/max passed $minmaxPass of $all")
     assert(sketchPass == 1L, s"sketch passed $sketchPass chunks (want 1)")
-    val got = Lineage.decodeContainingToken(spark, dir, tok).collect()
+    val got = probed.collect()
     val expect = rows.filter(_.tokens.contains(tok)).map(_.doc_id).toSet
     assert(got.map(_.doc_id).toSet == expect && expect.size == 1)
     info(s"probe tok=$tok: $all chunks, min/max passes $minmaxPass, " +
@@ -153,7 +171,7 @@ class LineageSpec extends AnyFunSuite {
     val ds = Corpus.table(spark, 300, partitions = 3)
     val cfg = EncoderConfig(chunkTokens = 8192, numPartitions = 3)
     assert(Lineage.encodeToDir(ds, dir, cfg) == 3L)
-    val viaJson = Lineage.decodeFromDir(spark, dir).collect()
+    val viaJson = read(dir).collect()
       .map(r => r.doc_id -> r.tokens.toSeq).toMap
     assert(Lineage.compactManifest(spark, dir) == 3L)
     // reads now come from parquet, with zone-map predicates PUSHED into the
@@ -167,7 +185,7 @@ class LineageSpec extends AnyFunSuite {
     assert(planned.contains("PushedFilters") && planned.contains("min_tok"),
       s"zone-map filters not pushed:\n$planned")
     // decode through the parquet manifest is bit-identical
-    val viaParquet = Lineage.decodeFromDir(spark, dir).collect()
+    val viaParquet = read(dir).collect()
       .map(r => r.doc_id -> r.tokens.toSeq).toMap
     assert(viaParquet == viaJson)
     // resume still keys off the per-partition JSON commit protocol
@@ -183,6 +201,7 @@ class LineageSpec extends AnyFunSuite {
 
   test("doc_id range decode agrees with UTF-8 binary order for " +
       "supplementary-plane ids (pruning and row filter use ONE order)") {
+    import org.apache.spark.sql.functions.col
     import spark.implicits._
     val dir = tmpDir()
     // UTF-16 code-unit order: emoji(U+1F600, surrogates D83D..) < U+E000;
@@ -200,11 +219,12 @@ class LineageSpec extends AnyFunSuite {
     Lineage.encodeToDir(spark.createDataset(rows), dir,
       EncoderConfig(chunkTokens = 64, maxRowsPerChunk = 4, numPartitions = 1))
     assert(Lineage.readManifest(spark, dir).count() == 1L, "need ONE chunk")
-    val gotEmoji = Lineage.decodeDocIdRange(spark, dir, emojiId, emojiId)
-      .collect().map(_.doc_id).toSet
+    def idRange(lo: String, hi: String): Set[String] =
+      read(dir).filter(col("doc_id") >= lo && col("doc_id") <= hi)
+        .collect().map(_.doc_id).toSet
+    val gotEmoji = idRange(emojiId, emojiId)
     assert(gotEmoji == Set(emojiId), s"emoji row lost to pruning: $gotEmoji")
-    val gotBmp = Lineage.decodeDocIdRange(spark, dir, bmpId, bmpId)
-      .collect().map(_.doc_id).toSet
+    val gotBmp = idRange(bmpId, bmpId)
     assert(gotBmp == Set(bmpId), s"got $gotBmp")
   }
 
@@ -229,7 +249,7 @@ class LineageSpec extends AnyFunSuite {
     // died between data-rename and manifest-commit: data exists, manifest not
     Files.delete(Paths.get(dir, "_lineage", "part-00001.json"))
     assert(Lineage.encodeToDir(ds, dir, cfg) == 1L)
-    val decoded = Lineage.decodeFromDir(spark, dir).collect()
+    val decoded = read(dir).collect()
     assert(decoded.length == 300)
     assert(decoded.map(_.doc_id).distinct.length == 300)
   }

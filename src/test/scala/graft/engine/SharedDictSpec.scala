@@ -23,7 +23,7 @@ class SharedDictSpec extends AnyFunSuite {
     assert(new java.io.File(s"$dir/_lineage/_shared_dict.bin").exists(),
       "shared dict not published")
     // bit-identical roundtrip through the shared-coded sections
-    val back = Lineage.decodeFromDir(spark, dir).collect()
+    val back = spark.read.format("graft").load(dir).as[SeqRow].collect()
       .map(r => r.doc_id -> r).toMap
     assert(back.size == rows.size)
     rows.foreach { r =>

@@ -6,7 +6,7 @@ import graft.GenChecks
 
 /** TokenSketch invariants. The one that matters for correctness is NO FALSE
   * NEGATIVES: a sketch that denies a token the chunk actually holds would
-  * silently drop rows from decodeContainingToken. False positives only cost
+  * silently drop rows from a containment-probed scan. False positives only cost
   * a wasted decode; selectivity is asserted statistically for both modes. */
 class TokenSketchSpec extends AnyFunSuite with GenChecks {
 
@@ -132,38 +132,9 @@ class TokenSketchSpec extends AnyFunSuite with GenChecks {
     toks.foreach(t => assert(TokenSketch.mightContain(garbled, toks.min, t)))
   }
 
-  test("chunk-TABLE containment decode: pushdown predicates + sketch prune") {
-    val spark = graft.SparkTestSession.spark
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val rows = (0 until 400).map { i =>
-      // disjoint per-slice token bands: value bands map to chunk subsets
-      val base = (i / 100) * 1000
-      SeqRow(f"doc-$i%012d", Array(base + i % 100, base + 500), 2, "s")
-    }
-    val chunks = Encoder.encodeTable(spark.createDataset(rows),
-      EncoderConfig(chunkTokens = 64, numPartitions = 4))
-    val path = java.nio.file.Files.createTempDirectory("graft-ctab").toString + "/chunks"
-    graft.io.ParquetTableIO.writeChunks(chunks, path)
-    val table = graft.io.ParquetTableIO.readChunks(spark, path)
-    val probe = 2042 // band 2 only
-    val got = Decoder.decodeContainingToken(table, probe).collect()
-    val expect = rows.filter(_.tokens.contains(probe)).map(_.doc_id).toSet
-    assert(got.map(_.doc_id).toSet == expect && expect.nonEmpty)
-    // doc_id-range twin over the same chunk table
-    val ranged = Decoder.decodeDocIdRange(table,
-      "doc-000000000050", "doc-000000000059").collect()
-    assert(ranged.map(_.doc_id).toSet ==
-      (50 until 60).map(i => f"doc-$i%012d").toSet)
-    // zone-map predicates reach the parquet scan
-    val plan = table.filter(col("min_tok") <= probe && col("max_tok") >= probe)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("min_tok"),
-      s"chunk-table zone predicates not pushed:\n$plan")
-  }
-
   test("sketch roundtrips through the manifest JSON and the chunk frame") {
     val spark = graft.SparkTestSession.spark
+    import org.apache.spark.sql.functions.{array_contains, col}
     val rows = (0 until 50).map(i =>
       SeqRow(f"doc-$i%012d", Array(i * 3, i * 3 + 1, 40000 + i), 3, "s"))
     import spark.implicits._
@@ -172,12 +143,16 @@ class TokenSketchSpec extends AnyFunSuite with GenChecks {
       EncoderConfig(chunkTokens = 64, numPartitions = 2))
     val m = Lineage.readManifest(spark, dir).collect()
     assert(m.forall(_.tok_set.nonEmpty))
-    // a token in exactly one row: sketch-pruned manifest finds its chunk(s),
-    // decode returns exactly that row
+    // a token in exactly one row: the sketch-pruned scan plans its
+    // chunk(s) only (one chunk per task), decode returns exactly that row
     val probe = 40000 + 17
-    val got = Lineage.decodeContainingToken(spark, dir, probe).collect()
-    assert(got.map(_.doc_id).toSeq == Seq(f"doc-${17}%012d"))
-    val pruned = Lineage.manifestForToken(spark, dir, probe).count()
-    assert(pruned >= 1L && pruned < m.length.toLong)
+    val probed = spark.read.format("graft").load(dir)
+      .filter(array_contains(col("tokens"), probe))
+    val got = probed.select("doc_id").collect().map(_.getString(0))
+    assert(got.toSeq == Seq(f"doc-${17}%012d"))
+    spark.conf.set("graft.read.maxPartitionBytes", "1")
+    val pruned = try probed.rdd.getNumPartitions
+      finally spark.conf.unset("graft.read.maxPartitionBytes")
+    assert(pruned >= 1 && pruned < m.length)
   }
 }

@@ -232,27 +232,6 @@ class GraftPushdownSpec extends AnyFunSuite {
     spark.conf.unset("graft.read.maxPartitionBytes")
   }
 
-  test("row reader (graft.read.columnar=false) agrees on every read shape") {
-    spark.conf.set("graft.read.columnar", "false")
-    try {
-      val df = spark.read.format("graft").load(dir)
-      assert(df.count() == 1500L)
-      // full decode, meta-only rollup, and the multi-probe filter all run
-      // the row path here — identical answers to the columnar default
-      assert(df.select("tokens").collect().map(_.getSeq[Int](0).sum).sum ==
-        rows.map(_.tokens.sum.toLong).sum)
-      assert(df.groupBy("source").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap ==
-        Map("books" -> 300L, "web" -> 1200L))
-      val p1 = rows(1200).tokens(0); val p2 = rows(1200).tokens(5)
-      val probed = spark.read.format("graft")
-        .option("containsToken", s"$p1,$p2").load(dir)
-        .select("doc_id").collect().map(_.getString(0)).toSet
-      assert(probed == rows.filter(r =>
-        r.tokens.contains(p1) && r.tokens.contains(p2)).map(_.doc_id).toSet)
-    } finally spark.conf.unset("graft.read.columnar")
-  }
-
   test("In(doc_id, ...) pushes down: only zone-admitted chunks planned") {
     spark.conf.set("graft.read.maxPartitionBytes", "1") // chunk-per-task
     try {

@@ -46,7 +46,8 @@ class GraftReplaceIntentSpec extends AnyFunSuite {
 
   private def tableRows(dir: String): Set[String] = {
     import spark.implicits._
-    Lineage.decodeFromDir(spark, dir).map(_.doc_id).collect().toSet
+    spark.read.format("graft").load(dir).as[SeqRow].map(_.doc_id).collect()
+      .toSet
   }
 
   test("roll forward: adds complete, crash before retirement -> recovery " +
@@ -80,7 +81,8 @@ class GraftReplaceIntentSpec extends AnyFunSuite {
     // what catches surviving duplicates, the set compare alone would not
     val after = tableRows(dir)
     assert(after == all)
-    assert(Lineage.decodeFromDir(spark, dir).count() == all.size.toLong,
+    assert(spark.read.format("graft").load(dir).select("doc_id")
+      .queryExecution.toRdd.count() == all.size.toLong,
       "row count must match — duplicates would survive a missed retirement")
     val m1After = Lineage.readManifest(spark, dir).collect()
       .filter(_.part_id == 1)
@@ -105,6 +107,29 @@ class GraftReplaceIntentSpec extends AnyFunSuite {
       "roll back must restore the pre-DML content")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
       s"$dir/_lineage/_replace_intent.json")))
+  }
+
+  test("roll back: a fresh pid whose data landed without its manifest " +
+      "-> recovery deletes the data file and vacuum finds nothing left") {
+    val dir = mk("back-data", 300, 3)
+    val fs = fsFor(dir)
+    val before = tableRows(dir)
+    // the dead commit planned fresh pids 3 and 4: pid 3's data file was
+    // renamed into place, then the process died before its manifest rename
+    val rows = Seq(SeqRow("zzz-data-only", Array(4, 5), 2, "web"))
+    val stager = new Lineage.GroupStager(fs, dir, 3, "test-attempt")
+    stager.add(ChunkBuilder.build(3, 0, rows.map(_.doc_id).toArray,
+      rows.map(_.source).toArray, rows.flatMap(_.tokens).toArray,
+      rows.map(_.n_tok).toArray))
+    val (staged, _) = stager.finish().get
+    val data = new org.apache.hadoop.fs.Path(s"$dir/data/part-00003.graft")
+    assert(fs.rename(new org.apache.hadoop.fs.Path(staged), data))
+    Lineage.writeReplaceIntent(fs, dir, Seq(3, 4), Seq(0, 1))
+    assert(Lineage.recoverReplaceIntent(fs, dir))
+    assert(!fs.exists(data), "rolled-back fresh data file leaked")
+    assert(tableRows(dir) == before)
+    assert(Lineage.vacuum(spark.sparkContext.hadoopConfiguration, dir) ==
+      Lineage.VacuumStats(0, 0, 0))
   }
 
   test("vacuum resolves a pending intent before sweeping") {

@@ -35,16 +35,17 @@ class GraftSampleSpec extends AnyFunSuite {
 
     val base = sampled.select(col("doc_id")).as[String].collect().sorted.toSeq
     assert(base.size > 380 && base.size < 620, s"${base.size}") // ~N(500, 21)
-    // identical at one-chunk-per-task granularity and on the row path
-    for ((k, v) <- Seq("graft.read.maxPartitionBytes" -> "1",
-                       "graft.read.columnar" -> "false")) {
-      spark.conf.set(k, v)
-      try {
-        val again = sampled.select(col("doc_id")).as[String]
-          .collect().sorted.toSeq
-        assert(again == base, s"$k=$v diverged")
-      } finally spark.conf.unset(k)
-    }
+    // identical at one-chunk-per-task granularity...
+    spark.conf.set("graft.read.maxPartitionBytes", "1")
+    try {
+      val again = sampled.select(col("doc_id")).as[String]
+        .collect().sorted.toSeq
+      assert(again == base, "graft.read.maxPartitionBytes=1 diverged")
+    } finally spark.conf.unset("graft.read.maxPartitionBytes")
+    // ...and when the payload is read too (full chunk, not meta only)
+    val withTokens = sampled.select(col("doc_id"), col("tokens"))
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(withTokens == base, "payload read diverged")
     // subset of the table, and a different seed gives a different sample
     val all = spark.read.format("graft").load(dir)
       .select(col("doc_id")).as[String].collect().toSet

@@ -81,7 +81,7 @@ class GraftSourceSpec extends AnyFunSuite {
       .repartition(3, col("doc_id")) // deterministic membership (resume-sound)
     df.write.format("graft").mode("append")
       .option("chunkTokens", "2048").save(out)
-    val got = graft.engine.Lineage.decodeFromDir(spark, out).collect()
+    val got = spark.read.format("graft").load(out).as[SeqRow].collect()
       .map(r => r.doc_id -> r).toMap
     assert(got.size == rows.size)
     rows.foreach(r => assert(got(r.doc_id).tokens.sameElements(r.tokens)))

@@ -92,7 +92,7 @@ class GraftStreamWriteSpec extends AnyFunSuite {
     val ids = r2.select("doc_id").collect().map(_.getString(0)).toSet
     assert(ids == (rowsOf(0) ++ rowsOf(1)).map(_.doc_id).toSet)
     // rows roundtrip bit-identically through the streamed tree
-    val back = Lineage.decodeBatchTree(spark, out).collect()
+    val back = spark.read.format("graft").load(out).as[SeqRow].collect()
       .map(r => r.doc_id -> r).toMap
     (rowsOf(0) ++ rowsOf(1)).foreach(r =>
       assert(back(r.doc_id).tokens.sameElements(r.tokens)))

@@ -31,7 +31,7 @@ class StreamingSpec extends AnyFunSuite {
     val batchDirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
     assert(batchDirs.nonEmpty)
     val decoded = batchDirs.flatMap(d =>
-      Lineage.decodeFromDir(spark, d.toString).collect())
+      spark.read.format("graft").load(d.toString).as[SeqRow].collect())
       .map(r => r.doc_id -> r).toMap
     assert(decoded.size == 300)
     rows.foreach { r =>
