@@ -625,10 +625,17 @@ object Fsst {
       throw CorruptException("fsst crc mismatch")
     val r = new Varint.Reader(bytes, 3, end)
     val mode = bytes(2)
-    val rawLen = r.read().toInt
+    // bound-check in Long BEFORE the narrowing (as decodeShared does): a
+    // varint >= 2^31 would otherwise narrow to a negative or wrapped Int and
+    // surface as an untyped copyOfRange / array-size error. CRC32 is no
+    // defence — a hostile frame recomputes it
+    val rawLenL = r.read()
+    if (rawLenL < 0L || rawLenL > Int.MaxValue)
+      throw CorruptException("fsst raw length")
+    val rawLen = rawLenL.toInt
     mode match {
       case 0 =>
-        if (r.pos + rawLen > end) throw TruncatedException
+        if (r.pos.toLong + rawLen > end) throw TruncatedException
         java.util.Arrays.copyOfRange(bytes, r.pos, r.pos + rawLen)
       case 4 =>
         val out = Huffman.decode(bytes, r.pos, end)

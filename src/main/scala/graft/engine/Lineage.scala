@@ -310,14 +310,10 @@ object Lineage {
     if (!fs.exists(p)) None else Some(readAll(fs, p))
   }
 
-  /** Read the manifest (all partitions) as a Dataset. Prefers the compacted
-    * PARQUET manifest when present and current: at 100 TB the manifest is
-    * millions of rows and wants predicate pushdown on its zone-map columns
-    * (a pruned decode then reads manifest row groups, not every JSON line).
-    * The per-partition JSON files remain the commit protocol — the parquet
-    * copy is a read-optimization that is consulted only when its recorded
-    * partition count matches the current lineage listing (a partition
-    * committed after compaction makes it stale -> fall back to JSON). */
+  /** Read the manifest (all partitions) as a distributed Dataset — the
+    * planning path for dirs past the local gate. The per-partition JSON
+    * files are the commit protocol and the only manifest format: a
+    * parquet copy compacted by an older engine is never read. */
   def readManifest(spark: SparkSession, dir: String): Dataset[ManifestRow] = {
     import spark.implicits._
     val fs = FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
@@ -325,33 +321,7 @@ object Lineage {
     // a just-initialized table (catalog CREATE before first INSERT) has a
     // _lineage dir and zero manifest partitions; textFile() with an empty
     // path list would throw, so short-circuit the empty manifest
-    if (files.isEmpty) return spark.emptyDataset[ManifestRow]
-    val markerFile = new Path(s"$dir/_manifest_parquet.count")
-    val pq = s"$dir/_manifest_parquet"
-    // ANY problem with the marker (absent, mid-write, garbled, count or
-    // listing-fingerprint mismatch) falls back to the live JSON commit log
-    val current = try {
-      fs.exists(markerFile) && fs.exists(new Path(s"$pq/_SUCCESS")) && {
-        val in = fs.open(markerFile)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-        txt == listingMarker(files)
-      }
-    } catch { case _: Exception => false }
-    if (current) {
-      // a parquet manifest compacted by a pre-src_stats engine lacks the
-      // column; surface it as the empty "no stats" blob instead of failing
-      // the typed cast (same back-compat contract as the JSON path)
-      val df = spark.read.parquet(pq)
-      var compat =
-        if (df.columns.contains("src_stats")) df
-        else df.withColumn("src_stats",
-          org.apache.spark.sql.functions.lit(Array.emptyByteArray))
-      // pre-gen compactions: everything it covered lives at generation 0
-      if (!compat.columns.contains("gen"))
-        compat = compat.withColumn("gen", org.apache.spark.sql.functions.lit(0))
-      compat.as[ManifestRow]
-    }
+    if (files.isEmpty) spark.emptyDataset[ManifestRow]
     else spark.read.textFile(files.map(_.getPath.toString).toIndexedSeq: _*)
       .map(parseManifestLine _)
   }
@@ -388,18 +358,19 @@ object Lineage {
     val files = manifestFiles(fs, dir)
     val marker = listingMarker(files)
     if (files.iterator.map(_.getLen).sum > maxBytes) (marker, None)
-    else {
-      val rows = files.sortBy(_.getPath.getName).flatMap { f =>
-        val in = fs.open(f.getPath)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .filter(_.nonEmpty).map(parseManifestLine).toArray
-        finally in.close()
-      }
-      (marker, Some(rows))
-    }
+    else (marker, Some(files.sortBy(_.getPath.getName)
+      .flatMap(f => readManifestFile(fs, f.getPath))))
   }
 
-  /** Currency token for the parquet manifest: partition count plus an FNV
+  /** The rows of ONE manifest file (one JSON line per chunk). */
+  private def readManifestFile(fs: FileSystem, p: Path): Array[ManifestRow] = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .filter(_.nonEmpty).map(parseManifestLine).toArray
+    finally in.close()
+  }
+
+  /** Currency token for the planning cache: partition count plus an FNV
     * fingerprint of the sorted (name, byteLen) listing — a same-count
     * re-encode (delete + re-run with another chunking) changes file sizes
     * and is detected, not silently served stale. */
@@ -484,10 +455,10 @@ object Lineage {
     * assumption resume makes). Partition residues are preserved (rows are
     * only removed, never moved), so a `_graft_buckets` SPJ marker stays
     * valid; the manifest LISTING fingerprint changes with the new file
-    * names, so the driver manifest cache and parquet-compacted manifest
-    * invalidate themselves. At scale the cost is proportional to the data
-    * that actually changes: untouched partitions are never opened, dropped
-    * chunks never read, and only boundary chunks pay a decode+encode.
+    * names, so the driver manifest cache invalidates itself. At scale the
+    * cost is proportional to the data that actually changes: untouched
+    * partitions are never opened, dropped chunks never read, and only
+    * boundary chunks pay a decode+encode.
     *
     * Reference analog: pyppmd has no in-place mutation either — "removal"
     * is re-encoding the stream without the removed spans, which is exactly
@@ -534,12 +505,7 @@ object Lineage {
                                dictBytes: Option[Array[Byte]]): DeleteStats = {
     val fs = FileSystem.get(new java.net.URI(dir), conf)
     val oldManifest = new Path(s"$dir/_lineage/$manifestName")
-    val rows: Array[ManifestRow] = {
-      val in = fs.open(oldManifest)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).map(parseManifestLine).toArray
-      finally in.close()
-    }
+    val rows = readManifestFile(fs, oldManifest)
     val classes = rows.map(classify)
     val none = DeleteStats(0, 0, 0, 0, 0)
     // fully-Keep partition: provably holds no matching row — untouched
@@ -937,32 +903,6 @@ object Lineage {
     VacuumStats(inprog, superseded, orphans)
   }
 
-  /** Rewrite the committed manifest as parquet (plus a currency marker).
-    * Run after a (batch of) encodeToDir calls; idempotent. Returns the
-    * number of lineage partitions covered. A marker in any older/foreign
-    * format simply reads as stale (JSON fallback, always correct) —
-    * re-running compactManifest refreshes it. */
-  def compactManifest(spark: SparkSession, dir: String): Long = {
-    import spark.implicits._
-    val fs = FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val files = manifestFiles(fs, dir)
-    spark.read.textFile(files.map(_.getPath.toString).toIndexedSeq: _*)
-      .map(parseManifestLine _)
-      .write.mode("overwrite").parquet(s"$dir/_manifest_parquet")
-    // marker committed AFTER the parquet, via tmp+rename: an in-place
-    // truncate-then-write would flash a 0-byte marker at concurrent
-    // readers, and a crash mid-write would leave it empty forever
-    val marker = new Path(s"$dir/_manifest_parquet.count")
-    val tmp = new Path(s"$dir/_manifest_parquet.count.inprogress")
-    val out = fs.create(tmp, true)
-    out.write(listingMarker(files).getBytes("UTF-8"))
-    out.close()
-    if (fs.exists(marker)) fs.delete(marker, false) // rename won't overwrite
-    if (!fs.rename(tmp, marker))
-      throw new java.io.IOException(s"rename failed: $tmp -> $marker")
-    files.length.toLong
-  }
-
   // ---- batch trees (streaming sink layout: root/batch=N/{data,_lineage}) ----
 
   /** Parse a batch dir's number from its NAME ("batch=123" -> 123). */
@@ -1062,11 +1002,6 @@ object Lineage {
       } catch { case _: java.io.FileNotFoundException => Set.empty[String] }
     batchDirs(spark, root).filter(d => markedNames.contains(new Path(d).getName))
   }
-
-  /** Compact every batch's JSON manifest to parquet (tree-wide; idempotent).
-    * Returns the total lineage partitions covered. */
-  def compactBatchTree(spark: SparkSession, root: String): Long =
-    batchDirs(spark, root).map(d => compactManifest(spark, d)).sum
 
   /** Compact a streaming batch TREE into one at-rest lineage TABLE: a
     * year of micro-batches leaves thousands of small batch dirs whose

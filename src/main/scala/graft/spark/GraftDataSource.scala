@@ -31,7 +31,7 @@ import graft.engine.{ChunkBuilder, EncoderConfig, Lineage, MetaDict, SeqRow, Tok
   *    cluster — the threaded-decoder recast at source granularity);
   *  - doc_id predicates push into MANIFEST zone-map pruning at planning
   *    time: an equality/range lookup plans only the overlapping chunks,
-  *    reading the (possibly parquet-compacted) manifest, never the data;
+  *    reading the manifest, never the data;
   *    all predicates are also left as residuals, so row-level semantics
   *    are exactly Spark's;
   *  - column pruning has TEETH: a projection without `tokens` decodes only
@@ -132,11 +132,18 @@ class GraftTable(path: String) extends Table
     GraftDelete.run(SparkSession.active, path, filters): Unit
   }
   // UPDATE / MERGE INTO / arbitrary-predicate DELETE: group-based
-  // copy-on-write rewrite, group = lineage partition (GraftRowLevel.scala)
+  // copy-on-write rewrite, group = lineage partition (GraftRowLevel.scala).
+  // A dead prior row-level commit resolves (roll forward/back) BEFORE any
+  // rewrite scan is built: a scan planned over its transient duplicates
+  // would write both copies back as survivors.
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
-      : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
+      : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
+      SparkSession.active.sparkContext.hadoopConfiguration)
+    Lineage.recoverReplaceIntent(fs, path)
     () => new GraftRowLevelOperation(path, info.command)
+  }
 }
 
 /** Which manifest-only aggregates a pushed Aggregation wants, in output
@@ -321,38 +328,6 @@ class GraftScan(path: String, pushed: Array[Filter], required: StructType,
         .column("doc_id"))
   override def filter(filters: Array[Filter]): Unit = runtime = filters
 
-  /** Zone-test the runtime filters against one chunk. Unknown filter
-    * shapes keep the chunk (pruning is an optimization — the join itself
-    * enforces exact semantics). */
-  private def runtimeAdmits(m: Lineage.ManifestRow,
-                            sortedIn: Map[Int, IndexedSeq[String]]): Boolean =
-    runtime.indices.forall { i =>
-      runtime(i) match {
-        case In("_part_id", vs) => // exact group test, not a zone bound
-          vs.exists {
-            case n: Number => n.intValue == m.part_id
-            case _ => true // unknown element shape: keep (never prune blind)
-          }
-        case EqualTo("_part_id", v: Number) => v.intValue == m.part_id
-        case In("doc_id", _) =>
-          ZonePrune.anyInRange(sortedIn(i), m.min_doc_id, m.max_doc_id)
-        case EqualTo("doc_id", v: String) =>
-          graft.engine.Utf8Order.lte(m.min_doc_id, v) &&
-            graft.engine.Utf8Order.gte(m.max_doc_id, v)
-        // range shapes, zone-tested in the same UTF-8 binary order the
-        // static pushdown path uses (prunedManifest): a range-filtered
-        // dimension prunes chunks at runtime too, not only IN-sets
-        case GreaterThan("doc_id", v: String) =>
-          graft.engine.Utf8Order.gt(m.max_doc_id, v)
-        case GreaterThanOrEqual("doc_id", v: String) =>
-          graft.engine.Utf8Order.gte(m.max_doc_id, v)
-        case LessThan("doc_id", v: String) =>
-          graft.engine.Utf8Order.lt(m.min_doc_id, v)
-        case LessThanOrEqual("doc_id", v: String) =>
-          graft.engine.Utf8Order.lte(m.min_doc_id, v)
-        case _ => true
-      }
-    }
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def toMicroBatchStream(
@@ -503,17 +478,12 @@ class GraftScan(path: String, pushed: Array[Filter], required: StructType,
     // chunks in deterministic manifest order until their row counts cover
     // n — a limit 10 over a million-chunk table plans one chunk. Spark
     // applies the exact global limit on top (partial pushdown).
-    // runtime (DPP) filters first: sort each IN-set once, zone-test chunks
+    // runtime (DPP) filters first: compiled once, zone-tested per chunk
     val afterRuntime =
       if (runtime.isEmpty) planned
       else {
-        val sortedIn: Map[Int, IndexedSeq[String]] =
-          runtime.indices.collect {
-            case i if runtime(i).isInstanceOf[In] =>
-              i -> ZonePrune.sortValues(runtime(i).asInstanceOf[In].values
-                .collect { case s: String => s })
-          }.toMap
-        planned.filter { case (_, m) => runtimeAdmits(m, sortedIn) }
+        val admit = GraftScan.runtimePredicate(runtime)
+        planned.filter { case (_, m) => admit(m) }
       }
     val rows = limit match {
       case Some(n) =>
@@ -545,6 +515,28 @@ class GraftScan(path: String, pushed: Array[Filter], required: StructType,
       new SerializableConfiguration(
         SparkSession.active.sparkContext.hadoopConfiguration),
       required)
+}
+
+private[spark] object GraftScan {
+  /** The chunk test for the runtime filters, compiled once per planning
+    * pass. The `_part_id` arms are EXACT group tests (row-level rewrites);
+    * every other shape is `ZonePrune.mayMatch`, so an unknown shape keeps
+    * the chunk (pruning is an optimization — the join itself enforces
+    * exact semantics). */
+  def runtimePredicate(filters: Array[Filter]): Lineage.ManifestRow => Boolean = {
+    val tests: Array[Lineage.ManifestRow => Boolean] = filters.map {
+      case In("_part_id", vs) =>
+        // an unknown element shape keeps every chunk (never prune blind)
+        if (!vs.forall(_.isInstanceOf[Number])) _ => true
+        else {
+          val ids = vs.map(_.asInstanceOf[Number].intValue).toSet
+          m => ids(m.part_id)
+        }
+      case EqualTo("_part_id", v: Number) => m => v.intValue == m.part_id
+      case other => ZonePrune.mayMatch(other)
+    }
+    m => tests.forall(_(m))
+  }
 }
 
 /** One scheduled task = MANY chunks (same dir, manifest-ordered so chunks
@@ -597,50 +589,21 @@ final case class GraftBucketedInputPartition(p: GraftInputPartition,
     new GenericInternalRow(Array[Any](bucket))
 }
 
-/** Zone-map interval tests shared by static and runtime doc_id pruning.
-  * ALL comparisons run in UTF-8 BINARY order (graft.engine.Utf8Order) —
-  * the order ChunkBuilder computed min/max_doc_id in and the order Spark's
-  * UTF8String comparisons use. Java String (UTF-16) order diverges for
-  * supplementary-plane characters, and a divergent prune is silent ROW
-  * LOSS (a pruned chunk is unrecoverable by the residual filter). */
-private[spark] object ZonePrune {
-  import graft.engine.Utf8Order
-
-  /** Sort values for anyInRange: MUST be this order, not String's. */
-  def sortValues(vs: Seq[String]): IndexedSeq[String] =
-    vs.sortWith(Utf8Order.lt(_, _)).toIndexedSeq
-
-  /** Does any of `sorted` (ascending in UTF-8 order, via sortValues) fall
-    * inside [min, max]? Binary search for the first value >= min, then one
-    * compare — O(log n) per chunk even for the large IN-sets runtime (DPP)
-    * filters deliver. */
-  def anyInRange(sorted: IndexedSeq[String], min: String,
-                 max: String): Boolean = {
-    var lo = 0
-    var hi = sorted.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (Utf8Order.lt(sorted(mid), min)) lo = mid + 1 else hi = mid
-    }
-    lo < sorted.length && Utf8Order.lte(sorted(lo), max)
-  }
-}
-
 /** Driver-side manifest cache, the graft analog of Spark's file-source
   * FileStatusCache: planning re-reads the same manifest for every query on
-  * a table (a Spark job each — listing + parquet/JSON read + collect,
-  * ~0.3-0.6 s of fixed overhead even for a 30-chunk table). Entries are
-  * validated per lookup against the manifest LISTING marker (name+size
-  * fingerprint — the same currency token the parquet-manifest compaction
-  * uses), so an append, re-encode, or new streaming batch is seen by the
-  * very next query; one listStatus RPC per dir per query is the entire
-  * coherence cost. Bounded two ways: a dir whose listed manifest bytes
-  * exceed `graft.plan.localManifestBytes` is never read driver-side
-  * (planning stays distributed — the 100-TB path), and cached entries are
-  * LRU-evicted past `graft.plan.cacheBytes` of estimated row bytes. Entries
-  * of deleted tables do not wait for eviction: each insert drops the
-  * entries whose `_lineage` dir is gone, and `GraftCatalog.dropTable`
-  * invalidates the dropped table's entries. */
+  * a table (a Spark job each — listing + JSON read + collect, ~0.3-0.6 s
+  * of fixed overhead even for a 30-chunk table). Entries are validated per
+  * lookup against the manifest LISTING marker (a name+size fingerprint of
+  * the committed manifest files), so an append, re-encode, or new
+  * streaming batch is seen by the very next query; one listStatus RPC per
+  * dir per query is the entire coherence cost. Bounded two ways: a dir
+  * whose listed manifest bytes exceed `graft.plan.localManifestBytes` is
+  * never read driver-side (the same prune and folds then run inside Spark
+  * tasks — the 100-TB path), and cached entries are LRU-evicted past
+  * `graft.plan.cacheBytes` of estimated row bytes. Entries of deleted
+  * tables do not wait for eviction: each insert drops the entries whose
+  * `_lineage` dir is gone, and `GraftCatalog.dropTable` invalidates the
+  * dropped table's entries. */
 private[spark] object ManifestCache {
   private final class Entry(val marker: String,
                             val rows: Array[Lineage.ManifestRow],
@@ -721,8 +684,6 @@ private[spark] object ManifestCache {
   * + sketch pruning, dict pickup) shared by the batch scan, the aggregate
   * scan, and the micro-batch stream. */
 private[spark] object GraftPlanning {
-  import org.apache.spark.sql.functions.col
-
   /** The lineage dirs a batch read of `path` covers: the dir itself when
     * it is a plain lineage table, else the VISIBLE batches of a tree
     * (READY-marked only when the tree is marker-aware — an in-flight
@@ -777,48 +738,15 @@ private[spark] object GraftPlanning {
     else None
   }
 
-  /** One dir's manifest as a Dataset: from the driver cache when small
-    * (no file listing or parquet/JSON scan inside the job), else the
-    * distributed read. The AGGREGATE scans run their pipelines over this,
-    * so the cached and distributed answers share every line of agg code. */
-  def manifestDS(spark: SparkSession,
-                 dir: String): org.apache.spark.sql.Dataset[Lineage.ManifestRow] =
-    ManifestCache.rowsFor(spark, dir) match {
-      case Some(rows) =>
-        spark.createDataset(scala.collection.immutable.ArraySeq.unsafeWrapArray(rows))(
-          org.apache.spark.sql.Encoders.product[Lineage.ManifestRow])
-      case None => Lineage.readManifest(spark, dir)
-    }
-
-  /** Driver-side twin of the distributed zone-map/sketch pruning in
-    * `prunedManifest` — SAME UTF-8 binary string order (Utf8Order is
-    * Spark's UTF8String order), same fail-open sketch semantics.
-    * Equivalence is pinned by ManifestPruneParitySpec: the two paths are
-    * asserted chunk-for-chunk identical over every filter shape. */
-  def admitsAll(pushed: Array[Filter],
-                probes: Array[Int]): Lineage.ManifestRow => Boolean = {
-    import graft.engine.Utf8Order
-    type M = Lineage.ManifestRow
-    val tests: Array[M => Boolean] = pushed.flatMap {
-      case EqualTo("doc_id", v: String) =>
-        Some((m: M) => Utf8Order.gte(m.max_doc_id, v) &&
-          Utf8Order.lte(m.min_doc_id, v))
-      case GreaterThan("doc_id", v: String) =>
-        Some((m: M) => Utf8Order.gt(m.max_doc_id, v))
-      case GreaterThanOrEqual("doc_id", v: String) =>
-        Some((m: M) => Utf8Order.gte(m.max_doc_id, v))
-      case LessThan("doc_id", v: String) =>
-        Some((m: M) => Utf8Order.lt(m.min_doc_id, v))
-      case LessThanOrEqual("doc_id", v: String) =>
-        Some((m: M) => Utf8Order.lte(m.min_doc_id, v))
-      case In("doc_id", vs) =>
-        val sorted = ZonePrune.sortValues(vs.collect { case s: String => s })
-        Some((m: M) =>
-          ZonePrune.anyInRange(sorted, m.min_doc_id, m.max_doc_id))
-      case _ => None
-    } ++ probes.map(v => (m: M) => m.min_tok <= v && m.max_tok >= v &&
-      TokenSketch.mightContain(m.tok_set, m.min_tok, v))
-    m => tests.forall(_(m))
+  /** The dirs' manifests as ONE distributed Dataset of (dir, row): the
+    * executor for plans past the local gate, where the same prune and
+    * folds the driver runs over cached rows run inside Spark tasks.
+    * `dirs` is non-empty (an empty dir set always plans locally). */
+  def manifestRows(spark: SparkSession, dirs: Seq[String])
+      : org.apache.spark.sql.Dataset[(String, Lineage.ManifestRow)] = {
+    import spark.implicits._
+    dirs.map(d => Lineage.readManifest(spark, d).map(m => (d, m)))
+      .reduce(_ union _)
   }
 
   private def planCap(spark: SparkSession): Int = {
@@ -828,70 +756,42 @@ private[spark] object GraftPlanning {
         s"graft.plan.maxChunks must be a positive chunk count, got '$capStr'"))
   }
 
-  /** ONE Spark job for the whole dir set: the tagged per-dir manifests are
-    * unioned, pruned once, collected once — a deep tree otherwise pays one
-    * sequential driver-side collect per batch at planning time. The
-    * collect is BOUNDED by `graft.plan.maxChunks` (session conf): a
-    * pathological tree fails loudly at planning instead of OOMing the
-    * driver building millions of InputPartitions. Small tables skip the
-    * job entirely: the cached/driver-local manifest is pruned in-process
-    * with `admitsAll` (planning drops from ~0.5 s to ~ms — the cost that
-    * dominated every interactive-scale DSv2 query). */
+  /** The planning predicate for one chunk: every pushed filter's zone
+    * test (`ZonePrune.mayMatch`), and per probe the [min_tok, max_tok]
+    * zone, then the per-chunk TokenSketch, which fails OPEN (an unreadable
+    * sketch costs a wasted decode, never a dropped row). */
+  def chunkPredicate(pushed: Array[Filter],
+                     probes: Array[Int]): Lineage.ManifestRow => Boolean = {
+    type M = Lineage.ManifestRow
+    val tests: Array[M => Boolean] = pushed.map(ZonePrune.mayMatch) ++
+      probes.map(v => (m: M) => m.min_tok <= v && m.max_tok >= v &&
+        TokenSketch.mightContain(m.tok_set, m.min_tok, v))
+    m => tests.forall(_(m))
+  }
+
+  /** ONE zone/sketch predicate per planning pass, two executors: small
+    * tables prune the cached/driver-local manifest in-process (planning
+    * drops from ~0.5 s to ~ms — the cost that dominated every
+    * interactive-scale DSv2 query); past the local gate the same predicate
+    * runs as a typed filter over the unioned per-dir manifests in ONE
+    * Spark job. Either way the collect is BOUNDED by `graft.plan.maxChunks`
+    * (session conf): a pathological tree fails loudly at planning instead
+    * of OOMing the driver building millions of InputPartitions. */
   def prunedManifest(spark: SparkSession, dirs: Seq[String],
                      pushed: Array[Filter],
                      probes: Array[Int]): Array[(String, Lineage.ManifestRow)] = {
-    if (dirs.isEmpty) return Array.empty
     val cap = planCap(spark)
-    localManifests(spark, dirs) match {
+    val bound = (cap.toLong + 1).min(Int.MaxValue).toInt // cap + 1 may wrap
+    val admit = chunkPredicate(pushed, probes)
+    val rows = localManifests(spark, dirs) match {
       case Some(local) =>
-        val admit = admitsAll(pushed, probes)
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[(String, Lineage.ManifestRow)]
-        local.foreach { case (d, rows) =>
-          rows.foreach { m =>
-            if (admit(m)) {
-              out += ((d, m))
-              if (out.length > cap) throw new IllegalStateException(
-                s"graft planning over ${dirs.size} dir(s) admits more than " +
-                  s"$cap chunks; prune harder (doc_id/containsToken), read " +
-                  "fewer batches, or raise graft.plan.maxChunks")
-            }
-          }
-        }
-        return out.toArray
-      case None => () // distributed path below
+        local.iterator.flatMap { case (d, ms) =>
+          ms.iterator.filter(admit).map(m => (d, m))
+        }.take(bound).toArray
+      case None =>
+        manifestRows(spark, dirs).filter(e => admit(e._2)).limit(bound)
+          .collect()
     }
-    import spark.implicits._
-    var t = dirs.map(d => Lineage.readManifest(spark, d).map(m => (d, m)))
-      .reduce(_ union _)
-    // manifest zone-map pruning in Spark's own (UTF8 binary) string order —
-    // the same order ChunkBuilder computed the bounds in
-    pushed.foreach {
-      case EqualTo("doc_id", v: String) =>
-        t = t.filter(col("_2.max_doc_id") >= v && col("_2.min_doc_id") <= v)
-      case GreaterThan("doc_id", v: String) =>
-        t = t.filter(col("_2.max_doc_id") > v)
-      case GreaterThanOrEqual("doc_id", v: String) =>
-        t = t.filter(col("_2.max_doc_id") >= v)
-      case LessThan("doc_id", v: String) =>
-        t = t.filter(col("_2.min_doc_id") < v)
-      case LessThanOrEqual("doc_id", v: String) =>
-        t = t.filter(col("_2.min_doc_id") <= v)
-      case In("doc_id", vs) =>
-        val sorted = ZonePrune.sortValues(vs.collect { case s: String => s })
-        t = t.filter(e =>
-          ZonePrune.anyInRange(sorted, e._2.min_doc_id, e._2.max_doc_id))
-      case _ => ()
-    }
-    probes.foreach { v =>
-      // two levels before any data read, per probe (conjuncts AND): the
-      // [min_tok, max_tok] zone map, then the per-chunk TokenSketch (fails
-      // OPEN — an unreadable sketch costs a wasted decode, never a dropped
-      // row)
-      t = t.filter(col("_2.min_tok") <= v && col("_2.max_tok") >= v)
-        .filter(e => TokenSketch.mightContain(e._2.tok_set, e._2.min_tok, v))
-    }
-    val rows = t.limit(cap + 1).collect()
     if (rows.length > cap) throw new IllegalStateException(
       s"graft planning over ${dirs.size} dir(s) admits more than $cap " +
         "chunks; prune harder (doc_id/containsToken), read fewer batches, " +
@@ -977,9 +877,35 @@ private[spark] object GraftPlanning {
       }
 }
 
+/** The global manifest aggregate as ONE fold over manifest rows: row and
+  * token sums, whether any chunk was seen (SQL sum over zero rows is
+  * null), and min/max doc_id in UTF-8 binary order (Utf8Order IS Spark's
+  * UTF8String comparison). `Zero` is the answer over an empty dir set. */
+private[spark] final case class ManifestAgg(rows: Long, tokens: Long,
+                                            any: Boolean, min: String,
+                                            max: String) {
+  import ManifestAgg.{hi, lo}
+  def add(m: Lineage.ManifestRow): ManifestAgg =
+    ManifestAgg(rows + m.n_rows, tokens + m.n_tokens, any = true,
+      lo(min, m.min_doc_id), hi(max, m.max_doc_id))
+  def merge(o: ManifestAgg): ManifestAgg =
+    ManifestAgg(rows + o.rows, tokens + o.tokens, any || o.any,
+      lo(min, o.min), hi(max, o.max))
+}
+
+private[spark] object ManifestAgg {
+  import graft.engine.Utf8Order
+  val Zero: ManifestAgg = ManifestAgg(0L, 0L, any = false, null, null)
+  // null = no value yet
+  private def lo(a: String, b: String): String =
+    if (a == null || (b != null && Utf8Order.lt(b, a))) b else a
+  private def hi(a: String, b: String): String =
+    if (a == null || (b != null && Utf8Order.gt(b, a))) b else a
+}
+
 /** A completely-pushed global aggregate: the answer comes from the
-  * manifests alone — ONE tiny Spark job over chunk framing rows, zero
-  * chunk opens, one output row. count(*) over 100 TB reads kilobytes. */
+  * manifests alone (`ManifestAgg`) — zero chunk opens, one output row.
+  * count(*) over 100 TB reads kilobytes. */
 class GraftAggScan(path: String, cols: Seq[GraftAggCol],
                    untilBatch: Option[Long] = None)
     extends Scan with Batch {
@@ -999,56 +925,24 @@ class GraftAggScan(path: String, cols: Seq[GraftAggCol],
     // the manifest-only answer honors the same time-travel cut as the row
     // scan (count() as of batch n counts batches <= n, not the tree)
     val dirs = GraftPlanning.resolveReadDirs(spark, path, untilBatch)
-    val values: Array[Any] =
-      if (dirs.isEmpty) cols.map {
-        case AggCountRows => 0L
-        case _            => null // SQL min/max/sum over zero rows
-      }.toArray
-      else GraftPlanning.localManifests(spark, dirs) match {
-        case Some(local) =>
-          // manifest cached driver-side: fold the aggregate in-process —
-          // zero Spark jobs at all (the distributed twin below is the
-          // 100-TB path; same null semantics, same UTF-8 binary string
-          // order — Utf8Order IS Spark's UTF8String comparison)
-          var c = 0L; var st = 0L; var any = false
-          var mn: String = null; var mx: String = null
-          local.foreach { case (_, rows) =>
-            rows.foreach { m =>
-              any = true
-              c += m.n_rows
-              st += m.n_tokens
-              if (mn == null || graft.engine.Utf8Order.lt(m.min_doc_id, mn))
-                mn = m.min_doc_id
-              if (mx == null || graft.engine.Utf8Order.gt(m.max_doc_id, mx))
-                mx = m.max_doc_id
-            }
-          }
-          cols.map {
-            case AggCountRows => c: Any
-            case AggMinDocId  => mn
-            case AggMaxDocId  => mx
-            case AggSumNTok   => if (any) st: Any else null
-          }.toArray
-        case None =>
-          import org.apache.spark.sql.functions._
-          val mf = dirs.map(d => GraftPlanning.manifestDS(spark, d))
-            .reduce(_ union _)
-          val r = mf.agg(
-            coalesce(sum(col("n_rows").cast("long")), lit(0L)).as("c"),
-            min(col("min_doc_id")).as("mn"), max(col("max_doc_id")).as("mx"),
-            sum(col("n_tokens")).as("st")).collect()(0)
-          cols.map {
-            case AggCountRows => r.getLong(0): Any
-            case AggMinDocId  => if (r.isNullAt(1)) null else r.getString(1)
-            case AggMaxDocId  => if (r.isNullAt(2)) null else r.getString(2)
-            case AggSumNTok   => if (r.isNullAt(3)) null else r.getLong(3): Any
-          }.toArray
-      }
-    Array(GraftAggPartition(values.map {
-      case null      => null
-      case l: Long   => java.lang.Long.valueOf(l)
-      case s: String => s
-    }))
+    // ONE fold, two executors: in-process over the driver-cached rows
+    // (zero Spark jobs), or inside tasks over the distributed manifest
+    // read (the 100-TB path)
+    val a = GraftPlanning.localManifests(spark, dirs) match {
+      case Some(local) =>
+        local.foldLeft(ManifestAgg.Zero) { case (acc, (_, rows)) =>
+          rows.foldLeft(acc)(_ add _)
+        }
+      case None =>
+        GraftPlanning.manifestRows(spark, dirs).rdd
+          .aggregate(ManifestAgg.Zero)((acc, e) => acc.add(e._2), _ merge _)
+    }
+    Array(GraftAggPartition(cols.map[AnyRef] {
+      case AggCountRows => java.lang.Long.valueOf(a.rows)
+      case AggMinDocId  => a.min
+      case AggMaxDocId  => a.max
+      case AggSumNTok   => if (a.any) java.lang.Long.valueOf(a.tokens) else null
+    }.toArray))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -1059,8 +953,8 @@ class GraftAggScan(path: String, cols: Seq[GraftAggCol],
 }
 
 /** A completely-pushed `GROUP BY source` aggregate: answered from the
-  * manifest's per-chunk SrcStats blobs — one Spark job over manifest rows,
-  * ZERO chunk opens and (for current-format manifests) zero meta reads.
+  * manifest's per-chunk SrcStats blobs — folded in-process over cached
+  * rows or in one Spark job over manifest rows, ZERO chunk opens and (for current-format manifests) zero meta reads.
   * A per-source rollup over 100 TB reads the manifests the planner was
   * going to read anyway; the reference analog is answering from framing,
   * not data (`tests/test_ppmd7.py:95-146`). Chunks written before SrcStats
@@ -1091,62 +985,43 @@ class GraftSourceAggScan(path: String, cols: Seq[GraftAggCol],
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
     val dirs = GraftPlanning.resolveReadDirs(spark, path, untilBatch)
+    val capStr = spark.conf.get("graft.agg.maxGroups", "1000000")
+    val cap = capStr.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"graft.agg.maxGroups must be a positive group count, got '$capStr'"))
     // driver-local fast path: manifest cached AND every chunk carries a
     // decodable SrcStats blob — fold the per-source rollup in-process,
     // zero Spark jobs (a single undecodable blob falls through to the
     // distributed job, whose meta-read fallback handles mixed-era dirs)
     val localGroups: Option[Array[(String, Long, Long)]] =
-      if (dirs.isEmpty) None
-      else GraftPlanning.localManifests(spark, dirs).flatMap { local =>
-        val agg = new java.util.TreeMap[String, Array[Long]]()
+      GraftPlanning.localManifests(spark, dirs).flatMap { local =>
+        val agg = new SourceGroups
         val ok = local.forall { case (_, rows) =>
           rows.forall { m =>
             graft.engine.SrcStats.decode(m.src_stats) match {
               case Some(stats) =>
-                stats.foreach { case (src, r, t) =>
-                  var e = agg.get(src)
-                  if (e == null) { e = new Array[Long](2); agg.put(src, e) }
-                  e(0) += r; e(1) += t
-                }
+                stats.foreach { case (src, r, t) => agg.add(src, r, t) }
                 true
               case None => false
             }
           }
         }
-        if (!ok) None
-        else {
-          import scala.jdk.CollectionConverters._
-          Some(agg.entrySet().iterator().asScala.map(e =>
-            (e.getKey, e.getValue()(0), e.getValue()(1))).toArray)
-        }
+        if (ok) Some(agg.result.toArray) else None
       }
-    val groups: Array[(String, Long, Long)] =
-      if (dirs.isEmpty) Array.empty // GROUP BY over an empty tree: no rows
-      else if (localGroups.isDefined) {
-        val out = localGroups.get
-        // same loud bound as the distributed path (behavior parity)
-        val capStr = spark.conf.get("graft.agg.maxGroups", "1000000")
-        val cap = capStr.toIntOption.filter(_ > 0).getOrElse(
-          throw new IllegalArgumentException(
-            s"graft.agg.maxGroups must be a positive group count, got '$capStr'"))
-        if (out.length > cap) throw new IllegalStateException(
-          s"GROUP BY source pushdown over $path exceeds $cap groups; " +
-            "raise graft.agg.maxGroups or disable pushdown for this query")
+    val groups = localGroups match {
+      case Some(out) =>
         lastMetaFallbackChunks = 0 // every blob decoded — no meta reads
         out
-      }
-      else {
+      case None =>
         import spark.implicits._
         import org.apache.spark.sql.functions._
         val hconf = new SerializableConfiguration(
           spark.sparkContext.hadoopConfiguration)
         val fallback = spark.sparkContext.longAccumulator(
           "graft_srcstats_meta_fallback_chunks")
-        val mf = dirs.map(d => GraftPlanning.manifestDS(spark, d).map(m => (d, m)))
-          .reduce(_ union _)
         // one (source, rows, tokens) triple per (chunk, source): tiny rows,
         // partial-aggregated map-side by the groupBy below
-        val per = mf.mapPartitions { it =>
+        val per = GraftPlanning.manifestRows(spark, dirs).mapPartitions { it =>
           it.flatMap { case (dir, m) =>
             graft.engine.SrcStats.decode(m.src_stats) match {
               case Some(stats) => stats.iterator
@@ -1154,36 +1029,26 @@ class GraftSourceAggScan(path: String, cols: Seq[GraftAggCol],
                 // pre-upgrade chunk: meta-only read (payload never leaves
                 // disk), aggregated chunk-locally before emitting
                 fallback.add(1L)
-                val agg = new java.util.TreeMap[String, Array[Long]]()
+                val agg = new SourceGroups
                 ChunkBuilder.openMeta(
                   Lineage.readChunkMeta(hconf.value, dir, m)).foreach {
-                  case (src, len) =>
-                    var e = agg.get(src)
-                    if (e == null) { e = new Array[Long](2); agg.put(src, e) }
-                    e(0) += 1L; e(1) += len.toLong
+                  case (src, len) => agg.add(src, 1L, len.toLong)
                 }
-                import scala.jdk.CollectionConverters._
-                agg.entrySet().iterator().asScala.map(e =>
-                  (e.getKey, e.getValue()(0), e.getValue()(1)))
+                agg.result
             }
           }
         }.toDF("source", "rows", "tokens")
-        val capStr = spark.conf.get("graft.agg.maxGroups", "1000000")
-        val cap = capStr.toIntOption.filter(_ > 0).getOrElse(
-          throw new IllegalArgumentException(
-            s"graft.agg.maxGroups must be a positive group count, got '$capStr'"))
         val out = per.groupBy(col("source"))
           .agg(sum(col("rows")).as("rows"), sum(col("tokens")).as("tokens"))
           .limit(cap + 1)
           .collect()
           .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        if (out.length > cap) throw new IllegalStateException(
-          s"GROUP BY source pushdown over $path exceeds $cap groups; " +
-            "raise graft.agg.maxGroups or disable pushdown for this query")
         lastMetaFallbackChunks = fallback.value.toInt
         out
-      }
-    if (dirs.isEmpty) lastMetaFallbackChunks = 0
+    }
+    if (groups.length > cap) throw new IllegalStateException(
+      s"GROUP BY source pushdown over $path exceeds $cap groups; " +
+        "raise graft.agg.maxGroups or disable pushdown for this query")
     Array(GraftSourceAggPartition(groups, cols.map {
       case AggCountRows => 0; case AggSumNTok => 1
       case other => throw new IllegalStateException(s"$other not grouped")
@@ -1195,6 +1060,22 @@ class GraftSourceAggScan(path: String, cols: Seq[GraftAggCol],
       override def createReader(p: InputPartition): PartitionReader[InternalRow] =
         new GraftSourceAggRowReader(p.asInstanceOf[GraftSourceAggPartition])
     }
+}
+
+/** Per-source (rows, tokens) sums in source order — the accumulator the
+  * driver-local rollup and the per-chunk meta-read fallback share. */
+private[spark] final class SourceGroups {
+  private val agg = new java.util.TreeMap[String, Array[Long]]()
+  def add(src: String, rows: Long, tokens: Long): Unit = {
+    var e = agg.get(src)
+    if (e == null) { e = new Array[Long](2); agg.put(src, e) }
+    e(0) += rows; e(1) += tokens
+  }
+  def result: Iterator[(String, Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    agg.entrySet().iterator().asScala.map(e =>
+      (e.getKey, e.getValue()(0), e.getValue()(1)))
+  }
 }
 
 /** `sel(i)` maps output agg column i to 0 = row count, 1 = token sum. */
@@ -1455,8 +1336,6 @@ class GraftWrite(path: String, inputSchema: StructType, doTruncate: Boolean,
     if (doTruncate) {
       fs.delete(new Path(s"$path/data"), true)
       fs.delete(new Path(s"$path/_lineage"), true)
-      fs.delete(new Path(s"$path/_manifest_parquet"), true)
-      fs.delete(new Path(s"$path/_manifest_parquet.count"), false)
       // a truncated batch dir must lose its READY visibility too, or a
       // concurrent stream would consume the half-written rewrite
       fs.delete(new Path(s"$path/_graft_batch_ready"), false)

@@ -3,7 +3,7 @@ package graft.spark
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.sources._
 
-import graft.engine.{Lineage, SeqRow, SrcStats, Utf8Order}
+import graft.engine.{Lineage, SeqRow, Utf8Order}
 
 /** `DELETE FROM graft_table WHERE ...` (DSv2 `SupportsDelete`): the filter
   * conjunction is compiled to (a) an EXACT row predicate and (b) a
@@ -26,8 +26,9 @@ import graft.engine.{Lineage, SeqRow, SrcStats, Utf8Order}
   * retain or lose rows): provers are CONSERVATIVE — when metadata cannot
   * decide, the chunk goes to Maybe and the exact row predicate decides.
   * doc_id comparisons run in UTF-8 binary order (`Utf8Order`), the order
-  * Spark's UTF8String comparisons and the chunk zone bounds use —
-  * mirroring `GraftPlanning.admitsAll`. */
+  * Spark's UTF8String comparisons and the chunk zone bounds use: the
+  * classifiers are `ZonePrune.provesAll`/`mayMatch`, the same zone tests
+  * scan planning prunes with. */
 private[graft] object GraftDelete {
 
   /** Exact row predicate for ONE filter; None = shape we do not support
@@ -77,75 +78,6 @@ private[graft] object GraftDelete {
       for (pa <- rowPred(a); pb <- rowPred(b)) yield (r: SeqRow) => pa(r) || pb(r)
     case Not(a) => rowPred(a).map(p => (r: SeqRow) => !p(r))
     case _ => None
-  }
-
-  private type M = Lineage.ManifestRow
-
-  /** TRUE only when metadata PROVES every row of the chunk matches `f`. */
-  def provesAll(f: Filter): M => Boolean = f match {
-    case EqualTo("doc_id", v: String) =>
-      m => m.min_doc_id == v && m.max_doc_id == v
-    case EqualNullSafe("doc_id", v: String) =>
-      m => m.min_doc_id == v && m.max_doc_id == v
-    case GreaterThan("doc_id", v: String) => m => Utf8Order.gt(m.min_doc_id, v)
-    case GreaterThanOrEqual("doc_id", v: String) =>
-      m => Utf8Order.gte(m.min_doc_id, v)
-    case LessThan("doc_id", v: String) => m => Utf8Order.lt(m.max_doc_id, v)
-    case LessThanOrEqual("doc_id", v: String) =>
-      m => Utf8Order.lte(m.max_doc_id, v)
-    case In("doc_id", vs) =>
-      val set = vs.collect { case s: String => s }.toSet
-      m => m.min_doc_id == m.max_doc_id && set.contains(m.min_doc_id)
-    case EqualTo("source", v: String) =>
-      m => SrcStats.decode(m.src_stats)
-        .exists(es => es.nonEmpty && es.forall(_._1 == v))
-    case EqualNullSafe("source", v: String) => provesAll(EqualTo("source", v))
-    case In("source", vs) =>
-      val set = vs.collect { case s: String => s }.toSet
-      m => SrcStats.decode(m.src_stats)
-        .exists(es => es.nonEmpty && es.forall(e => set.contains(e._1)))
-    case IsNotNull("doc_id" | "tokens" | "n_tok" | "source") => _ => true
-    case AlwaysTrue() => _ => true
-    case And(a, b) =>
-      val pa = provesAll(a); val pb = provesAll(b); m => pa(m) && pb(m)
-    case Or(a, b) =>
-      val pa = provesAll(a); val pb = provesAll(b); m => pa(m) || pb(m)
-    // every row matches Not(a) iff no row can match a
-    case Not(a) => val ma = mayMatch(a); m => !ma(m)
-    case _ => _ => false // undecidable from metadata: never claim proof
-  }
-
-  /** FALSE only when metadata PROVES no row of the chunk matches `f`
-    * (the DELETE twin of `GraftPlanning.admitsAll`'s zone tests). */
-  def mayMatch(f: Filter): M => Boolean = f match {
-    case EqualTo("doc_id", v: String) =>
-      m => Utf8Order.gte(m.max_doc_id, v) && Utf8Order.lte(m.min_doc_id, v)
-    case EqualNullSafe("doc_id", v: String) => mayMatch(EqualTo("doc_id", v))
-    case GreaterThan("doc_id", v: String) => m => Utf8Order.gt(m.max_doc_id, v)
-    case GreaterThanOrEqual("doc_id", v: String) =>
-      m => Utf8Order.gte(m.max_doc_id, v)
-    case LessThan("doc_id", v: String) => m => Utf8Order.lt(m.min_doc_id, v)
-    case LessThanOrEqual("doc_id", v: String) =>
-      m => Utf8Order.lte(m.min_doc_id, v)
-    case In("doc_id", vs) =>
-      val sorted = ZonePrune.sortValues(vs.collect { case s: String => s })
-      m => ZonePrune.anyInRange(sorted, m.min_doc_id, m.max_doc_id)
-    case EqualTo("source", v: String) =>
-      // unknown stats (pre-upgrade manifest) fail OPEN: Maybe, never Keep
-      m => SrcStats.decode(m.src_stats).forall(_.exists(_._1 == v))
-    case EqualNullSafe("source", v: String) => mayMatch(EqualTo("source", v))
-    case In("source", vs) =>
-      val set = vs.collect { case s: String => s }.toSet
-      m => SrcStats.decode(m.src_stats).forall(_.exists(e => set.contains(e._1)))
-    case IsNull("doc_id" | "tokens" | "n_tok" | "source") => _ => false
-    case AlwaysFalse() => _ => false
-    case And(a, b) =>
-      val pa = mayMatch(a); val pb = mayMatch(b); m => pa(m) && pb(m)
-    case Or(a, b) =>
-      val pa = mayMatch(a); val pb = mayMatch(b); m => pa(m) || pb(m)
-    // some row may match Not(a) unless EVERY row provably matches a
-    case Not(a) => val pa = provesAll(a); m => !pa(m)
-    case _ => _ => true // undecidable: may match
   }
 
   /** All filters compile to exact row predicates? (The canDeleteWhere
@@ -224,9 +156,9 @@ private[graft] object GraftDelete {
       throw new UnsupportedOperationException(
         s"DELETE filter not supported by the graft source: $f")))
     val pred: SeqRow => Boolean = r => preds.forall(_(r))
-    val proofs = filters.map(provesAll)
-    val mays = filters.map(mayMatch)
-    val classify: M => Int = { m =>
+    val proofs = filters.map(ZonePrune.provesAll)
+    val mays = filters.map(ZonePrune.mayMatch)
+    val classify: Lineage.ManifestRow => Int = { m =>
       if (proofs.forall(_(m))) Lineage.DeleteClass.Drop
       else if (mays.exists(p => !p(m))) Lineage.DeleteClass.Keep
       else Lineage.DeleteClass.Maybe

@@ -55,12 +55,9 @@ object DriveBigRun {
       .exists(d => d.tokens.sameElements(e.tokens) && d.source == e.source))
     println(s"BIG3 zonemap-slice rows=${slice.size}/500 bitIdentical=$ok")
 
-    // round-3 index layers at scale: parquet-compact the manifest, then a
-    // rare-token containment probe — zone + TokenSketch prune at planning,
-    // counted as planned chunks (one chunk per task)
-    val t2 = System.nanoTime()
-    val compacted = Lineage.compactManifest(spark, dir)
-    val tCmp = (System.nanoTime() - t2) / 1e9
+    // index layers at scale: a rare-token containment probe — zone +
+    // TokenSketch prune at planning, counted as planned chunks (one chunk
+    // per task)
     val probe = Corpus.V - 1 // boundary-archetype token: present in ~5% of rows
     def plannedFor(tok: Int): Int = {
       spark.conf.set("graft.read.maxPartitionBytes", "1")
@@ -73,7 +70,7 @@ object DriveBigRun {
     val tPrune = (System.nanoTime() - t3) / 1e9
     val oov = Corpus.V + 123
     val mOov = plannedFor(oov)
-    println(f"BIG4 compact=$compacted%d parts in $tCmp%.1fs; sketch probe tok=$probe -> $mTok/$nChunks chunks (planning only, $tPrune%.1fs); oov probe -> $mOov chunks")
+    println(f"BIG4 sketch probe tok=$probe -> $mTok/$nChunks chunks (planning only, $tPrune%.1fs); oov probe -> $mOov chunks")
 
     // round-5: the DSv2 source at the same scale point — planning cost over
     // thousands of chunks broken out from read cost, plus each read shape

@@ -1,0 +1,44 @@
+package graft.codec
+
+import java.util.zip.CRC32
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** A frame whose CRC is valid but whose varint raw length does not fit an
+  * Int must fail TYPED (CorruptException), never with a JVM array error:
+  * the CRC is no defence, because anyone can recompute it over a hostile
+  * header. */
+class FsstRawLenSpec extends AnyFunSuite {
+
+  /** magic, mode, varint rawLen, payload, CRC32 (little-endian) over all
+    * preceding bytes — the frame layout `Fsst.decode` checks. */
+  private def frame(mode: Int, rawLen: Long, payload: Array[Byte]): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    bos.write('G'); bos.write('S'); bos.write(mode)
+    var v = rawLen
+    while ((v & ~0x7fL) != 0L) { bos.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
+    bos.write(v.toInt)
+    bos.write(payload)
+    val body = bos.toByteArray
+    val crc = new CRC32
+    crc.update(body, 0, body.length)
+    val c = crc.getValue.toInt
+    body ++ Array[Byte](c.toByte, (c >>> 8).toByte, (c >>> 16).toByte,
+      (c >>> 24).toByte)
+  }
+
+  // mode 0 = stored raw; mode 1 = one-symbol table ("a") + one code
+  private val payloads = Seq(
+    0 -> Array[Byte]('x', 'y', 'z'),
+    1 -> Array[Byte](1, 1, 'a', 0))
+
+  for ((mode, payload) <- payloads; rawLen <- Seq(1L << 31, (1L << 32) - 1))
+    test(s"mode $mode, rawLen $rawLen: CRC-valid frame -> CorruptException") {
+      intercept[CorruptException](Fsst.decode(frame(mode, rawLen, payload)))
+    }
+
+  test("the same frames with their true raw length decode") {
+    assert(Fsst.decode(frame(0, 3, payloads.head._2)).sameElements("xyz".getBytes))
+    assert(Fsst.decode(frame(1, 1, payloads(1)._2)).sameElements("a".getBytes))
+  }
+}

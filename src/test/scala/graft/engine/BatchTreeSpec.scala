@@ -70,8 +70,6 @@ class BatchTreeSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       spark.read.format("graft").load(s"$root/nope").count()
     }
-    // tree-wide manifest compaction: all 3x2 partitions, decode unchanged
-    assert(Lineage.compactBatchTree(spark, root) == 6L)
     assert(tree.select("doc_id", "tokens").queryExecution.toRdd.count() ==
       all.size.toLong)
     // one load over all batches, zone-map pruning still per batch manifest

@@ -164,41 +164,6 @@ class LineageSpec extends AnyFunSuite {
       s"sketch passes $sketchPass")
   }
 
-  test("parquet-compacted manifest: pushdown plan, identical decode, " +
-      "stale copy falls back to JSON") {
-    import org.apache.spark.sql.functions.col
-    val dir = tmpDir()
-    val ds = Corpus.table(spark, 300, partitions = 3)
-    val cfg = EncoderConfig(chunkTokens = 8192, numPartitions = 3)
-    assert(Lineage.encodeToDir(ds, dir, cfg) == 3L)
-    val viaJson = read(dir).collect()
-      .map(r => r.doc_id -> r.tokens.toSeq).toMap
-    assert(Lineage.compactManifest(spark, dir) == 3L)
-    // reads now come from parquet, with zone-map predicates PUSHED into the
-    // scan (the 100-TB manifest shape: millions of manifest rows, read by
-    // row group instead of line-by-line)
-    val m = Lineage.readManifest(spark, dir)
-    assert(m.queryExecution.executedPlan.toString.contains("parquet"),
-      "manifest read not backed by parquet after compaction")
-    val planned = m.filter(col("min_tok") <= 7 && col("max_tok") >= 7)
-      .queryExecution.executedPlan.toString
-    assert(planned.contains("PushedFilters") && planned.contains("min_tok"),
-      s"zone-map filters not pushed:\n$planned")
-    // decode through the parquet manifest is bit-identical
-    val viaParquet = read(dir).collect()
-      .map(r => r.doc_id -> r.tokens.toSeq).toMap
-    assert(viaParquet == viaJson)
-    // resume still keys off the per-partition JSON commit protocol
-    assert(Lineage.encodeToDir(ds, dir, cfg) == 0L)
-    // staleness: the lineage listing changed after compaction -> the
-    // parquet copy is ignored, reads see the live JSON state
-    Files.delete(Paths.get(dir, "_lineage", "part-00002.json"))
-    val live = Lineage.readManifest(spark, dir)
-    assert(!live.queryExecution.executedPlan.toString.contains("parquet"),
-      "stale parquet manifest was trusted")
-    assert(live.collect().map(_.part_id).toSet == Set(0, 1))
-  }
-
   test("doc_id range decode agrees with UTF-8 binary order for " +
       "supplementary-plane ids (pruning and row filter use ONE order)") {
     import org.apache.spark.sql.functions.col

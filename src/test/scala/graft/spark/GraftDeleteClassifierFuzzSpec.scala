@@ -111,11 +111,11 @@ class GraftDeleteClassifierFuzzSpec extends AnyFunSuite with graft.GenChecks {
           assert(p(r) == t, s"rowPred diverges on $r for $f")
         }
       }
-      if (GraftDelete.provesAll(f)(m))
+      if (ZonePrune.provesAll(f)(m))
         assert(truth.forall(identity),
           s"provesAll claimed Drop but a row survives: $f over " +
             s"${rows.map(_.doc_id)}")
-      if (!GraftDelete.mayMatch(f)(m))
+      if (!ZonePrune.mayMatch(f)(m))
         assert(!truth.exists(identity),
           s"mayMatch claimed Keep but a row matches: $f over " +
             s"${rows.map(_.doc_id)}")
@@ -128,8 +128,8 @@ class GraftDeleteClassifierFuzzSpec extends AnyFunSuite with graft.GenChecks {
     var drops = 0; var keeps = 0
     forAll(Gen.zip(genRows, genFilter(2)), trials = 400) { case (rows, f) =>
       val m = manifestOf(rows)
-      if (GraftDelete.provesAll(f)(m)) drops += 1
-      if (!GraftDelete.mayMatch(f)(m)) keeps += 1
+      if (ZonePrune.provesAll(f)(m)) drops += 1
+      if (!ZonePrune.mayMatch(f)(m)) keeps += 1
     }
     assert(drops > 10, s"only $drops Drop classifications in 400 trials")
     assert(keeps > 10, s"only $keeps Keep classifications in 400 trials")

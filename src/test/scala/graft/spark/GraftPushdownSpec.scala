@@ -400,5 +400,18 @@ class GraftPushdownSpec extends AnyFunSuite {
         s"unexpected failure: $e")
     } finally spark.conf.unset("graft.plan.maxChunks")
     assert(spark.read.format("graft").load(dir).count() == 1500L)
+    // the largest cap plans every chunk on both executors (cap + 1 wraps)
+    val all = Lineage.readManifest(spark, dir).count()
+    spark.conf.set("graft.plan.maxChunks", Int.MaxValue.toString)
+    try {
+      def plan() = GraftPlanning.prunedManifest(spark, Seq(dir), Array.empty,
+        Array.empty).length.toLong
+      assert(plan() == all)
+      spark.conf.set("graft.plan.localManifestBytes", "0")
+      assert(plan() == all)
+    } finally {
+      spark.conf.unset("graft.plan.maxChunks")
+      spark.conf.unset("graft.plan.localManifestBytes")
+    }
   }
 }

@@ -50,28 +50,37 @@ class GraftReplaceIntentSpec extends AnyFunSuite {
       .toSet
   }
 
+  /** The rows of lineage partition `pid`. _part_id gives the EXACT
+    * membership (zone ranges overlap across hash partitions). */
+  private def partRows(dir: String, pid: Int): Seq[SeqRow] = {
+    import org.apache.spark.sql.functions.col
+    spark.read.format("graft").load(dir)
+      .select(col("doc_id"), col("tokens"), col("n_tok"), col("source"),
+        col("_part_id"))
+      .where(col("_part_id") === pid)
+      .collect()
+      .map(r => SeqRow(r.getString(0),
+        r.getSeq[Int](1).toArray, r.getInt(2), r.getString(3)))
+      .toSeq
+  }
+
+  /** The roll-forward crash state: partition 1's rows were rewritten
+    * verbatim into fresh pid 3 and the process died before retiring pid 1,
+    * so its rows exist twice. Returns partition 1's rows. */
+  private def crashBeforeRetirement(dir: String): Seq[SeqRow] = {
+    val rows1 = partRows(dir, 1)
+    assert(rows1.nonEmpty)
+    addFreshGroup(dir, 3, rows1) // adds landed
+    Lineage.writeReplaceIntent(fsFor(dir), dir, Seq(3), Seq(1))
+    rows1
+  }
+
   test("roll forward: adds complete, crash before retirement -> recovery " +
       "finishes the retirement and the duplicates disappear") {
     val dir = mk("fwd", 300, 3)
     val fs = fsFor(dir)
     val all = tableRows(dir)
-    // the dead commit's plan: partition 1's rows were rewritten verbatim
-    // into fresh pid 3, pid 1 was to be retired. _part_id gives the EXACT
-    // membership (zone ranges overlap across hash partitions).
-    val rows1: Seq[SeqRow] = {
-      import org.apache.spark.sql.functions.col
-      spark.read.format("graft").load(dir)
-        .select(col("doc_id"), col("tokens"), col("n_tok"), col("source"),
-          col("_part_id"))
-        .where(col("_part_id") === 1)
-        .collect()
-        .map(r => SeqRow(r.getString(0),
-          r.getSeq[Int](1).toArray, r.getInt(2), r.getString(3)))
-        .toSeq
-    }
-    assert(rows1.nonEmpty)
-    addFreshGroup(dir, 3, rows1) // adds landed
-    Lineage.writeReplaceIntent(fs, dir, Seq(3), Seq(1))
+    crashBeforeRetirement(dir)
     // crash here: pid 1 not retired -> its rows exist twice
     assert(Lineage.readManifest(spark, dir).collect()
       .filter(_.part_id == 1).nonEmpty)
@@ -91,6 +100,30 @@ class GraftReplaceIntentSpec extends AnyFunSuite {
       s"$dir/_lineage/_replace_intent.json")))
     // idempotent: nothing left to recover
     assert(!Lineage.recoverReplaceIntent(fs, dir))
+  }
+
+  test("an UPDATE over a crashed commit's duplicates recovers before its " +
+      "rewrite scan: every doc_id reads back exactly once, updated") {
+    spark.conf.set("spark.sql.catalog.gint", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gint.root",
+      java.nio.file.Files.createTempDirectory("graft-intent-cat").toString)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gint.q")
+    val dir = mk("upd-fwd", 300, 3)
+    val all = tableRows(dir)
+    // the updated doc is one of the duplicated rows: a rewrite scan planned
+    // over both copies would write both back
+    val target = crashBeforeRetirement(dir).head.doc_id
+    spark.sql(s"CREATE TABLE gint.q.fwd USING graft LOCATION '$dir'")
+    spark.sql(
+      s"UPDATE gint.q.fwd SET source = 'curated' WHERE doc_id = '$target'")
+    val got = spark.table("gint.q.fwd").select("doc_id", "source").collect()
+      .map(r => (r.getString(0), r.getString(1)))
+    assert(got.length == all.size,
+      s"${got.length} rows for ${all.size} doc_ids — duplicates leaked")
+    assert(got.map(_._1).toSet == all)
+    assert(got.filter(_._2 == "curated").map(_._1).toSeq == Seq(target))
+    assert(!fsFor(dir).exists(new org.apache.hadoop.fs.Path(
+      s"$dir/_lineage/_replace_intent.json")))
   }
 
   test("roll back: a fresh pid missing -> recovery removes the landed " +

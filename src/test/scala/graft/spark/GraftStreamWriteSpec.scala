@@ -177,6 +177,38 @@ class GraftStreamWriteSpec extends AnyFunSuite {
     assert(spark.read.format("graft").load(root).count() == 800L)
   }
 
+  test("an empty untilBatch snapshot answers the manifest-only aggregates " +
+      "over zero rows, on the cached and the distributed manifest path") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-tt-empty").toString
+    val cfg = EncoderConfig(chunkTokens = 1 << 10, numPartitions = 1)
+    (1 to 2).foreach { b =>
+      val d = f"$root/batch=$b%05d"
+      Lineage.encodeToDir(spark.createDataset(rowsOf(b)), d, cfg)
+      Lineage.markBatchReady(spark, d)
+    }
+    def check(path: String): Unit = {
+      spark.read.format("graft").option("untilBatch", "0").load(root)
+        .createOrReplaceTempView("graft_tt_empty")
+      val g = spark.sql("SELECT count(*), min(doc_id), max(doc_id), " +
+        "sum(n_tok) FROM graft_tt_empty")
+      assert(g.queryExecution.executedPlan.toString
+        .contains("manifest-only aggregate"), s"$path: not pushed")
+      val r = g.collect()(0)
+      assert(r.getLong(0) == 0L && r.isNullAt(1) && r.isNullAt(2) &&
+        r.isNullAt(3), s"$path: $r")
+      val bySource = spark.sql(
+        "SELECT source, count(*), sum(n_tok) FROM graft_tt_empty GROUP BY source")
+      assert(bySource.queryExecution.executedPlan.toString
+        .contains("manifest-only grouped aggregate"), s"$path: not pushed")
+      assert(bySource.collect().isEmpty, path)
+    }
+    check("cached")
+    spark.conf.set("graft.plan.localManifestBytes", "0")
+    try check("distributed")
+    finally spark.conf.unset("graft.plan.localManifestBytes")
+  }
+
   test("expireBatchesBelow: retention never breaks a checkpointed reader") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-exp").toString

@@ -4,10 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.sources._
 import graft.engine.{EncoderConfig, Lineage, SeqRow}
 
-/** The driver-side planning path (ManifestCache + admitsAll) must be
-  * chunk-for-chunk identical to the distributed Dataset pruning — they are
-  * two implementations of ONE contract, and this spec is the thing that
-  * keeps them from diverging. Also pins the cache's coherence story: an
+/** The driver-side planning path (ManifestCache, in-process prune) must
+  * be chunk-for-chunk identical to the distributed Dataset pruning — they
+  * are two executors of ONE zone predicate (`ZonePrune.mayMatch`), and
+  * this spec is the thing that keeps them from diverging. Also pins the cache's coherence story: an
   * append is visible to the very next query (listing-marker validation),
   * and disabling the local path (graft.plan.localManifestBytes=0) routes
   * planning back through the distributed job with the same answer. */
