@@ -317,6 +317,12 @@ object Fsst {
 
   def decompressWith(table: SymbolTable, data: Array[Byte], from: Int,
                      until: Int, outLen: Int): Array[Byte] = {
+    // one code byte yields at most MaxSymbolLen output bytes: a declared
+    // length past that is corrupt, and must fail BEFORE the allocation (a
+    // few-byte CRC-valid frame could otherwise ask for a 2 GB array)
+    if (outLen.toLong > math.max(until - from, 0).toLong * MaxSymbolLen)
+      throw CorruptException(
+        s"fsst raw length $outLen exceeds ${until - from} codes")
     val out = new Array[Byte](outLen)
     var pos = from
     var o = 0

@@ -52,45 +52,24 @@ object Encoder {
     parted.sortWithinPartitions(col("source"), col("doc_id"))
   }
 
-  /** Partition slicer: accumulate rows until the token budget, emit a chunk.
-    * At most one partially-filled chunk per partition (the tail). */
+  /** Partition slicer: pull rows into the ChunkSlicer until it is full,
+    * emit a chunk. At most one partially-filled chunk per partition (the
+    * tail). */
   private[graft] def chunkIterator(rows: Iterator[SeqRow], partId: Int,
                                     cfg: EncoderConfig): Iterator[EncodedChunk] =
     new Iterator[EncodedChunk] {
-      private var seqNo = 0
       // built once per task, not per chunk (bucket construction is the cost)
-      private val sharedMeta =
-        cfg.sharedMetaDict.map(MetaDict.fromBytes).orNull
+      private val slicer = new ChunkSlicer(partId, cfg.chunkTokens,
+        cfg.sharedMetaDict.map(MetaDict.fromBytes).orNull)
       def hasNext: Boolean = rows.hasNext
       def next(): EncodedChunk = {
-        val docIds = scala.collection.mutable.ArrayBuilder.make[String]
-        val sources = scala.collection.mutable.ArrayBuilder.make[String]
-        val lens = scala.collection.mutable.ArrayBuilder.make[Int]
-        var tokens = new Array[Int](math.min(cfg.chunkTokens, 1 << 16))
-        var nTok = 0
-        var nRows = 0
-        while (rows.hasNext && nRows < cfg.maxRowsPerChunk &&
-               (nRows == 0 || nTok < cfg.chunkTokens)) {
+        while (rows.hasNext && !slicer.full) {
           val r = rows.next()
           require(r.n_tok == r.tokens.length,
             s"row ${r.doc_id}: n_tok ${r.n_tok} != tokens.length ${r.tokens.length}")
-          docIds += r.doc_id
-          sources += r.source
-          lens += r.n_tok
-          if (nTok + r.n_tok > tokens.length) {
-            val want = math.max(tokens.length * 2L, nTok.toLong + r.n_tok)
-            tokens = java.util.Arrays.copyOf(tokens,
-              math.min(want, Int.MaxValue - 8).toInt)
-          }
-          System.arraycopy(r.tokens, 0, tokens, nTok, r.n_tok)
-          nTok += r.n_tok
-          nRows += 1
+          slicer.add(r.doc_id, r.source, r.tokens)
         }
-        val chunk = ChunkBuilder.build(partId, seqNo, docIds.result(),
-          sources.result(), java.util.Arrays.copyOf(tokens, nTok),
-          lens.result(), sharedMeta)
-        seqNo += 1
-        chunk
+        slicer.take()
       }
     }
 

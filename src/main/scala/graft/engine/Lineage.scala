@@ -142,9 +142,7 @@ object Lineage {
     private val dataTmp =
       new Path(s"$dir/data/${pn(pid)}.graft.inprogress-$attempt")
     private val dataFinal = new Path(s"$dir/data/${pn(pid)}.graft")
-    private val rows = new scala.collection.mutable.ArrayBuffer[ManifestRow]()
-    private var offset = 0L
-    private var out: org.apache.hadoop.fs.FSDataOutputStream = _
+    private val appender = new ChunkAppender(fs, dataTmp)
 
     // a DELETE-rewritten partition lives at gen>0 (part-N.gK.json) — it is
     // every bit as committed as gen 0, and a resume that missed it would
@@ -152,26 +150,17 @@ object Lineage {
     def alreadyDone: Boolean = fs.exists(manifest) ||
       fs.globStatus(new Path(s"$dir/_lineage/${pn(pid)}.g*.json")).nonEmpty
 
-    def add(c: EncodedChunk): Unit = {
-      if (out == null) out = fs.create(dataTmp, true)
-      val rec = frameChunk(c)
-      out.write(rec)
-      rows += ManifestRow(c.part_id, c.seq, c.chunk_id, c.codec, c.n_rows,
-        c.n_tokens, c.raw_bytes, c.enc_bytes, c.crc32, offset,
-        rec.length.toLong, c.min_doc_id, c.max_doc_id, c.min_tok,
-        c.max_tok, c.tok_set, c.src_stats)
-      offset += rec.length
-    }
+    def add(c: EncodedChunk): Unit = appender.add(c)
 
     def abort(): Unit = {
-      if (out != null) out.close()
+      appender.close()
       fs.delete(dataTmp, false): Unit
     }
 
     /** Returns true iff THIS attempt committed the manifest. */
     def commit(): Boolean = {
-      if (out == null) out = fs.create(dataTmp, true) // empty partition: 0 chunks
-      out.close()
+      appender.open() // empty partition: 0 chunks, still an empty data file
+      appender.close()
       // Re-check the commit point IMMEDIATELY before touching dataFinal: a
       // losing speculative/zombie attempt that passed the entry check may
       // only reach here after the winner committed data+manifest — deleting
@@ -183,7 +172,7 @@ object Lineage {
       }
       val finalLen =
         if (fs.exists(dataFinal)) fs.getFileStatus(dataFinal).getLen else -1L
-      if (finalLen == offset && sameBytes(fs, dataFinal, dataTmp)) {
+      if (finalLen == appender.length && sameBytes(fs, dataFinal, dataTmp)) {
         // A byte-identical data file is already in place (VERIFIED by
         // content compare, not length alone — an orphan from a run with a
         // different chunking could coincide on length): encode is
@@ -209,17 +198,56 @@ object Lineage {
         false // committed by another attempt; identical bytes already live
       } else {
         val mTmp = new Path(s"$dir/_lineage/${pn(pid)}.json.inprogress-$attempt")
-        val mOut = fs.create(mTmp, true)
-        rows.foreach { r =>
-          mOut.write((manifestJson(r) + "\n").getBytes("UTF-8"))
-        }
-        mOut.close()
+        writeManifest(fs, mTmp, appender.rows)
         if (!fs.rename(mTmp, manifest)) { // commit point
           if (fs.exists(manifest)) { fs.delete(mTmp, false): Unit; false }
           else throw new java.io.IOException(s"rename failed: $mTmp -> $manifest")
         } else true
       }
     }
+  }
+
+  /** Frames chunks into ONE data file and builds each chunk's manifest row
+    * at its running offset — the append step PartitionCommitter and
+    * GroupStager (and through it the DELETE rewrite) share. The file is
+    * created on the first append (or by `open`). */
+  private final class ChunkAppender(fs: FileSystem, path: Path) {
+    val rows = new scala.collection.mutable.ArrayBuffer[ManifestRow]()
+    private var offset = 0L
+    private var out: org.apache.hadoop.fs.FSDataOutputStream = _
+
+    /** Bytes appended so far. */
+    def length: Long = offset
+
+    def add(c: EncodedChunk): Unit = {
+      val rec = frameChunk(c)
+      write(rec, ManifestRow(c.part_id, c.seq, c.chunk_id, c.codec, c.n_rows,
+        c.n_tokens, c.raw_bytes, c.enc_bytes, c.crc32, offset,
+        rec.length.toLong, c.min_doc_id, c.max_doc_id, c.min_tok,
+        c.max_tok, c.tok_set, c.src_stats))
+    }
+
+    /** Append an already-framed chunk verbatim; `m` is its manifest row. */
+    def addFrame(frame: Array[Byte], m: ManifestRow): Unit =
+      write(frame, m.copy(offset = offset))
+
+    private def write(frame: Array[Byte], row: ManifestRow): Unit = {
+      open()
+      out.write(frame)
+      rows += row
+      offset += frame.length
+    }
+
+    def open(): Unit = if (out == null) out = fs.create(path, true)
+    def close(): Unit = if (out != null) out.close()
+  }
+
+  /** Write a manifest file at `p`: one JSON line per chunk. */
+  private def writeManifest(fs: FileSystem, p: Path,
+                            rows: Iterable[ManifestRow]): Unit = {
+    val out = fs.create(p, true)
+    rows.foreach(r => out.write((manifestJson(r) + "\n").getBytes("UTF-8")))
+    out.close()
   }
 
   /** Streaming byte-equality of two files (1 MB buffers). Only consulted in
@@ -330,18 +358,26 @@ object Lineage {
     * wins. A DELETE rewrite commits part-N.g(k+1).json by atomic rename and
     * only then removes the superseded file, so a racing lister may see both
     * generations of a partition — never neither — and this selection makes
-    * either view consistent. Foreign .json names (none are produced by this
-    * engine) pass through untouched. */
+    * either view consistent. Only names `manifestPidGen` parses are
+    * manifests. While a row-level commit's intent is pending, the listing
+    * is read through it (`intentHidden`), so a read returns exactly the
+    * commit's pre-state or its post-state, never both copies. */
   private def manifestFiles(fs: FileSystem, dir: String)
       : Array[org.apache.hadoop.fs.FileStatus] = {
-    val all = fs.listStatus(new Path(s"$dir/_lineage"))
-      .filter(_.getPath.getName.endsWith(".json"))
-    val (known, foreign) =
-      all.partition(f => manifestPidGen(f.getPath.getName).isDefined)
-    known.groupBy(f => manifestPidGen(f.getPath.getName).get._1)
-      .valuesIterator
-      .map(_.maxBy(f => manifestPidGen(f.getPath.getName).get._2))
-      .toArray ++ foreign
+    val listing = fs.listStatus(new Path(s"$dir/_lineage"))
+    val manifests = listing.flatMap(f =>
+      manifestPidGen(f.getPath.getName).map(pg => (f, pg._1, pg._2)))
+    val hidden =
+      if (!listing.exists(_.getPath.getName == ReplaceIntentName))
+        Set.empty[Int]
+      else intentHidden(fs, dir, manifests.map(_._2).toSet) match {
+        case Some(h) => h
+        // the intent went away after the listing: its commit (or a
+        // recovery) finished, so a fresh listing holds no pending intent
+        case None => return manifestFiles(fs, dir)
+      }
+    manifests.filterNot(m => hidden(m._2)).groupBy(_._2).valuesIterator
+      .map(_.maxBy(_._3)._1).toArray
   }
 
   /** Driver-local manifest read for the planning cache: ONE listing, its
@@ -445,7 +481,9 @@ object Lineage {
     * (zone/SrcStats metadata only) decides the work: Keep chunks are
     * byte-copied verbatim (no decode, CRC intact — and a fully-Keep
     * partition is not touched at all), Drop chunks vanish without a read,
-    * Maybe chunks decode, drop matching rows exactly, and re-encode. The
+    * Maybe chunks decode, drop matching rows exactly, and re-encode. Each
+    * rewritten partition is staged by a `GroupStager` and published by
+    * `swapInGroup`, the row-level commit's generation swap. The
     * per-partition commit point is the atomic rename of the new manifest;
     * `manifestFiles` picks the highest generation, so a racing reader sees
     * the old or the new manifest, never neither or a mix of rows. The
@@ -504,23 +542,16 @@ object Lineage {
                                pred: SeqRow => Boolean,
                                dictBytes: Option[Array[Byte]]): DeleteStats = {
     val fs = FileSystem.get(new java.net.URI(dir), conf)
-    val oldManifest = new Path(s"$dir/_lineage/$manifestName")
-    val rows = readManifestFile(fs, oldManifest)
+    val rows = readManifestFile(fs, new Path(s"$dir/_lineage/$manifestName"))
     val classes = rows.map(classify)
     val none = DeleteStats(0, 0, 0, 0, 0)
     // fully-Keep partition: provably holds no matching row — untouched
     if (classes.forall(_ == DeleteClass.Keep)) return none
-    val newGen = oldGen + 1
-    val attempt = java.util.UUID.randomUUID().toString
     val table = dictBytes.map(MetaDict.fromBytes).orNull
-    val dataTmp =
-      new Path(s"$dir/data/${pn(pid)}${genSfx(newGen)}.graft.inprogress-$attempt")
-    val out = fs.create(dataTmp, true)
-    val newRows = new scala.collection.mutable.ArrayBuffer[ManifestRow]()
-    var off = 0L
+    val stager = new GroupStager(fs, dir, pid,
+      java.util.UUID.randomUUID().toString)
     var dropped = 0L; var rewritten = 0L; var copied = 0L; var rowsDel = 0L
-    val oldData = dataPath(dir, pid, oldGen)
-    val in = if (rows.nonEmpty) fs.open(oldData) else null
+    val in = if (rows.nonEmpty) fs.open(dataPath(dir, pid, oldGen)) else null
     def copyVerbatim(m: ManifestRow): Unit = {
       if (m.length < 0 || m.length > Int.MaxValue - 8)
         throw graft.codec.CorruptException(
@@ -528,9 +559,7 @@ object Lineage {
       in.seek(m.offset)
       val buf = new Array[Byte](m.length.toInt)
       in.readFully(buf)
-      out.write(buf)
-      newRows += m.copy(offset = off, gen = newGen)
-      off += m.length
+      stager.addFrame(buf, m)
       copied += 1
     }
     try {
@@ -544,47 +573,26 @@ object Lineage {
           if (kept.isEmpty) { dropped += 1; rowsDel += m.n_rows }
           else if (kept.length == m.n_rows) copyVerbatim(m) // exact test: 0 hits
           else {
-            val ch = ChunkBuilder.build(pid, m.seq, kept.map(_.doc_id),
+            stager.add(ChunkBuilder.build(pid, m.seq, kept.map(_.doc_id),
               kept.map(_.source), kept.flatMap(_.tokens),
-              kept.map(_.tokens.length), table)
-            val rec = frameChunk(ch)
-            out.write(rec)
-            newRows += ManifestRow(pid, m.seq, ch.chunk_id, ch.codec,
-              ch.n_rows, ch.n_tokens, ch.raw_bytes, ch.enc_bytes, ch.crc32,
-              off, rec.length.toLong, ch.min_doc_id, ch.max_doc_id,
-              ch.min_tok, ch.max_tok, ch.tok_set, ch.src_stats, newGen)
-            off += rec.length
+              kept.map(_.tokens.length), table))
             rewritten += 1
             rowsDel += (m.n_rows - kept.length)
           }
       }
-    } finally {
-      if (in != null) in.close()
-      out.close()
-    }
+    } catch { case t: Throwable => stager.abort(); throw t }
+    finally if (in != null) in.close()
     if (dropped == 0 && rewritten == 0) {
       // Maybe chunks existed but the exact row test hit nothing anywhere:
       // the table is unchanged — discard the speculative copy
-      fs.delete(dataTmp, false)
+      stager.abort()
       return none
     }
-    val dataFinal = dataPath(dir, pid, newGen)
-    if (fs.exists(dataFinal)) fs.delete(dataFinal, false) // dead prior attempt
-    if (!fs.rename(dataTmp, dataFinal))
-      throw new java.io.IOException(s"rename failed: $dataTmp -> $dataFinal")
-    val mTmp = new Path(
-      s"$dir/_lineage/${pn(pid)}${genSfx(newGen)}.json.inprogress-$attempt")
-    val mOut = fs.create(mTmp, true)
-    newRows.foreach(r => mOut.write((manifestJson(r) + "\n").getBytes("UTF-8")))
-    mOut.close()
-    val mFinal = manifestPath(dir, pid, newGen)
-    if (fs.exists(mFinal)) fs.delete(mFinal, false) // dead prior attempt
-    if (!fs.rename(mTmp, mFinal)) // commit point
-      throw new java.io.IOException(s"rename failed: $mTmp -> $mFinal")
-    // retire the superseded generation (manifest first: once it is gone no
-    // new reader can resolve the old data file)
-    fs.delete(oldManifest, false)
-    fs.delete(oldData, false)
+    // the listing this task planned from is the one to supersede: oldGen
+    // becomes oldGen + 1 (an emptied partition gets an empty generation)
+    val staged = stager.finish()
+    swapInGroup(fs, dir, pid, staged.map(_._1),
+      staged.fold(Seq.empty[ManifestRow])(_._2), Some(Array((pid, oldGen))))
     DeleteStats(1, dropped, rewritten, copied, rowsDel)
   }
 
@@ -609,40 +617,34 @@ object Lineage {
     }
   }
 
-  /** Executor-side staging for ONE replacement group (lineage partition):
-    * chunks append to a `.replace.inprogress-<attempt>` data file; nothing
-    * becomes visible until the driver's `swapInGroup` renames it under the
-    * next generation. Manifest rows carry gen=0 placeholders — the swap
-    * stamps the real generation (only the driver, holding the listing,
-    * knows it). */
+  /** Executor-side staging for ONE replacement group (lineage partition)
+    * of a row-level commit or a DELETE rewrite: chunks append to a
+    * `.replace.inprogress-<attempt>` data file; nothing becomes visible
+    * until `swapInGroup` renames it under the next generation. Manifest
+    * rows carry placeholder generations — the swap stamps the real one
+    * (only the caller holding the listing knows it). */
   private[graft] final class GroupStager(fs: FileSystem, dir: String,
                                          pid: Int, attempt: String) {
     private val staged =
       new Path(s"$dir/data/${pn(math.max(pid, 0))}.replace.inprogress-$attempt")
-    private val rows = new scala.collection.mutable.ArrayBuffer[ManifestRow]()
-    private var offset = 0L
-    private var out: org.apache.hadoop.fs.FSDataOutputStream = _
+    private val appender = new ChunkAppender(fs, staged)
 
-    def add(c: EncodedChunk): Unit = {
-      if (out == null) out = fs.create(staged, true)
-      val rec = frameChunk(c)
-      out.write(rec)
-      rows += ManifestRow(c.part_id, c.seq, c.chunk_id, c.codec, c.n_rows,
-        c.n_tokens, c.raw_bytes, c.enc_bytes, c.crc32, offset,
-        rec.length.toLong, c.min_doc_id, c.max_doc_id, c.min_tok,
-        c.max_tok, c.tok_set, c.src_stats)
-      offset += rec.length
-    }
+    def add(c: EncodedChunk): Unit = appender.add(c)
+
+    /** Append an already-framed chunk verbatim (the DELETE rewrite's Keep
+      * chunks: no decode, CRC intact). */
+    def addFrame(frame: Array[Byte], m: ManifestRow): Unit =
+      appender.addFrame(frame, m)
 
     /** Close and return (staged path, manifest rows); None when no chunk
       * was ever added (the staged file, if any, is removed). */
     def finish(): Option[(String, Seq[ManifestRow])] = {
-      if (out != null) out.close()
-      if (rows.isEmpty) { fs.delete(staged, false); None }
-      else Some((staged.toString, rows.toSeq))
+      appender.close()
+      if (appender.rows.isEmpty) { fs.delete(staged, false); None }
+      else Some((staged.toString, appender.rows.toSeq))
     }
     def abort(): Unit = {
-      if (out != null) out.close()
+      appender.close()
       fs.delete(staged, false): Unit
     }
   }
@@ -654,17 +656,13 @@ object Lineage {
     fs.listStatus(new Path(s"$dir/_lineage"))
       .flatMap(s => manifestPidGen(s.getPath.getName))
 
-  private[graft] def maxCommittedGen(fs: FileSystem, dir: String,
-                                     pid: Int): Option[Int] =
-    committedPidGens(fs, dir)
-      .collect { case (p, g) if p == pid => g }
-      .maxOption
-
-  /** Driver-side commit of one replacement group: the staged data file
-    * (or an EMPTY one — the group's rows were all deleted) becomes the
-    * partition's next generation, atomic at the manifest rename, exactly
-    * the DELETE rewrite's discipline; every older generation is retired
-    * after the swap. `rows` get the new generation and `pid` stamped. */
+  /** The ONE generation swap, shared by the DELETE rewrite and the
+    * row-level UPDATE/MERGE commit: the staged data file (or an EMPTY one —
+    * the group's rows were all deleted) becomes the partition's next
+    * generation, atomic at the manifest rename; every older generation is
+    * retired after the swap. `rows` get the new generation and `pid`
+    * stamped. `pidGens` is the caller's listing of committed (pid, gen)
+    * pairs (one listing for many swaps); without it the swap lists. */
   private[graft] def swapInGroup(fs: FileSystem, dir: String, pid: Int,
                                  staged: Option[String],
                                  rows: Seq[ManifestRow],
@@ -684,15 +682,12 @@ object Lineage {
     val attempt = java.util.UUID.randomUUID().toString
     val mTmp = new Path(
       s"$dir/_lineage/${pn(pid)}${genSfx(newGen)}.json.inprogress-$attempt")
-    val mOut = fs.create(mTmp, true)
     // part_id (and therefore chunk_id = pid<<32|seq) is stamped HERE: a
     // MERGE-inserted group's pid is only decided at commit. The manifest
     // is authoritative for identity; the frame-embedded ids are advisory
-    rows.foreach(r => mOut.write(
-      (manifestJson(r.copy(part_id = pid,
-        chunk_id = (pid.toLong << 32) | (r.seq.toLong & 0xffffffffL),
-        gen = newGen)) + "\n").getBytes("UTF-8")))
-    mOut.close()
+    writeManifest(fs, mTmp, rows.map(r => r.copy(part_id = pid,
+      chunk_id = (pid.toLong << 32) | (r.seq.toLong & 0xffffffffL),
+      gen = newGen)))
     val mFinal = manifestPath(dir, pid, newGen)
     if (fs.exists(mFinal)) fs.delete(mFinal, false) // dead prior attempt
     if (!fs.rename(mTmp, mFinal)) // commit point
@@ -725,8 +720,9 @@ object Lineage {
     *     pre-existing pid, so deleting them restores the pre-DML table).
     * Both paths end by deleting the intent. Single-writer contract, same
     * as DELETE/vacuum. */
+  private val ReplaceIntentName = "_replace_intent.json"
   private def replaceIntentPath(dir: String) =
-    new Path(s"$dir/_lineage/_replace_intent.json")
+    new Path(s"$dir/_lineage/$ReplaceIntentName")
 
   private[graft] def writeReplaceIntent(fs: FileSystem, dir: String,
                                         fresh: Seq[Int],
@@ -734,7 +730,7 @@ object Lineage {
     val json = s"""{"fresh":[${fresh.mkString(",")}],""" +
       s""""retire":[${retire.mkString(",")}]}"""
     val tmp = new Path(
-      s"$dir/_lineage/_replace_intent.json.inprogress-${java.util.UUID.randomUUID()}")
+      s"$dir/_lineage/$ReplaceIntentName.inprogress-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, true)
     out.write(json.getBytes("UTF-8"))
     out.close()
@@ -747,35 +743,43 @@ object Lineage {
   private[graft] def clearReplaceIntent(fs: FileSystem, dir: String): Unit =
     fs.delete(replaceIntentPath(dir), false): Unit
 
+  /** The pending intent's (fresh, retire) pids; None without an intent.
+    * A garbled intent throws: a wrong roll direction loses rows, so
+    * refusing to guess loudly is the only safe behaviour. */
   private def readReplaceIntent(fs: FileSystem,
                                 dir: String): Option[(Seq[Int], Seq[Int])] = {
     val p = replaceIntentPath(dir)
-    if (!fs.exists(p)) return None
-    try {
-      val txt = new String(readAll(fs, p), "UTF-8")
-      val Pat = """\{"fresh":\[([0-9,]*)\],"retire":\[([0-9,]*)\]\}""".r
-      txt.trim match {
-        case Pat(f, r) =>
-          def ints(s: String): Seq[Int] =
-            if (s.isEmpty) Seq.empty else s.split(',').toSeq.map(_.toInt)
-          Some((ints(f), ints(r)))
-        case _ => None // unreadable: surfaced below, never silently dropped
-      }
-    } catch { case _: java.io.IOException => None }
+    val txt =
+      try new String(readAll(fs, p), "UTF-8")
+      catch { case _: java.io.FileNotFoundException => return None }
+    val Pat = """\{"fresh":\[([0-9,]*)\],"retire":\[([0-9,]*)\]\}""".r
+    txt.trim match {
+      case Pat(f, r) =>
+        def ints(s: String): Seq[Int] =
+          if (s.isEmpty) Seq.empty else s.split(',').toSeq.map(_.toInt)
+        Some((ints(f), ints(r)))
+      case _ => throw new java.io.IOException(
+        s"unreadable replace intent at $p; resolve manually")
+    }
   }
+
+  /** The read-only view of a pending intent: the pids a read must skip so
+    * that it sees the state recovery would leave. Every fresh pid committed
+    * -> the retire pids (roll forward: the replacement rows are all live);
+    * otherwise the fresh pids (roll back: the pre-DML table). None when the
+    * intent is gone. */
+  private def intentHidden(fs: FileSystem, dir: String,
+                           committed: Set[Int]): Option[Set[Int]] =
+    readReplaceIntent(fs, dir).map { case (fresh, retire) =>
+      if (fresh.forall(committed)) retire.toSet else fresh.toSet
+    }
 
   /** Complete (or undo) a dead row-level commit — see writeReplaceIntent.
     * No-op without an intent file. Returns true when an intent was found
     * and resolved. */
-  def recoverReplaceIntent(fs: FileSystem, dir: String): Boolean = {
-    val p = replaceIntentPath(dir)
-    if (!fs.exists(p)) return false
+  def recoverReplaceIntent(fs: FileSystem, dir: String): Boolean =
     readReplaceIntent(fs, dir) match {
-      case None =>
-        // garbled intent: refuse to guess — a wrong roll direction loses
-        // rows. Loud is the only safe behavior.
-        throw new java.io.IOException(
-          s"unreadable replace intent at $p; resolve manually")
+      case None => false
       case Some((fresh, retire)) =>
         val committed = committedPidGens(fs, dir)
         val byPid = committed.groupBy(_._1)
@@ -817,7 +821,6 @@ object Lineage {
         clearReplaceIntent(fs, dir)
         true
     }
-  }
 
   final case class VacuumStats(inprogressRemoved: Long,
                                supersededRemoved: Long,

@@ -43,15 +43,14 @@ final case class EncodedChunk(
   * ~4B * chunkTokens + strings, so the default 1M tokens keeps every task
   * well under executor memory at any cluster scale. */
 final case class EncoderConfig(
-    chunkTokens: Int = 1 << 20,
-    maxRowsPerChunk: Int = 1 << 16,
+    chunkTokens: Int = ChunkSlicer.DefaultChunkTokens,
     numPartitions: Int = 0, // 0 = keep upstream partitioning
     // serialized shared FSST table (Fsst.tableToBytes) for the doc_id meta
     // section: trained once per TABLE, stored once (the lineage dir keeps it
     // in _lineage/_shared_dict.bin), coded against by every chunk — a few KB
     // captured into task closures, immutable after training
     sharedMetaDict: Option[Array[Byte]] = None) {
-  require(chunkTokens > 0 && maxRowsPerChunk > 0)
+  require(chunkTokens > 0)
 }
 
 /** Lexicographic UNSIGNED byte order over UTF-8 encodings — the order Spark

@@ -20,7 +20,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.engine.{ChunkBuilder, EncoderConfig, Lineage, MetaDict, SeqRow, TokenSketch}
+import graft.engine.{ChunkBuilder, ChunkSlicer, EncoderConfig, Lineage, MetaDict, SeqRow, TokenSketch}
 
 /** `spark.read.format("graft").load(dir)` — a DataSourceV2 reader over a
   * lineage table dir, making the engine's storage a first-class Spark
@@ -749,6 +749,10 @@ private[spark] object GraftPlanning {
       .reduce(_ union _)
   }
 
+  /** How many rows to collect to prove a result exceeds `cap`: cap + 1,
+    * clamped, since cap + 1 wraps to Int.MinValue at Int.MaxValue. */
+  def overCap(cap: Int): Int = (cap.toLong + 1).min(Int.MaxValue).toInt
+
   private def planCap(spark: SparkSession): Int = {
     val capStr = spark.conf.get("graft.plan.maxChunks", "2000000")
     capStr.toIntOption.filter(_ > 0).getOrElse(
@@ -781,7 +785,7 @@ private[spark] object GraftPlanning {
                      pushed: Array[Filter],
                      probes: Array[Int]): Array[(String, Lineage.ManifestRow)] = {
     val cap = planCap(spark)
-    val bound = (cap.toLong + 1).min(Int.MaxValue).toInt // cap + 1 may wrap
+    val bound = overCap(cap)
     val admit = chunkPredicate(pushed, probes)
     val rows = localManifests(spark, dirs) match {
       case Some(local) =>
@@ -1040,7 +1044,7 @@ class GraftSourceAggScan(path: String, cols: Seq[GraftAggCol],
         }.toDF("source", "rows", "tokens")
         val out = per.groupBy(col("source"))
           .agg(sum(col("rows")).as("rows"), sum(col("tokens")).as("tokens"))
-          .limit(cap + 1)
+          .limit(GraftPlanning.overCap(cap))
           .collect()
           .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
         lastMetaFallbackChunks = fallback.value.toInt
@@ -1146,9 +1150,9 @@ case class GraftOffset(lastBatch: Long)
   * exactly to it. Batches must become ready in ascending number order —
   * the streaming sink guarantees it; manual trees marking out of order
   * would skip the late-marked earlier batch. Produce with
-  * `writeStream.format("graft")` (or StreamingEncoder.writeToLineageDir),
-  * consume here — the encoded corpus becomes an append-only stream with
-  * the same pruning and column semantics as the batch source. */
+  * `writeStream.format("graft")`, consume here — the encoded corpus
+  * becomes an append-only stream with the same pruning and column
+  * semantics as the batch source. */
 class GraftMicroBatchStream(root: String, pushed: Array[Filter],
                             required: StructType, probes: Array[Int],
                             maxBatchesPerTrigger: Option[Int])
@@ -1265,7 +1269,7 @@ class GraftWriteBuilder(path: String, info: LogicalWriteInfo)
   override def truncate(): WriteBuilder = { doTruncate = true; this }
   override def build(): Write = {
     val chunkTokens = Option(info.options.get("chunktokens"))
-      .map(_.toInt).getOrElse(1 << 20)
+      .map(_.toInt).getOrElse(ChunkSlicer.DefaultChunkTokens)
     require(chunkTokens > 0, s"chunkTokens must be positive, got $chunkTokens")
     val resume = Option(info.options.get("resume")).exists(_.toBoolean)
     val arrange = Option(info.options.get("arrange")).map { s =>
@@ -1350,10 +1354,8 @@ class GraftWrite(path: String, inputSchema: StructType, doTruncate: Boolean,
       else {
         // gen-aware parse: a DELETE-rewritten partition lives at
         // part-N.gK.json and still occupies part id N
-        val committed = fs.listStatus(new Path(s"$path/_lineage"))
-          .map(_.getPath.getName)
-          .flatMap(n => Lineage.manifestPidGen(n).map(_._1))
-        if (committed.isEmpty) 0 else committed.max + 1
+        Lineage.committedPidGens(fs, path).map(_._1).maxOption
+          .fold(0)(_ + 1)
       }
     // Bucket-layout marker lifecycle (what makes storage-partitioned joins
     // SOUND — see Lineage.writeBucketMarker): an arranged write into a
@@ -1494,22 +1496,11 @@ class GraftDataWriter(dir: String, conf: Configuration, pid: Int,
   // in plain append the partition ids are fresh, so alreadyDone here means
   // a task RETRY of this very write — the committer settles that race
   private val skip = resume && committer.alreadyDone
-  private val dict = dictBytes.map(MetaDict.fromBytes).orNull
-  private val maxRows = 1 << 16
-
-  private var seqNo = 0
-  private val docIds = scala.collection.mutable.ArrayBuffer.empty[String]
-  private val sources = scala.collection.mutable.ArrayBuffer.empty[String]
-  private val lens = scala.collection.mutable.ArrayBuffer.empty[Int]
-  private var toks = new Array[Int](math.min(chunkTokens, 1 << 16))
-  private var nTok = 0
+  private val slicer = new ChunkSlicer(pid, chunkTokens,
+    dictBytes.map(MetaDict.fromBytes).orNull)
 
   override def write(row: InternalRow): Unit = if (!skip) {
-    // push-mode twin of Encoder.chunkIterator's slicing: flush BEFORE
-    // appending once the previous row crossed the budget — identical
-    // grouping to the pull version
-    if (docIds.nonEmpty && (nTok >= chunkTokens || docIds.length >= maxRows))
-      flush()
+    if (slicer.full) committer.add(slicer.take())
     if (row.isNullAt(0) || row.isNullAt(1) || row.isNullAt(2) ||
         row.isNullAt(3))
       throw new IllegalArgumentException(
@@ -1519,35 +1510,19 @@ class GraftDataWriter(dir: String, conf: Configuration, pid: Int,
     val n = row.getInt(2)
     require(n == arr.length,
       s"row ${row.getUTF8String(0)}: n_tok $n != tokens.length ${arr.length}")
-    docIds += row.getUTF8String(0).toString
-    sources += row.getUTF8String(3).toString
-    lens += n
-    if (nTok + n > toks.length) {
-      val want = math.max(toks.length * 2L, nTok.toLong + n)
-      toks = java.util.Arrays.copyOf(toks,
-        math.min(want, Int.MaxValue - 8).toInt)
-    }
-    System.arraycopy(arr, 0, toks, nTok, n)
-    nTok += n
-  }
-
-  private def flush(): Unit = {
-    committer.add(ChunkBuilder.build(pid, seqNo, docIds.toArray,
-      sources.toArray, java.util.Arrays.copyOf(toks, nTok), lens.toArray,
-      dict))
-    seqNo += 1
-    docIds.clear(); sources.clear(); lens.clear(); nTok = 0
+    slicer.add(row.getUTF8String(0).toString, row.getUTF8String(3).toString,
+      arr)
   }
 
   override def commit(): WriterCommitMessage =
     if (skip) GraftCommitMessage(pid, committed = false)
     else {
-      if (docIds.nonEmpty) flush()
+      if (slicer.nonEmpty) committer.add(slicer.take())
       // an all-empty partition writes NOTHING — no empty data file, no
       // empty manifest. An all-empty streaming epoch therefore creates no
       // batch dir at all (and is never READY-marked); resume re-running
       // an empty partition is a deterministic no-op
-      if (seqNo == 0) GraftCommitMessage(pid, committed = false)
+      if (slicer.taken == 0) GraftCommitMessage(pid, committed = false)
       else GraftCommitMessage(pid, committer.commit())
     }
   override def abort(): Unit = if (!skip) committer.abort()

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.engine.{ChunkBuilder, Lineage, MetaDict}
+import graft.engine.{ChunkSlicer, Lineage, MetaDict}
 
 /** Group-based (copy-on-write) row-level operations — `UPDATE`, `MERGE
   * INTO`, and the DELETEs whose predicates `SupportsDelete` cannot take
@@ -190,39 +190,23 @@ class GraftReplaceWriterFactory(dir: String, conf: SerializableConfiguration,
 }
 
 /** Stages ONE replacement partition per Spark input partition; nothing is
-  * visible until the driver swap (chunk slicing and validation mirror the
-  * batch sink's writer; the staged chunks carry a placeholder part id —
-  * the manifest stamps the real one at commit). */
+  * visible until the driver swap. Chunks are sliced by the ChunkSlicer at
+  * the default token budget; the staged chunks carry a placeholder part id
+  * — the manifest stamps the real one at commit. */
 class GraftReplaceWriter(dir: String, conf: Configuration, partitionId: Int,
                          taskId: Long, dictBytes: Option[Array[Byte]],
                          docIdOrd: Int, toksOrd: Int, nTokOrd: Int,
-                         srcOrd: Int, chunkTokens: Int = 1 << 20)
+                         srcOrd: Int)
     extends DataWriter[InternalRow] {
   private val fs =
     org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir), conf)
   private val stager = new Lineage.GroupStager(fs, dir, partitionId,
     s"$taskId-${java.util.UUID.randomUUID()}")
-  private val dict = dictBytes.map(MetaDict.fromBytes).orNull
-  private val maxRows = 1 << 16
-
-  private var seqNo = 0
-  private val docIds = scala.collection.mutable.ArrayBuffer.empty[String]
-  private val sources = scala.collection.mutable.ArrayBuffer.empty[String]
-  private val lens = scala.collection.mutable.ArrayBuffer.empty[Int]
-  private var toks = new Array[Int](1 << 16)
-  private var nTok = 0
-
-  private def flush(): Unit = {
-    stager.add(ChunkBuilder.build(partitionId, seqNo, docIds.toArray,
-      sources.toArray, java.util.Arrays.copyOf(toks, nTok), lens.toArray,
-      dict))
-    seqNo += 1
-    docIds.clear(); sources.clear(); lens.clear(); nTok = 0
-  }
+  private val slicer = new ChunkSlicer(partitionId,
+    ChunkSlicer.DefaultChunkTokens, dictBytes.map(MetaDict.fromBytes).orNull)
 
   override def write(row: InternalRow): Unit = {
-    if (docIds.nonEmpty && (nTok >= chunkTokens || docIds.length >= maxRows))
-      flush()
+    if (slicer.full) stager.add(slicer.take())
     if (row.isNullAt(docIdOrd) || row.isNullAt(toksOrd) ||
         row.isNullAt(nTokOrd) || row.isNullAt(srcOrd))
       throw new IllegalArgumentException(
@@ -234,20 +218,12 @@ class GraftReplaceWriter(dir: String, conf: Configuration, partitionId: Int,
       s"row ${row.getUTF8String(docIdOrd)}: n_tok $n != tokens.length " +
         s"${arr.length} (an UPDATE that changes tokens must keep n_tok " +
         "consistent)")
-    docIds += row.getUTF8String(docIdOrd).toString
-    sources += row.getUTF8String(srcOrd).toString
-    lens += n
-    if (nTok + n > toks.length) {
-      val want = math.max(toks.length * 2L, nTok.toLong + n)
-      toks = java.util.Arrays.copyOf(toks,
-        math.min(want, Int.MaxValue - 8).toInt)
-    }
-    System.arraycopy(arr, 0, toks, nTok, n)
-    nTok += n
+    slicer.add(row.getUTF8String(docIdOrd).toString,
+      row.getUTF8String(srcOrd).toString, arr)
   }
 
   override def commit(): WriterCommitMessage = {
-    if (docIds.nonEmpty) flush()
+    if (slicer.nonEmpty) stager.add(slicer.take())
     GraftReplaceCommitMessage(stager.finish().map { case (staged, rows) =>
       GraftReplaceGroup(partitionId, staged, rows)
     })

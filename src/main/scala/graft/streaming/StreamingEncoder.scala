@@ -2,66 +2,17 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import graft.engine._
 
-/** Structured Streaming surface: the reference's incremental encoder protocol
+/** Structured Streaming helpers beside the graft sink. The encoding sink
+  * itself — pyppmd's incremental encoder protocol
   * (`PpmdCompressor.compress()` fed piecewise, model persisting across calls
-  * — `/root/reference/src/ext/_ppmdmodule.c:793-844`) recast as micro-batch
-  * encode: readStream -> per-batch chunk encode -> append to a lineage dir.
-  *
-  * Chunk-level state does NOT straddle batches (each batch closes its
-  * chunks, like `flush()` per call-group); exactly-once comes from the
-  * streaming checkpoint + the per-batch lineage subdirectory being written
-  * idempotently (re-run of a batch overwrites the same batch dir).
+  * — `src/ext/_ppmdmodule.c:793-844`) recast as micro-batch encode — is `writeStream.format("graft")`: one READY-marked lineage
+  * batch dir per epoch, written through the same per-partition committers
+  * as the batch sink (GraftStreamingWrite). This object holds the stateful
+  * ingest guards and the windowed token-rate feed that ride in front of it.
   */
 object StreamingEncoder {
-
-  /** Transform a streaming Dataset[SeqRow] into encoded chunk rows
-    * (streaming DataFrame). Partition-local, no shuffle: safe for
-    * append-mode streaming. */
-  def encodeStream(rows: Dataset[SeqRow],
-                   cfg: EncoderConfig = EncoderConfig()): Dataset[EncodedChunk] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows.mapPartitions { it =>
-      Encoder.chunkIterator(it, org.apache.spark.TaskContext.getPartitionId(),
-        cfg)
-    }
-  }
-
-  /** Sink the stream into a lineage directory, one subdir per micro-batch:
-    * dir/batch=N/{data,_lineage}. Restarting from the checkpoint re-runs an
-    * uncommitted batch; its dir is rewritten idempotently (same input =>
-    * byte-identical output, the chunk-determinism property). */
-  def writeToLineageDir(rows: Dataset[SeqRow], dir: String,
-                        checkpoint: String,
-                        cfg: EncoderConfig = EncoderConfig()): DataStreamWriter[SeqRow] =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[SeqRow], batchId: Long) =>
-        val sub = f"$dir/batch=$batchId%05d"
-        // tree-level stream marker BEFORE the batch dir appears: batch
-        // readers then apply READY-marker visibility from the first trigger
-        // (without it, a half-written batch 0 in a marker-less tree would
-        // read as an at-rest tree and be consumed mid-write)
-        Lineage.markStreamTree(batch.sparkSession, dir)
-        // READY marker after the batch fully commits (below): downstream
-        // incremental readers (readStream.format("graft")) must never
-        // consume a half-written batch dir — the marker, not the dir's
-        // existence, is their visibility point.
-        // Lineage resume needs explicit deterministic partitioning; when the
-        // caller left it open, pin it to the cluster's parallelism — stable
-        // for the lifetime of a deployment, which is what a batch retry sees.
-        val bcfg =
-          if (cfg.numPartitions > 0) cfg
-          else cfg.copy(numPartitions =
-            batch.sparkSession.sparkContext.defaultParallelism)
-        Lineage.encodeToDir(batch, sub, bcfg)
-        Lineage.markBatchReady(batch.sparkSession, sub)
-        ()
-      }
 
   /** Cross-batch streaming dedup with custom state
     * (flatMapGroupsWithState): keyed on the row's content hash, the first

@@ -182,7 +182,7 @@ class LineageSpec extends AnyFunSuite {
       SeqRow(bmpId, Array(1), 1, "s"),
       SeqRow(emojiId, Array(2), 1, "s"))
     Lineage.encodeToDir(spark.createDataset(rows), dir,
-      EncoderConfig(chunkTokens = 64, maxRowsPerChunk = 4, numPartitions = 1))
+      EncoderConfig(chunkTokens = 64, numPartitions = 1))
     assert(Lineage.readManifest(spark, dir).count() == 1L, "need ONE chunk")
     def idRange(lo: String, hi: String): Set[String] =
       read(dir).filter(col("doc_id") >= lo && col("doc_id") <= hi)

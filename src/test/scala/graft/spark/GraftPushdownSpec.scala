@@ -117,6 +117,28 @@ class GraftPushdownSpec extends AnyFunSuite {
       Map("books" -> "doc-00000000", "web" -> "doc-00000001"))
   }
 
+  test("GROUP BY source pushdown answers at graft.agg.maxGroups = " +
+      "Int.MaxValue on both executors (cap + 1 wraps)") {
+    def groups(): Set[(String, Long, Long)] = {
+      val q = spark.read.format("graft").load(dir).groupBy("source")
+        .agg(org.apache.spark.sql.functions.count(lit(1)),
+          org.apache.spark.sql.functions.sum(col("n_tok")))
+      assert(q.queryExecution.executedPlan.toString
+        .contains("manifest-only grouped aggregate"))
+      q.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    }
+    val want = Set(("books", 300L, 3600L), ("web", 1200L, 14400L))
+    spark.conf.set("graft.agg.maxGroups", Int.MaxValue.toString)
+    try {
+      assert(groups() == want)
+      spark.conf.set("graft.plan.localManifestBytes", "0")
+      assert(groups() == want)
+    } finally {
+      spark.conf.unset("graft.agg.maxGroups")
+      spark.conf.unset("graft.plan.localManifestBytes")
+    }
+  }
+
   test("grouped pushdown falls back to META reads for pre-SrcStats manifests") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._

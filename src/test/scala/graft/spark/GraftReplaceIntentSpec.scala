@@ -75,15 +75,63 @@ class GraftReplaceIntentSpec extends AnyFunSuite {
     rows1
   }
 
+  /** The table's doc_ids, sorted, read once through the driver-local
+    * manifest and once through the distributed one: both reads must agree
+    * and hold no doc_id twice. */
+  private def readBothWays(dir: String): Seq[String] = {
+    def ids(): Seq[String] = spark.read.format("graft").load(dir)
+      .select("doc_id").collect().map(_.getString(0)).toSeq.sorted
+    val local = ids()
+    spark.conf.set("graft.plan.localManifestBytes", "0")
+    val distributed =
+      try ids() finally spark.conf.unset("graft.plan.localManifestBytes")
+    assert(local == distributed, "the two manifest executors disagree")
+    assert(local.distinct.length == local.length, "a doc_id read twice")
+    local
+  }
+
+  test("a pending intent reads as the post-state (all fresh pids " +
+      "committed) or the pre-state (otherwise), on both manifest executors") {
+    val fwd = mk("view-fwd", 300, 3)
+    val all = tableRows(fwd)
+    crashBeforeRetirement(fwd)
+    assert(readBothWays(fwd) == all.toSeq.sorted)
+
+    val back = mk("view-back", 300, 3)
+    val before = tableRows(back)
+    addFreshGroup(back, 3,
+      Seq(SeqRow("zzz-rolled-back", Array(1, 2, 3), 3, "web")))
+    Lineage.writeReplaceIntent(fsFor(back), back, Seq(3, 4), Seq(0, 1))
+    assert(readBothWays(back) == before.toSeq.sorted)
+
+    // an unreadable intent fails the read as loudly as recovery does
+    val fs = fsFor(back)
+    val intent = new org.apache.hadoop.fs.Path(
+      s"$back/_lineage/_replace_intent.json")
+    fs.delete(intent, false)
+    val out = fs.create(intent, true)
+    out.write("{garbled".getBytes("UTF-8"))
+    out.close()
+    val conf = spark.sparkContext.hadoopConfiguration
+    Seq(intercept[java.io.IOException](
+        Lineage.readManifestLocal(conf, back, Long.MaxValue)),
+      intercept[java.io.IOException](Lineage.readManifest(spark, back)),
+      intercept[java.io.IOException](Lineage.recoverReplaceIntent(fs, back))
+    ).foreach(e => assert(e.getMessage.contains("unreadable replace intent"),
+      e.getMessage))
+  }
+
   test("roll forward: adds complete, crash before retirement -> recovery " +
       "finishes the retirement and the duplicates disappear") {
     val dir = mk("fwd", 300, 3)
     val fs = fsFor(dir)
     val all = tableRows(dir)
     crashBeforeRetirement(dir)
-    // crash here: pid 1 not retired -> its rows exist twice
+    // crash here: pid 1 not retired -> its rows exist twice on disk, and
+    // reads skip it through the pending intent
+    assert(Lineage.committedPidGens(fs, dir).contains((1, 0)))
     assert(Lineage.readManifest(spark, dir).collect()
-      .filter(_.part_id == 1).nonEmpty)
+      .filter(_.part_id == 1).isEmpty)
     assert(Lineage.recoverReplaceIntent(fs, dir))
     // retired: pid 1's top generation is empty; content identical to the
     // pre-crash table (rows1 now live in pid 3 only) — the COUNT check is

@@ -138,6 +138,36 @@ class GraftSourceSpec extends AnyFunSuite {
     }
   }
 
+  test("the row cap: 65,537 one-token rows in one partition chunk as " +
+      "65,536 + 1 on both writers, byte for byte") {
+    import spark.implicits._
+    val rs = (0 until 65537).map(i =>
+      SeqRow(f"doc-$i%08d", Array(i % 1000), 1, "s"))
+    // the default token budget (2^20) is never reached: only the row cap
+    // closes the first chunk
+    val dirA = java.nio.file.Files.createTempDirectory("graft-cap-a").toString
+    graft.engine.Lineage.encodeToDir(spark.createDataset(rs), dirA,
+      EncoderConfig(numPartitions = 1))
+    val dirB = java.nio.file.Files.createTempDirectory("graft-cap-b").toString
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(dirB, "_lineage"))
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(dirA, "_lineage/_shared_dict.bin"),
+      java.nio.file.Paths.get(dirB, "_lineage/_shared_dict.bin"))
+    spark.createDataset(rs).write.format("graft").mode("append")
+      .option("arrange", "1").save(dirB)
+    Seq(dirA, dirB).foreach { d =>
+      val chunkRows = Lineage.readManifest(spark, d).collect()
+        .sortBy(_.seq).map(_.n_rows).toSeq
+      assert(chunkRows == Seq(65536, 1), s"$d: $chunkRows")
+    }
+    val a = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dirA, "data/part-00000.graft"))
+    val b = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dirB, "data/part-00000.graft"))
+    assert(java.util.Arrays.equals(a, b), "part file bytes diverge")
+  }
+
   test("option(arrange, n): Spark arranges the write; bytes == encodeToDir") {
     import spark.implicits._
     val rng = new scala.util.Random(11)

@@ -17,15 +17,16 @@ class StreamingSpec extends AnyFunSuite {
     val input = MemoryStream[SeqRow]
     val dir = Files.createTempDirectory("graft-stream").toString
     val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
-    val cfg = EncoderConfig(chunkTokens = 8192, numPartitions = 0)
     val rows = (0L until 300L).map(i => Corpus.row(42L, i))
     // AvailableNow only drains data present at start()
     input.addData(rows.take(150))
     input.addData(rows.drop(150))
-    val q = StreamingEncoder
-      .writeToLineageDir(input.toDS(), dir, ckpt, cfg)
+    val q = input.toDS().toDF()
+      .writeStream.format("graft")
+      .option("checkpointLocation", ckpt)
+      .option("chunkTokens", "8192")
       .trigger(Trigger.AvailableNow())
-      .start()
+      .start(dir)
     q.awaitTermination(120000)
     // decode every batch dir and compare to the union of inputs
     val batchDirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
