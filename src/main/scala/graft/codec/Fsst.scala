@@ -4,45 +4,45 @@ import java.util.zip.CRC32
 
 /** FSST — Fast Static Symbol Table string compression (simplified from the
   * public VLDB'20 paper "FSST: Fast Random Access String Compression",
-  * Boncz/Neumann/Leis). Chunk-local symbol table of up to 255 symbols of
-  * 1..8 bytes, greedy longest-match encode, code 255 = escape + literal.
+  * Boncz/Neumann/Leis). A symbol table of up to 255 symbols of 1..8 bytes,
+  * greedy longest-match encode, code 255 = escape + literal.
   *
   * Role in this engine (SURVEY.md §7): compresses the string side-columns of
-  * a chunk (concatenated doc_id / source bytes) — the analog of the
-  * reference handling `str` input by UTF-8 encoding it first
-  * (`/root/reference/src/pyppmd/__init__.py:83,144-145`), except we use a
-  * static per-chunk table instead of an adaptive byte model.
+  * a chunk (concatenated doc_id / source bytes) and `compress_text` values —
+  * the analog of the reference handling `str` input by UTF-8 encoding it
+  * first (`/root/reference/src/pyppmd/__init__.py:83,144-145`). A symbol
+  * table pays off only when one table serves many strings, so `train` builds
+  * the per-table shared dictionary (`encodeShared`, modes 10/11/14) and the
+  * self-contained `encode` trains no table of its own.
   *
-  * Framing: [magic 'G','S'][mode u8: 0=raw 1=fsst 2=fsst+packed
-  *          3=fsst+huffman 4=huffman 5=fsst+o1huffman 6=o1huffman]
-  *          [varint rawLen]
-  *          mode 1: [u8 nSymbols][per symbol: u8 len, bytes][code bytes]
-  *          mode 2: [u8 nSymbols][symbols][TokenCodec frame over the code
-  *                  stream] — the code stream usually touches far fewer
-  *                  than 256 distinct values, so dict/bit-pack shave it
-  *                  below 8 bits per code
-  *          mode 3: [u8 nSymbols][symbols][Huffman block over the code
-  *                  stream] — order-0 entropy stage for text-like data
-  *                  where code frequencies are skewed, not sparse
-  *          mode 4: [Huffman block over the raw bytes] (no table wins)
-  *          mode 5: [u8 nSymbols][symbols][HuffmanO1 block over the code
-  *                  stream] — order-1: per-class tables keyed by the
-  *                  previous code's top 5 bits (static stand-in for the
-  *                  reference's adaptive contexts on text payloads)
-  *          mode 6: [HuffmanO1 block over the raw bytes]
-  *          mode 7: [varint dictFrameLen][inner Fsst frame: word dict]
-  *                  [TokenCodec frame over the word-id stream] — word-level
-  *                  model (WordModel): text as ids over its own vocabulary
+  * Framing: [magic 'G','S'][mode u8][varint rawLen][mode body]
+  *          [crc32 LE of all previous bytes]
+  * The encoder writes four modes and keeps the smallest; raw is the
+  * ceiling, so output never expands beyond header + rawLen:
+  *          mode 0: [raw bytes]
+  *          mode 4: [Huffman block over the raw bytes]
+  *          mode 6: [HuffmanO1 block over the raw bytes] — order-1:
+  *                  per-class tables keyed by the previous byte's top 5
+  *                  bits (static stand-in for the reference's adaptive
+  *                  contexts on text payloads)
   *          mode 8: [varint dictFrameLen][inner Fsst frame: word dict]
   *                  [HuffmanO1Wide block over the id bytes] — word model
-  *                  with FULL order-1 coding of the id stream (vocab <=
-  *                  256): "which word follows which", the static recast of
-  *                  the reference's deep text contexts
+  *                  (WordModel) with FULL order-1 coding of the id stream
+  *                  (vocab <= 256): "which word follows which", the static
+  *                  recast of the reference's deep text contexts
+  * The decoder also reads every mode earlier encoders wrote, because
+  * persisted chunks and stored `compress_text` values may hold them:
+  *          mode 1: [u8 nSymbols][per symbol: u8 len, bytes][code bytes]
+  *          mode 2: [u8 nSymbols][symbols][TokenCodec frame over the code
+  *                  stream]
+  *          mode 3: [u8 nSymbols][symbols][Huffman block over the code
+  *                  stream]
+  *          mode 5: [u8 nSymbols][symbols][HuffmanO1 block over the code
+  *                  stream]
+  *          mode 7: [varint dictFrameLen][inner Fsst frame: word dict]
+  *                  [TokenCodec frame over the word-id stream]
   *          mode 9: [HuffmanO1Wide block over the raw bytes]
-  *          mode 0: [raw bytes]
-  *          [crc32 LE of all previous bytes]
-  * The encoder computes every applicable mode and keeps the smallest; raw
-  * is the ceiling, so output never expands beyond header + rawLen.
+  * and, through `decodeShared`, the shared-table modes 10/11/14.
   */
 object Fsst {
   final val EscapeCode = 255
@@ -50,6 +50,8 @@ object Fsst {
   final val MaxSymbolLen = 8
   private final val MagicG: Byte = 'G'
   private final val MagicS: Byte = 'S'
+  private final val TrainGenerations = 4
+  private final val TrainSampleLimit = 1 << 14
 
   final class SymbolTable(val symbols: Array[Array[Byte]]) {
     // bucket by first byte, longest-first (then highest index first), for
@@ -97,8 +99,10 @@ object Fsst {
     }
   }
 
-  /** Train a table on (a sample of) the data: iterative greedy merge of
-    * frequent adjacent symbol pairs, scored by gain = freq * length.
+  /** Train a table on (a sample of) the data — the one trainer behind the
+    * shared meta dictionary (`MetaDict.train`) and `doc_compress_shared`:
+    * iterative greedy merge of frequent adjacent symbol pairs, scored by
+    * gain = freq * length.
     * Oversized inputs are sampled by STRIDED slices spread over the whole
     * buffer — a prefix sample would bias the table toward the first rows of
     * a chunk and miss vocabulary that only appears later.
@@ -108,13 +112,12 @@ object Fsst {
     * by its bytes packed into a Long, and keeps the best `MaxSymbols` in a
     * bounded heap ordered by -gain, then length, then unsigned byte order —
     * a total order over distinct symbols, so the table is deterministic. */
-  def train(data: Array[Byte], generations: Int = 4,
-            sampleLimit: Int = 1 << 14): SymbolTable = {
+  def train(data: Array[Byte]): SymbolTable = {
     val sample =
-      if (data.length <= sampleLimit) data
+      if (data.length <= TrainSampleLimit) data
       else {
         val nSlices = 16
-        val slice = sampleLimit / nSlices
+        val slice = TrainSampleLimit / nSlices
         val out = new Array[Byte](slice * nSlices)
         val stride = (data.length - slice).toDouble / (nSlices - 1)
         var k = 0
@@ -127,7 +130,7 @@ object Fsst {
       }
     var table = new SymbolTable(Array.empty)
     var gen = 0
-    while (gen < generations) {
+    while (gen < TrainGenerations) {
       table = refine(table, sample)
       gen += 1
     }
@@ -348,128 +351,59 @@ object Fsst {
     out
   }
 
-  /** Self-contained framed encode: trains on the data, embeds the table,
-    * second-stage packs the code stream when that wins, falls back to raw
-    * if FSST does not win at all. Never expands beyond header + rawLen. */
+  /** Self-contained framed encode: order-0 Huffman (mode 4), order-1
+    * Huffman (mode 6) or the word model (mode 8), whichever is smallest,
+    * with raw (mode 0) as the ceiling; equal sizes go to raw, then to 8, 6
+    * and 4 in that order. Never expands beyond header + rawLen. */
   def encode(data: Array[Byte]): Array[Byte] = encodeInner(data, true)
 
   /** allowWordModel=false breaks the recursion when the word dict blob is
     * itself Fsst-framed (the dict is small; word-modeling it again could
     * recurse and never wins anyway). */
   private def encodeInner(data: Array[Byte], allowWordModel: Boolean): Array[Byte] = {
-    val table = if (data.length >= 16) train(data) else new SymbolTable(Array.empty)
-    val packed =
-      if (table.symbols.nonEmpty) compressWith(table, data) else null
-    val tableLen =
-      if (packed == null) 0
-      else 1 + table.symbols.map(_.length + 1).sum
-    // second stage: the code stream as an int vector through the stats-
-    // driven TokenCodec (dict/bit-pack/rle pick up the low code cardinality)
-    val packed2 =
-      if (packed == null) null
-      else {
-        val ints = new Array[Int](packed.length)
-        var i = 0
-        while (i < packed.length) { ints(i) = packed(i) & 0xff; i += 1 }
-        TokenCodec.encodeAutoFlat(ints)
-      }
-    val packed3 = if (packed == null) null else Huffman.encode(packed)
-    val packed4 = if (data.length >= 64) Huffman.encode(data) else null
-    // order-1 entropy stages (context-classed tables): over the FSST code
-    // stream (mode 5) and over the raw bytes (mode 6) — the static
-    // approximation of the reference's adaptive contexts for text payloads
-    val packed5 = if (packed == null) null else HuffmanO1.encode(packed)
-    val packed6 = if (data.length >= 64) HuffmanO1.encode(data) else null
-    // full-context order-1 over raw bytes: a 512 KB freq matrix + 65k-cell
-    // presence scan per attempt, and per-context table headers that short
-    // inputs can never amortize — only worth trying at >= 1 KB (per-row
-    // compress_text on ~300 B docs would otherwise pay it for nothing)
-    val packed9 = if (data.length >= 1024) HuffmanO1Wide.encode(data) else null
-    // word-level model (modes 7/8): dictionary the word/separator runs and
-    // entropy-code the id stream — the winning shape for natural-language
-    // text, where the vocabulary is tiny relative to the byte stream
-    var word7: Array[Byte] = null
-    var word8: Array[Byte] = null
-    if (allowWordModel && data.length >= 1024) {
-      val (entries, ids) = WordModel.tokenize(data)
-      if (entries.length >= 2 && entries.length <= (1 << 16) &&
-          ids.length >= entries.length * 4) {
-        // worth modeling only when tokens REPEAT (avg >= 4 occurrences):
-        // that is what the dictionary amortizes against. Low-repetition
-        // inputs — chunk doc_id blobs have vocab ~ nRows — are rejected
-        // BEFORE the expensive dict-frame/id-stream encodes, keeping the
-        // attempt off the per-chunk hot path (a *16-vocab-size guard here
-        // let doc_id blobs through and cost ~25% encode throughput)
-        val dictFrame = encodeInner(WordModel.packDict(entries), false)
-        def withDict(idsBlock: Array[Byte]): Array[Byte] = {
-          val bos = new java.io.ByteArrayOutputStream(
-            dictFrame.length + idsBlock.length + 8)
-          writeVarint(bos, dictFrame.length.toLong)
-          bos.write(dictFrame, 0, dictFrame.length)
-          bos.write(idsBlock, 0, idsBlock.length)
-          bos.toByteArray
-        }
-        word7 = withDict(TokenCodec.encodeAutoFlat(ids))
-        if (entries.length <= 256) {
-          val idBytes = new Array[Byte](ids.length)
-          var i = 0
-          while (i < ids.length) { idBytes(i) = ids(i).toByte; i += 1 }
-          word8 = withDict(HuffmanO1Wide.encode(idBytes))
-        }
-      }
+    var mode = 0
+    var body = data
+    def consider(m: Int, b: Array[Byte]): Unit =
+      if (b != null && b.length < body.length) { mode = m; body = b }
+    if (allowWordModel && data.length >= 1024) consider(8, wordModel(data))
+    if (data.length >= 64) {
+      consider(6, HuffmanO1.encode(data))
+      consider(4, Huffman.encode(data))
     }
-    val size1 = if (packed == null) Int.MaxValue else tableLen + packed.length
-    val size2 = if (packed2 == null) Int.MaxValue else tableLen + packed2.length
-    val size3 = if (packed3 == null) Int.MaxValue else tableLen + packed3.length
-    val size4 = if (packed4 == null) Int.MaxValue else packed4.length
-    val size5 = if (packed5 == null) Int.MaxValue else tableLen + packed5.length
-    val size6 = if (packed6 == null) Int.MaxValue else packed6.length
-    val size7 = if (word7 == null) Int.MaxValue else word7.length
-    val size8 = if (word8 == null) Int.MaxValue else word8.length
-    val size9 = if (packed9 == null) Int.MaxValue else packed9.length
-    val best = Seq(size1, size2, size3, size4, size5, size6, size7, size8,
-      size9).min
-    val mode =
-      if (best >= data.length) 0
-      else if (best == size8) 8
-      else if (best == size7) 7
-      else if (best == size5) 5
-      else if (best == size9) 9
-      else if (best == size6) 6
-      else if (best == size3) 3
-      else if (best == size2) 2
-      else if (best == size4) 4
-      else 1
-    val bos = new java.io.ByteArrayOutputStream()
+    val bos = new java.io.ByteArrayOutputStream(body.length + 16)
     bos.write(MagicG); bos.write(MagicS)
     bos.write(mode)
-    writeVarint(bos, data.length.toLong)
-    if (mode == 4) {
-      bos.write(packed4, 0, packed4.length)
-    } else if (mode == 6) {
-      bos.write(packed6, 0, packed6.length)
-    } else if (mode == 9) {
-      bos.write(packed9, 0, packed9.length)
-    } else if (mode == 7) {
-      bos.write(word7, 0, word7.length)
-    } else if (mode == 8) {
-      bos.write(word8, 0, word8.length)
-    } else if (mode > 0) {
-      bos.write(table.symbols.length)
-      table.symbols.foreach { s => bos.write(s.length); bos.write(s, 0, s.length) }
-      val p = if (mode == 5) packed5
-        else if (mode == 3) packed3
-        else if (mode == 2) packed2 else packed
-      bos.write(p, 0, p.length)
-    } else {
-      bos.write(data, 0, data.length)
-    }
-    val body = bos.toByteArray
+    Varint.write(bos, data.length.toLong)
+    bos.write(body, 0, body.length)
+    val framed = bos.toByteArray
     val crc = new CRC32
-    crc.update(body)
-    val out = java.util.Arrays.copyOf(body, body.length + 4)
-    TokenCodec.writeIntLE(out, body.length, crc.getValue.toInt)
+    crc.update(framed)
+    val out = java.util.Arrays.copyOf(framed, framed.length + 4)
+    TokenCodec.writeIntLE(out, framed.length, crc.getValue.toInt)
     out
+  }
+
+  /** Mode-8 body — the winning shape for natural-language text, where the
+    * vocabulary is tiny relative to the byte stream — or null when the
+    * vocabulary does not fit the byte-wide id stream (over 256 words) or its
+    * words do not repeat (average under 4 occurrences, which is what the
+    * dictionary amortizes against: chunk doc_id blobs have a vocabulary of
+    * about one word per row and are rejected before any dict is built). */
+  private def wordModel(data: Array[Byte]): Array[Byte] = {
+    val (entries, ids) = WordModel.tokenize(data)
+    if (entries.length < 2 || entries.length > 256 ||
+        ids.length < entries.length * 4) return null
+    val dictFrame = encodeInner(WordModel.packDict(entries), false)
+    val idBytes = new Array[Byte](ids.length)
+    var i = 0
+    while (i < ids.length) { idBytes(i) = ids(i).toByte; i += 1 }
+    val idsBlock = HuffmanO1Wide.encode(idBytes)
+    val bos = new java.io.ByteArrayOutputStream(
+      dictFrame.length + idsBlock.length + 8)
+    Varint.write(bos, dictFrame.length.toLong)
+    bos.write(dictFrame, 0, dictFrame.length)
+    bos.write(idsBlock, 0, idsBlock.length)
+    bos.toByteArray
   }
 
   def decode(bytes: Array[Byte]): Array[Byte] = decodeInner(bytes, true)
@@ -485,9 +419,9 @@ object Fsst {
     * immutable after training. */
   def tableToBytes(t: SymbolTable): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
-    writeVarint(bos, t.symbols.length.toLong)
+    Varint.write(bos, t.symbols.length.toLong)
     t.symbols.foreach { s =>
-      writeVarint(bos, s.length.toLong); bos.write(s, 0, s.length)
+      Varint.write(bos, s.length.toLong); bos.write(s, 0, s.length)
     }
     bos.toByteArray
   }
@@ -547,7 +481,7 @@ object Fsst {
     val bos = new java.io.ByteArrayOutputStream()
     bos.write(MagicG); bos.write(MagicS)
     bos.write(bestMode)
-    writeVarint(bos, data.length.toLong)
+    Varint.write(bos, data.length.toLong)
     bos.write(dictFp & 0xff); bos.write((dictFp >>> 8) & 0xff)
     bos.write((dictFp >>> 16) & 0xff); bos.write((dictFp >>> 24) & 0xff)
     bos.write(bestBody, 0, bestBody.length)
@@ -743,11 +677,5 @@ object Fsst {
         throw CorruptException("shared-dict frame: external table required")
       case m => throw CorruptException(s"fsst mode $m")
     }
-  }
-
-  private def writeVarint(bos: java.io.ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0L) { bos.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    bos.write(v.toInt)
   }
 }

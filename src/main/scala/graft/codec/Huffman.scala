@@ -1,13 +1,12 @@
 package graft.codec
 
 /** Canonical static Huffman coder over a byte alphabet (0..255) — the
-  * entropy stage behind FSST (Fsst mode 3). The reference's PPMd reaches
-  * ~0.15 on text by adaptive context modeling + range coding
-  * (`/root/reference/src/lib/ppmd/Ppmd7Enc.c`); this engine deliberately
-  * trades that for a static two-stage pipeline (symbol table + order-0
-  * entropy code) that is one sequential pass each way, branch-light, and
-  * trivially chunk-parallel — the Spark-side throughput/ratio point
-  * SURVEY.md §4.1 argues for.
+  * order-0 entropy stage of Fsst (mode 4) and the hpack wrap. The
+  * reference's PPMd reaches ~0.15 on text by adaptive context modeling +
+  * range coding (`/root/reference/src/lib/ppmd/Ppmd7Enc.c`); this engine
+  * deliberately trades that for static entropy codes that are one
+  * sequential pass each way, branch-light, and trivially chunk-parallel —
+  * the Spark-side throughput/ratio point SURVEY.md §4.1 argues for.
   *
   * Format: [u8 lo][u8 cntMinus1][ceil(cnt/2) bytes: code lengths of symbols
   *         lo..lo+cnt-1 as nibbles, 0 = absent]

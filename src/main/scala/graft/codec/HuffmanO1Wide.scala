@@ -4,8 +4,8 @@ package graft.codec
   * with a table selected by the exact previous byte (256 contexts), vs
   * HuffmanO1's 32 merged classes (prev >> 3). Table overhead is paid only
   * for contexts that occur (32-byte present bitmap + per-present-context
-  * trimmed nibble-packed lengths), so on small-alphabet streams — FSST code
-  * streams, word-model id streams — the full conditioning is nearly free
+  * trimmed nibble-packed lengths), so on small-alphabet streams — the
+  * word-model id stream of Fsst mode 8 — the full conditioning is nearly free
   * and captures first-order structure the merged classes blur away. This is
   * the static analog of the reference's order-N context mixing
   * (`/root/reference/src/lib/ppmd/Ppmd7.c` SEE/escape chain) one step up

@@ -40,7 +40,7 @@ final class IncrementalTokenEncoder(chunkTokens: Int = 1 << 20) {
 
   private def emit(): Unit = {
     val framed = TokenCodec.encodeAuto(java.util.Arrays.copyOf(buf, n))
-    writeVarint(framed.length.toLong)
+    Varint.write(out, framed.length.toLong)
     out.write(framed, 0, framed.length)
     n = 0
   }
@@ -49,15 +49,9 @@ final class IncrementalTokenEncoder(chunkTokens: Int = 1 << 20) {
   def flush(): Array[Byte] = {
     require(!flushed, "flush twice (reference raises the same)")
     if (n > 0) emit()
-    writeVarint(0L) // endmark
+    Varint.write(out, 0L) // endmark
     flushed = true
     out.toByteArray
-  }
-
-  private def writeVarint(v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0L) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
   }
 }
 

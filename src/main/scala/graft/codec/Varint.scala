@@ -42,6 +42,16 @@ object Varint {
     pos + 1
   }
 
+  /** Write unsigned LEB128 to a stream: the same bytes as the array form. */
+  def write(out: java.io.OutputStream, v: Long): Unit = {
+    var x = v
+    while ((x & ~0x7fL) != 0L) {
+      out.write(((x & 0x7f) | 0x80).toInt)
+      x >>>= 7
+    }
+    out.write(x.toInt)
+  }
+
   def writeZ(buf: Array[Byte], pos: Int, v: Long): Int =
     write(buf, pos, zigzag(v))
 

@@ -49,10 +49,10 @@ object WordModel {
   /** [varint count][per entry: varint byteLen, raw bytes] */
   def packDict(entries: Array[Array[Byte]]): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
-    writeVarint(bos, entries.length.toLong)
+    Varint.write(bos, entries.length.toLong)
     var i = 0
     while (i < entries.length) {
-      writeVarint(bos, entries(i).length.toLong)
+      Varint.write(bos, entries(i).length.toLong)
       bos.write(entries(i), 0, entries(i).length)
       i += 1
     }
@@ -73,11 +73,5 @@ object WordModel {
       i += 1
     }
     out
-  }
-
-  private def writeVarint(bos: java.io.ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0L) { bos.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    bos.write(v.toInt)
   }
 }

@@ -220,11 +220,11 @@ object ChunkBuilder {
 
   def packStrings(ss: Array[String]): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
-    writeVarint(bos, ss.length.toLong)
+    Varint.write(bos, ss.length.toLong)
     var i = 0
     while (i < ss.length) {
       val b = ss(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      writeVarint(bos, b.length.toLong)
+      Varint.write(bos, b.length.toLong)
       bos.write(b, 0, b.length)
       i += 1
     }
@@ -241,7 +241,7 @@ object ChunkBuilder {
   def packStringsFront(ss: Array[String]): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     bos.write(0)
-    writeVarint(bos, ss.length.toLong)
+    Varint.write(bos, ss.length.toLong)
     var prev = Array.emptyByteArray
     var i = 0
     while (i < ss.length) {
@@ -249,8 +249,8 @@ object ChunkBuilder {
       var p = 0
       val max = math.min(prev.length, b.length)
       while (p < max && prev(p) == b(p)) p += 1
-      writeVarint(bos, p.toLong)
-      writeVarint(bos, (b.length - p).toLong)
+      Varint.write(bos, p.toLong)
+      Varint.write(bos, (b.length - p).toLong)
       bos.write(b, p, b.length - p)
       prev = b
       i += 1
@@ -357,7 +357,7 @@ object ChunkBuilder {
 
   private def concatSections(secs: Array[Byte]*): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
-    secs.foreach { s => writeVarint(bos, s.length.toLong); bos.write(s, 0, s.length) }
+    secs.foreach { s => Varint.write(bos, s.length.toLong); bos.write(s, 0, s.length) }
     bos.toByteArray
   }
 
@@ -373,11 +373,5 @@ object ChunkBuilder {
       i += 1
     }
     out
-  }
-
-  private def writeVarint(bos: java.io.ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0L) { bos.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    bos.write(v.toInt)
   }
 }

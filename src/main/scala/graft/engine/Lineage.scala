@@ -278,7 +278,7 @@ object Lineage {
     finally { ia.close(); ib.close() }
   }
 
-  /** Read a small control file fully (shared dict, markers). */
+  /** Read a small control file fully (the replace intent). */
   private def readAll(fs: FileSystem, p: Path): Array[Byte] = {
     val in = fs.open(p)
     try {
@@ -302,8 +302,8 @@ object Lineage {
     * they were encoded. */
   private def sharedDictFor(ds: Dataset[SeqRow], fs: FileSystem,
                             dir: String): Array[Byte] = {
-    val dictPath = new Path(s"$dir/_lineage/_shared_dict.bin")
-    if (fs.exists(dictPath)) return readAll(fs, dictPath)
+    val published = sharedDictBytes(fs, dir)
+    if (published.isDefined) return published.get
     val spark = ds.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions.col
@@ -316,8 +316,8 @@ object Lineage {
     val blob = ChunkBuilder.packStringsFront(ids) ++
       ChunkBuilder.packStrings(rows.map(_._3).distinct.sorted)
     val bytes = MetaDict.toBytes(MetaDict.train(blob))
-    val tmp = new Path(
-      s"$dir/_lineage/_shared_dict.bin.inprogress-${java.util.UUID.randomUUID()}")
+    val dictPath = new Path(s"$dir/_lineage/_shared_dict.bin")
+    val tmp = new Path(s"$dictPath.inprogress-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, true)
     out.write(bytes)
     out.close()
@@ -325,17 +325,8 @@ object Lineage {
     // published first — read back the COMMITTED file either way, which is
     // what guarantees dir-wide consistency
     if (!fs.rename(tmp, dictPath)) fs.delete(tmp, false): Unit
-    readAll(fs, dictPath)
-  }
-
-  /** The dir's shared meta dictionary, if one was published (absent for
-    * pre-r4 dirs — their chunks are self-contained and decode with None). */
-  private def loadSharedDict(spark: SparkSession, dir: String)
-      : Option[Array[Byte]] = {
-    val fs = FileSystem.get(new java.net.URI(dir),
-      spark.sparkContext.hadoopConfiguration)
-    val p = new Path(s"$dir/_lineage/_shared_dict.bin")
-    if (!fs.exists(p)) None else Some(readAll(fs, p))
+    sharedDictBytes(fs, dir).getOrElse(
+      throw new java.io.FileNotFoundException(dictPath.toString))
   }
 
   /** Read the manifest (all partitions) as a distributed Dataset — the
@@ -525,7 +516,7 @@ object Lineage {
       .filter { case (_, pid, _) => onlyPids.forall(_.contains(pid)) }
       .toIndexedSeq
     if (work.isEmpty) return DeleteStats(0, 0, 0, 0, 0)
-    val dict = loadSharedDict(spark, dir)
+    val dict = sharedDictBytes(fs0, dir)
     spark.sparkContext
       .parallelize(work,
         math.min(work.size, spark.sparkContext.defaultParallelism.max(1)))
@@ -1125,15 +1116,16 @@ object Lineage {
   /** The dir's serialized shared meta dictionary, if published — public for
     * external readers that open chunks themselves. */
   def sharedDictBytes(spark: SparkSession, dir: String): Option[Array[Byte]] =
-    loadSharedDict(spark, dir)
+    sharedDictBytes(FileSystem.get(new java.net.URI(dir),
+      spark.sparkContext.hadoopConfiguration), dir)
 
   // ---- chunk record framing ---------------------------------------------------
   private[engine] def frameChunk(c: EncodedChunk): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream(
       c.payload.length + c.meta.length + 16)
-    writeVarint(bos, c.payload.length.toLong)
+    graft.codec.Varint.write(bos, c.payload.length.toLong)
     bos.write(c.payload, 0, c.payload.length)
-    writeVarint(bos, c.meta.length.toLong)
+    graft.codec.Varint.write(bos, c.meta.length.toLong)
     bos.write(c.meta, 0, c.meta.length)
     bos.toByteArray
   }
@@ -1205,11 +1197,5 @@ object Lineage {
       tokSet, srcStats,
       // pre-gen manifests (no DELETE ever ran) live in the gen-0 files
       gen = numOr("gen", 0).toInt)
-  }
-
-  private def writeVarint(bos: java.io.ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0L) { bos.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    bos.write(v.toInt)
   }
 }

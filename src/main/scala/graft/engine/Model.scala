@@ -89,9 +89,9 @@ object MetaDict {
     val f = graft.codec.Fsst.tableToBytes(d.fsst)
     val bos = new java.io.ByteArrayOutputStream(f.length + d.o1Model.length + 12)
     bos.write(1)
-    writeVarint(bos, f.length.toLong)
+    graft.codec.Varint.write(bos, f.length.toLong)
     bos.write(f, 0, f.length)
-    writeVarint(bos, d.o1Model.length.toLong)
+    graft.codec.Varint.write(bos, d.o1Model.length.toLong)
     bos.write(d.o1Model, 0, d.o1Model.length)
     bos.toByteArray
   }
@@ -114,12 +114,6 @@ object MetaDict {
       throw graft.codec.TruncatedException
     val o = java.util.Arrays.copyOfRange(b, r.pos, r.pos + ol.toInt)
     new MetaDict(graft.codec.Fsst.tableFromBytes(f), o)
-  }
-
-  private def writeVarint(bos: java.io.ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0L) { bos.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    bos.write(v.toInt)
   }
 }
 

@@ -33,15 +33,15 @@ object SrcStats {
       i += 1
     }
     val bos = new java.io.ByteArrayOutputStream(16 * (rows.size + 1))
-    writeVarint(bos, rows.size.toLong)
+    graft.codec.Varint.write(bos, rows.size.toLong)
     val it = rows.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
       val kb = e.getKey.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      writeVarint(bos, kb.length.toLong)
+      graft.codec.Varint.write(bos, kb.length.toLong)
       bos.write(kb, 0, kb.length)
-      writeVarint(bos, e.getValue()(0))
-      writeVarint(bos, e.getValue()(1))
+      graft.codec.Varint.write(bos, e.getValue()(0))
+      graft.codec.Varint.write(bos, e.getValue()(1))
     }
     bos.toByteArray
   }
@@ -70,14 +70,5 @@ object SrcStats {
       }
       if (r.hasMore) None else Some(out.toSeq) // trailing garbage = corrupt
     } catch { case _: Exception => None }
-  }
-
-  private def writeVarint(bos: java.io.ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0L) {
-      bos.write(((v & 0x7f) | 0x80).toInt)
-      v >>>= 7
-    }
-    bos.write(v.toInt)
   }
 }

@@ -44,7 +44,7 @@ object TokenSketch {
       val nBytes = ((range + 7) / 8).toInt
       val out = new Array[Byte](1 + 5 + nBytes) // worst-case varint(range)
       out(0) = 1
-      var pos = writeVarint(out, 1, range)
+      var pos = graft.codec.Varint.write(out, 1, range)
       val bitBase = pos
       var i = 0
       while (i < tokens.length) {
@@ -73,7 +73,7 @@ object TokenSketch {
       val nBytes = bits >>> 3
       val head = new Array[Byte](1 + 5)
       head(0) = 3
-      val bodyAt = writeVarint(head, 1, nBytes.toLong)
+      val bodyAt = graft.codec.Varint.write(head, 1, nBytes.toLong)
       val out = new Array[Byte](bodyAt + nBytes)
       System.arraycopy(head, 0, out, 0, bodyAt)
       i = 0
@@ -161,15 +161,5 @@ object TokenSketch {
     z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
     z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
     z ^ (z >>> 31)
-  }
-
-  private def writeVarint(buf: Array[Byte], pos0: Int, v0: Long): Int = {
-    var pos = pos0
-    var v = v0
-    while ((v & ~0x7fL) != 0L) {
-      buf(pos) = ((v & 0x7f) | 0x80).toByte; pos += 1; v >>>= 7
-    }
-    buf(pos) = v.toByte
-    pos + 1
   }
 }

@@ -11,22 +11,39 @@ import graft.io.Corpus
   * check plus the family-A ScalaTest suite (FIXTURES.md). */
 object EngineQueries {
 
-  /** Fingerprint of the corpus-generation + encode path, computed once per
-    * JVM: CRC32 over a canary chunk built driver-side from 8 Corpus rows
-    * through the real ChunkBuilder. Any change to row generation, the codec
-    * selector, framing, or meta encoding changes this value — scratch
-    * encodes keyed on it can never be silently reused across code versions. */
+  /** Fingerprint of the compiled engine, computed once per JVM: CRC32 over
+    * the sorted names and bytes of every `graft/**/*.class` entry in the
+    * code source that holds this object (a class directory or a jar). Any
+    * change to row generation, the codecs, slicing, commits or meta encoding
+    * rotates it, so scratch encodes keyed on it are never resumed by another
+    * code version; an unchanged build reproduces it, because compiled class
+    * files depend only on their source. */
   lazy val codeFingerprint: String = {
-    val rows = (0L until 8L).map(i => Corpus.row(42L, i))
-    val c = ChunkBuilder.build(0, 0, rows.map(_.doc_id).toArray,
-      rows.map(_.source).toArray, rows.flatMap(_.tokens).toArray,
-      rows.map(_.n_tok).toArray)
+    val src = new java.io.File(
+      getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    def isClass(name: String) =
+      name.startsWith("graft/") && name.endsWith(".class")
+    val classes = new java.util.TreeMap[String, Array[Byte]]()
+    if (src.isDirectory) {
+      val root = src.toPath
+      val walk = java.nio.file.Files.walk(root.resolve("graft"))
+      try walk.forEach { p =>
+        val name = root.relativize(p).toString
+          .replace(java.io.File.separatorChar, '/')
+        if (isClass(name)) classes.put(name, java.nio.file.Files.readAllBytes(p))
+      } finally walk.close()
+    } else {
+      val jar = new java.util.jar.JarFile(src)
+      try jar.stream().forEach { e =>
+        if (isClass(e.getName))
+          classes.put(e.getName, jar.getInputStream(e).readAllBytes())
+      } finally jar.close()
+    }
     val crc = new java.util.zip.CRC32
-    crc.update(c.payload)
-    crc.update(c.meta)
-    // manifest-side stats participate too: a SrcStats format change must
-    // rotate the scratch dir, not resume a stats-less prior manifest
-    crc.update(c.src_stats)
+    classes.forEach { (name, bytes) =>
+      crc.update(name.getBytes("UTF-8"))
+      crc.update(bytes)
+    }
     java.lang.Long.toHexString(crc.getValue)
   }
 

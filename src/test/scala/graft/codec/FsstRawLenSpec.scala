@@ -1,7 +1,5 @@
 package graft.codec
 
-import java.util.zip.CRC32
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A frame whose CRC is valid but whose varint raw length does not fit an
@@ -9,23 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the CRC is no defence, because anyone can recompute it over a hostile
   * header. */
 class FsstRawLenSpec extends AnyFunSuite {
-
-  /** magic, mode, varint rawLen, payload, CRC32 (little-endian) over all
-    * preceding bytes — the frame layout `Fsst.decode` checks. */
-  private def frame(mode: Int, rawLen: Long, payload: Array[Byte]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    bos.write('G'); bos.write('S'); bos.write(mode)
-    var v = rawLen
-    while ((v & ~0x7fL) != 0L) { bos.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    bos.write(v.toInt)
-    bos.write(payload)
-    val body = bos.toByteArray
-    val crc = new CRC32
-    crc.update(body, 0, body.length)
-    val c = crc.getValue.toInt
-    body ++ Array[Byte](c.toByte, (c >>> 8).toByte, (c >>> 16).toByte,
-      (c >>> 24).toByte)
-  }
+  import FsstFixtures.frame
 
   // mode 0 = stored raw; mode 1 = one-symbol table ("a") + one code
   private val payloads = Seq(

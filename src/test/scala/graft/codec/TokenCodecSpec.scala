@@ -141,17 +141,13 @@ class TokenCodecSpec extends AnyFunSuite with GenChecks {
 
 class FsstSpec extends AnyFunSuite with GenChecks {
   test("fsst roundtrips arbitrary byte strings") {
-    forAll(Gen.oneOf(
-      Gen.listOf(Gen.choose(Byte.MinValue, Byte.MaxValue)).map(_.toArray),
-      Gen.listOf(Gen.oneOf('a'.toByte, 'b'.toByte, ' '.toByte)).map(_.toArray),
-      Gen.const("doc-000000000001doc-000000000002doc-000000000003".getBytes),
-      Gen.const(Array.emptyByteArray))) { (data: Array[Byte]) =>
+    forAll(FsstFixtures.byteStrings) { (data: Array[Byte]) =>
       assert(Fsst.decode(Fsst.encode(data)).sameElements(data))
     }
   }
 
   test("fsst compresses repetitive id-like strings well") {
-    val data = (0 until 2000).map(i => f"doc-$i%012d").mkString.getBytes
+    val data = FsstFixtures.idLike(2000)
     val enc = Fsst.encode(data)
     assert(enc.length < data.length / 2, s"${enc.length} vs ${data.length}")
     assert(Fsst.decode(enc).sameElements(data))
@@ -185,11 +181,7 @@ class FsstSpec extends AnyFunSuite with GenChecks {
   }
 
   test("an entropy/word stage wins on text and roundtrips") {
-    val words = Array("the", "of", "compression", "spark", "token",
-      "column", "a", "entropy", "static", "chunk")
-    val rng = new graft.io.Corpus.Rng(9L)
-    val text = Array.fill(4000)(words(rng.nextInt(words.length)))
-      .mkString(" ").getBytes
+    val text = FsstFixtures.wordText(4000, seed = 9L)
     val enc = Fsst.encode(text)
     // an entropy-coded mode must win over plain FSST/raw on text; since r3
     // the word model (7/8) usually beats the byte-context stack (3/5/6/9)

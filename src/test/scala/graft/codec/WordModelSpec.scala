@@ -6,30 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (HuffmanO1Wide, mode 9 / mode-8 id stage): roundtrip, mode selection,
   * and hostile-input behavior. */
 class WordModelSpec extends AnyFunSuite {
-
-  private def mix(z0: Long): Long = {
-    var z = z0 ^ 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
-  /** Markov word chain over a small vocabulary — the text shape the word
-    * model exists for (documents.parquet is this shape too). */
-  private def markovText(nWords: Int, vocab: Int, seed: Long): Array[Byte] = {
-    val words = Array.tabulate(vocab)(i => s"w${i}term${i % 7}")
-    val sb = new StringBuilder
-    var state = 0
-    var i = 0
-    while (i < nWords) {
-      sb.append(words(state))
-      sb.append(if (i % 17 == 16) "\n" else " ")
-      // skewed transitions: few successors per state
-      state = ((mix(seed + i * 31L + state) >>> 33) % 3 + state * 7).toInt % vocab
-      i += 1
-    }
-    sb.toString.getBytes("UTF-8")
-  }
+  import FsstFixtures.{markovText, mix}
 
   test("word-model modes win on word-structured text and roundtrip exactly") {
     val data = markovText(8000, 40, seed = 7L)
@@ -41,12 +18,12 @@ class WordModelSpec extends AnyFunSuite {
       s"ratio ${enc.length.toDouble / data.length}")
   }
 
-  test("vocab > 256 falls back to mode 7 (TokenCodec id stream)") {
+  test("vocab > 256 writes no word mode and roundtrips") {
     val data = markovText(12000, 900, seed = 11L)
     val enc = Fsst.encode(data)
     assert(java.util.Arrays.equals(Fsst.decode(enc), data))
-    if (enc(2) == 7 || enc(2) == 8)
-      assert(enc(2) == 7, "mode 8 requires vocab <= 256")
+    // mode 8 codes ids as bytes, and the encoder writes no mode 7
+    assert(enc(2) != 7 && enc(2) != 8, s"mode ${enc(2)} selected")
   }
 
   test("tokenize is lossless on arbitrary byte mixes") {
