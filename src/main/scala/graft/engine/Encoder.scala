@@ -143,7 +143,7 @@ object Decoder {
     val spark = chunks.sparkSession
     import spark.implicits._
     def digest(ds: Dataset[SeqRow]): Dataset[(String, Long)] =
-      ds.map(r => (r.doc_id, contentHash(r)))
+      ds.map(r => (r.doc_id, ContentKey.of(r)))
     val d = digest(decodeTable(chunks)).toDF("doc_id", "d_hash")
     val o = digest(original).toDF("doc_id", "o_hash")
     d.join(o, Seq("doc_id"), "full_outer")
@@ -151,8 +151,13 @@ object Decoder {
         col("d_hash") =!= col("o_hash"))
       .select(col("doc_id")).as[String]
   }
+}
 
-  private def contentHash(r: SeqRow): Long = {
+/** 64-bit content key over (n_tok, tokens, source) — FNV-1a,
+  * deterministic: the row digest of `Decoder.verifyAgainst` and the state
+  * key of the streaming dedup guards. */
+object ContentKey {
+  def of(r: SeqRow): Long = {
     var h = 0xcbf29ce484222325L
     h = (h ^ r.n_tok) * 1099511628211L
     var i = 0

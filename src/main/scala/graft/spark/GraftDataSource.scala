@@ -680,9 +680,10 @@ private[spark] object ManifestCache {
   }
 }
 
-/** One copy of dir-level planning (dir resolution, manifest load, zone-map
-  * + sketch pruning, dict pickup) shared by the batch scan, the aggregate
-  * scan, and the micro-batch stream. */
+/** One copy of dir-level planning (dir resolution, manifest load with its
+  * local/distributed gate, zone-map + sketch pruning, dict pickup, the
+  * count-limit confs) shared by the batch scan, both manifest-only
+  * aggregate scans, and the micro-batch stream. */
 private[spark] object GraftPlanning {
   /** The lineage dirs a batch read of `path` covers: the dir itself when
     * it is a plain lineage table, else the VISIBLE batches of a tree
@@ -753,11 +754,13 @@ private[spark] object GraftPlanning {
     * clamped, since cap + 1 wraps to Int.MinValue at Int.MaxValue. */
   def overCap(cap: Int): Int = (cap.toLong + 1).min(Int.MaxValue).toInt
 
-  private def planCap(spark: SparkSession): Int = {
-    val capStr = spark.conf.get("graft.plan.maxChunks", "2000000")
-    capStr.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft.plan.maxChunks must be a positive chunk count, got '$capStr'"))
+  /** A session conf that must parse as a positive Int (a count limit);
+    * the message names the key and what it counts. */
+  def positiveIntConf(spark: SparkSession, key: String, default: String,
+                      what: String): Int = {
+    val v = spark.conf.get(key, default)
+    v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"$key must be a positive $what, got '$v'"))
   }
 
   /** The planning predicate for one chunk: every pushed filter's zone
@@ -784,7 +787,8 @@ private[spark] object GraftPlanning {
   def prunedManifest(spark: SparkSession, dirs: Seq[String],
                      pushed: Array[Filter],
                      probes: Array[Int]): Array[(String, Lineage.ManifestRow)] = {
-    val cap = planCap(spark)
+    val cap = positiveIntConf(spark, "graft.plan.maxChunks", "2000000",
+      "chunk count")
     val bound = overCap(cap)
     val admit = chunkPredicate(pushed, probes)
     val rows = localManifests(spark, dirs) match {
@@ -929,9 +933,8 @@ class GraftAggScan(path: String, cols: Seq[GraftAggCol],
     // the manifest-only answer honors the same time-travel cut as the row
     // scan (count() as of batch n counts batches <= n, not the tree)
     val dirs = GraftPlanning.resolveReadDirs(spark, path, untilBatch)
-    // ONE fold, two executors: in-process over the driver-cached rows
-    // (zero Spark jobs), or inside tasks over the distributed manifest
-    // read (the 100-TB path)
+    // ONE fold, two executors: in-process over the driver-cached rows, or
+    // inside tasks over the distributed manifest read (the 100-TB path)
     val a = GraftPlanning.localManifests(spark, dirs) match {
       case Some(local) =>
         local.foldLeft(ManifestAgg.Zero) { case (acc, (_, rows)) =>
@@ -941,30 +944,30 @@ class GraftAggScan(path: String, cols: Seq[GraftAggCol],
         GraftPlanning.manifestRows(spark, dirs).rdd
           .aggregate(ManifestAgg.Zero)((acc, e) => acc.add(e._2), _ merge _)
     }
-    Array(GraftAggPartition(cols.map[AnyRef] {
-      case AggCountRows => java.lang.Long.valueOf(a.rows)
-      case AggMinDocId  => a.min
-      case AggMaxDocId  => a.max
-      case AggSumNTok   => if (a.any) java.lang.Long.valueOf(a.tokens) else null
-    }.toArray))
+    Array(ManifestAnswer(Array(new GenericInternalRow(cols.map[Any] {
+      case AggCountRows => a.rows
+      case AggMinDocId  => UTF8String.fromString(a.min)
+      case AggMaxDocId  => UTF8String.fromString(a.max)
+      case AggSumNTok   => if (a.any) a.tokens else null
+    }.toArray))))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new GraftAggRowReader(p.asInstanceOf[GraftAggPartition])
-    }
+    ManifestAnswer.Reader
 }
 
 /** A completely-pushed `GROUP BY source` aggregate: answered from the
-  * manifest's per-chunk SrcStats blobs — folded in-process over cached
-  * rows or in one Spark job over manifest rows, ZERO chunk opens and (for current-format manifests) zero meta reads.
-  * A per-source rollup over 100 TB reads the manifests the planner was
-  * going to read anyway; the reference analog is answering from framing,
-  * not data (`tests/test_ppmd7.py:95-146`). Chunks written before SrcStats
+  * manifest's per-chunk SrcStats blobs — ZERO chunk opens and, for
+  * current-format manifests, zero meta reads. A per-source rollup over
+  * 100 TB reads the manifests the planner was going to read anyway; the
+  * reference analog is answering from framing, not data
+  * (`tests/test_ppmd7.py:95-146`). ONE per-chunk fold
+  * (`GraftSourceAggScan.chunkGroups`), two executors picked by the local
+  * gate alone: in-process over the driver-cached rows, or in one Spark
+  * job over the distributed manifest read. Chunks written before SrcStats
   * existed fall back to a per-chunk META read (2 small range reads, no
-  * payload, no dict) inside the same distributed job — mixed-era dirs stay
-  * exactly correct, and the fallback count is observable
+  * payload, no dict) on whichever executor runs the fold — mixed-era dirs
+  * stay exactly correct, and the fallback count is observable
   * (`lastMetaFallbackChunks`). */
 class GraftSourceAggScan(path: String, cols: Seq[GraftAggCol],
                          untilBatch: Option[Long] = None)
@@ -989,80 +992,66 @@ class GraftSourceAggScan(path: String, cols: Seq[GraftAggCol],
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
     val dirs = GraftPlanning.resolveReadDirs(spark, path, untilBatch)
-    val capStr = spark.conf.get("graft.agg.maxGroups", "1000000")
-    val cap = capStr.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft.agg.maxGroups must be a positive group count, got '$capStr'"))
-    // driver-local fast path: manifest cached AND every chunk carries a
-    // decodable SrcStats blob — fold the per-source rollup in-process,
-    // zero Spark jobs (a single undecodable blob falls through to the
-    // distributed job, whose meta-read fallback handles mixed-era dirs)
-    val localGroups: Option[Array[(String, Long, Long)]] =
-      GraftPlanning.localManifests(spark, dirs).flatMap { local =>
+    val cap = GraftPlanning.positiveIntConf(spark, "graft.agg.maxGroups",
+      "1000000", "group count")
+    val fallback = spark.sparkContext.longAccumulator(
+      "graft_srcstats_meta_fallback_chunks")
+    val groupsOf = GraftSourceAggScan.chunkGroups(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration),
+      fallback)
+    val groups = GraftPlanning.localManifests(spark, dirs) match {
+      case Some(local) =>
         val agg = new SourceGroups
-        val ok = local.forall { case (_, rows) =>
-          rows.forall { m =>
-            graft.engine.SrcStats.decode(m.src_stats) match {
-              case Some(stats) =>
-                stats.foreach { case (src, r, t) => agg.add(src, r, t) }
-                true
-              case None => false
-            }
-          }
-        }
-        if (ok) Some(agg.result.toArray) else None
-      }
-    val groups = localGroups match {
-      case Some(out) =>
-        lastMetaFallbackChunks = 0 // every blob decoded — no meta reads
-        out
+        for ((d, rows) <- local; m <- rows; (src, r, t) <- groupsOf(d, m))
+          agg.add(src, r, t)
+        agg.result.toArray
       case None =>
         import spark.implicits._
         import org.apache.spark.sql.functions._
-        val hconf = new SerializableConfiguration(
-          spark.sparkContext.hadoopConfiguration)
-        val fallback = spark.sparkContext.longAccumulator(
-          "graft_srcstats_meta_fallback_chunks")
         // one (source, rows, tokens) triple per (chunk, source): tiny rows,
         // partial-aggregated map-side by the groupBy below
-        val per = GraftPlanning.manifestRows(spark, dirs).mapPartitions { it =>
-          it.flatMap { case (dir, m) =>
-            graft.engine.SrcStats.decode(m.src_stats) match {
-              case Some(stats) => stats.iterator
-              case None =>
-                // pre-upgrade chunk: meta-only read (payload never leaves
-                // disk), aggregated chunk-locally before emitting
-                fallback.add(1L)
-                val agg = new SourceGroups
-                ChunkBuilder.openMeta(
-                  Lineage.readChunkMeta(hconf.value, dir, m)).foreach {
-                  case (src, len) => agg.add(src, 1L, len.toLong)
-                }
-                agg.result
-            }
-          }
-        }.toDF("source", "rows", "tokens")
-        val out = per.groupBy(col("source"))
+        GraftPlanning.manifestRows(spark, dirs)
+          .mapPartitions(_.flatMap { case (d, m) => groupsOf(d, m) })
+          .toDF("source", "rows", "tokens")
+          .groupBy(col("source"))
           .agg(sum(col("rows")).as("rows"), sum(col("tokens")).as("tokens"))
           .limit(GraftPlanning.overCap(cap))
           .collect()
           .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        lastMetaFallbackChunks = fallback.value.toInt
-        out
     }
+    lastMetaFallbackChunks = fallback.value.toInt
     if (groups.length > cap) throw new IllegalStateException(
       s"GROUP BY source pushdown over $path exceeds $cap groups; " +
         "raise graft.agg.maxGroups or disable pushdown for this query")
-    Array(GraftSourceAggPartition(groups, cols.map {
-      case AggCountRows => 0; case AggSumNTok => 1
-      case other => throw new IllegalStateException(s"$other not grouped")
-    }.toArray))
+    Array(ManifestAnswer(groups.map { case (src, rows, toks) =>
+      new GenericInternalRow((UTF8String.fromString(src) +: cols.map[Any] {
+        case AggCountRows => rows
+        case AggSumNTok   => toks
+        case other => throw new IllegalStateException(s"$other not grouped")
+      }).toArray)
+    }))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new GraftSourceAggRowReader(p.asInstanceOf[GraftSourceAggPartition])
+    ManifestAnswer.Reader
+}
+
+private[spark] object GraftSourceAggScan {
+  /** One chunk's (source, rows, tokens) triples: its SrcStats blob, or —
+    * for a chunk written before SrcStats existed — a meta-only read
+    * (payload never leaves disk) folded chunk-locally and counted in
+    * `fallback`. Both executors run this one function. */
+  def chunkGroups(hconf: SerializableConfiguration,
+                  fallback: org.apache.spark.util.LongAccumulator)
+      : (String, Lineage.ManifestRow) => Iterator[(String, Long, Long)] =
+    (dir, m) => graft.engine.SrcStats.decode(m.src_stats) match {
+      case Some(stats) => stats.iterator
+      case None =>
+        fallback.add(1L)
+        val agg = new SourceGroups
+        ChunkBuilder.openMeta(Lineage.readChunkMeta(hconf.value, dir, m))
+          .foreach { case (src, len) => agg.add(src, 1L, len.toLong) }
+        agg.result
     }
 }
 
@@ -1082,48 +1071,23 @@ private[spark] final class SourceGroups {
   }
 }
 
-/** `sel(i)` maps output agg column i to 0 = row count, 1 = token sum. */
-case class GraftSourceAggPartition(groups: Array[(String, Long, Long)],
-                                   sel: Array[Int]) extends InputPartition
+/** A manifest-only aggregate's answer, built on the driver at planning:
+  * the one partition both aggregate scans return. */
+private[spark] final case class ManifestAnswer(rows: Array[InternalRow])
+    extends InputPartition
 
-class GraftSourceAggRowReader(p: GraftSourceAggPartition)
-    extends PartitionReader[InternalRow] {
-  private var i = -1
-  override def next(): Boolean = { i += 1; i < p.groups.length }
-  override def get(): InternalRow = {
-    val (src, rows, toks) = p.groups(i)
-    val out = new GenericInternalRow(1 + p.sel.length)
-    out.update(0, UTF8String.fromString(src))
-    var j = 0
-    while (j < p.sel.length) {
-      out.setLong(1 + j, if (p.sel(j) == 0) rows else toks)
-      j += 1
-    }
-    out
-  }
-  override def close(): Unit = ()
-}
-
-case class GraftAggPartition(values: Array[AnyRef]) extends InputPartition
-
-class GraftAggRowReader(p: GraftAggPartition)
-    extends PartitionReader[InternalRow] {
-  private var done = false
-  override def next(): Boolean = if (done) false else { done = true; true }
-  override def get(): InternalRow = {
-    val out = new GenericInternalRow(p.values.length)
-    var i = 0
-    while (i < p.values.length) {
-      p.values(i) match {
-        case null               => out.setNullAt(i)
-        case l: java.lang.Long  => out.setLong(i, l.longValue())
-        case s: String          => out.update(i, UTF8String.fromString(s))
+private[spark] object ManifestAnswer {
+  object Reader extends PartitionReaderFactory {
+    override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+      val rows = p.asInstanceOf[ManifestAnswer].rows
+      new PartitionReader[InternalRow] {
+        private var i = -1
+        override def next(): Boolean = { i += 1; i < rows.length }
+        override def get(): InternalRow = rows(i)
+        override def close(): Unit = ()
       }
-      i += 1
     }
-    out
   }
-  override def close(): Unit = ()
 }
 
 // ---- incremental (micro-batch) read over a batch tree ----------------------

@@ -75,16 +75,3 @@ object StreamingEncoder {
       .select(col("window.start").as("window_start"), col("source"),
         col("n_rows"), col("n_tokens"))
 }
-
-/** 64-bit content key over (n_tok, tokens, source) — FNV, deterministic. */
-object ContentKey {
-  def of(r: SeqRow): Long = {
-    var h = 0xcbf29ce484222325L
-    h = (h ^ r.n_tok) * 1099511628211L
-    var i = 0
-    while (i < r.tokens.length) { h = (h ^ r.tokens(i)) * 1099511628211L; i += 1 }
-    var c = 0
-    while (c < r.source.length) { h = (h ^ r.source.charAt(c)) * 1099511628211L; c += 1 }
-    h
-  }
-}

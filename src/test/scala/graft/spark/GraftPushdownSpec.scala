@@ -187,6 +187,74 @@ class GraftPushdownSpec extends AnyFunSuite {
       s"fallback ${gs.map(_.lastMetaFallbackChunks)} != chunks $totalChunks")
   }
 
+  /** Runs `body` on the driver-local executor, then again with
+    * `graft.plan.localManifestBytes=0` (the distributed executor). */
+  private def onBothExecutors(body: => Unit): Unit = {
+    body
+    spark.conf.set("graft.plan.localManifestBytes", "0")
+    try body finally spark.conf.unset("graft.plan.localManifestBytes")
+  }
+
+  private def groupedBySource(d: String)
+      : (Set[(String, Long, Long)], Option[GraftSourceAggScan]) = {
+    val q = spark.read.format("graft").load(d).groupBy("source")
+      .agg(org.apache.spark.sql.functions.count(lit(1)),
+        org.apache.spark.sql.functions.sum(col("n_tok")))
+    assert(q.queryExecution.executedPlan.toString
+      .contains("manifest-only grouped aggregate"))
+    val got = q.collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    val scan = q.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.scan
+    }.collectFirst { case s: GraftSourceAggScan => s }
+    (got, scan)
+  }
+
+  test("grouped pushdown over a mixed-era dir is exact on both executors " +
+      "and meta-reads only the pre-SrcStats chunks") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // clone the table, then strip src_stats from ONE manifest file: that
+    // partition reads like the previous engine version wrote it
+    val mixed = Files.createTempDirectory("graft-push-mixed")
+    Files.walk(Paths.get(dir)).iterator().asScala.foreach { p =>
+      val t = mixed.resolve(Paths.get(dir).relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(t)
+      else if (!p.getFileName.toString.endsWith(".crc")) Files.copy(p, t,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    val manifests = Files.list(mixed.resolve("_lineage")).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".json")).toSeq
+      .sortBy(_.getFileName.toString)
+    assert(manifests.size > 1, s"need several manifests, got $manifests")
+    val stripped = manifests.head
+    val lines = Files.readAllLines(stripped).asScala.filter(_.nonEmpty)
+    assert(lines.forall(_.contains("\"src_stats\":\"")))
+    Files.write(stripped, lines.map(_.replaceAll(""""src_stats":"[^"]*",""", ""))
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
+    val want = Set(("books", 300L, 3600L), ("web", 1200L, 14400L))
+    onBothExecutors {
+      val (got, scan) = groupedBySource(mixed.toString)
+      assert(got == want, s"got $got")
+      assert(scan.exists(_.lastMetaFallbackChunks == lines.size),
+        s"fallback ${scan.map(_.lastMetaFallbackChunks)} != stripped " +
+          s"chunks ${lines.size}")
+    }
+  }
+
+  test("GROUP BY source pushdown fails loudly past graft.agg.maxGroups " +
+      "on both executors") {
+    spark.conf.set("graft.agg.maxGroups", "1")
+    try onBothExecutors {
+      val e = intercept[Exception](groupedBySource(dir))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).toSeq
+      assert(msgs.exists(m => m.contains("exceeds 1 groups") &&
+        m.contains("graft.agg.maxGroups")), msgs.mkString(" | "))
+    } finally spark.conf.unset("graft.agg.maxGroups")
+  }
+
   test("limit pushdown plans only the chunks that cover the limit") {
     spark.conf.set("graft.read.maxPartitionBytes", "1") // chunk-per-task
     try {
