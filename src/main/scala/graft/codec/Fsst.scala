@@ -17,16 +17,18 @@ import java.util.zip.CRC32
   *
   * Framing: [magic 'G','S'][mode u8][varint rawLen][mode body]
   *          [crc32 LE of all previous bytes]
+  * Every Huffman block is `Huffman`'s one format, under the context model
+  * its shift names (8 = order-0, 3 = 32 classes, 0 = the previous byte).
   * The encoder writes four modes and keeps the smallest; raw is the
   * ceiling, so output never expands beyond header + rawLen:
   *          mode 0: [raw bytes]
-  *          mode 4: [Huffman block over the raw bytes]
-  *          mode 6: [HuffmanO1 block over the raw bytes] — order-1:
+  *          mode 4: [shift-8 Huffman block over the raw bytes]
+  *          mode 6: [shift-3 Huffman block over the raw bytes] — order-1:
   *                  per-class tables keyed by the previous byte's top 5
   *                  bits (static stand-in for the reference's adaptive
   *                  contexts on text payloads)
   *          mode 8: [varint dictFrameLen][inner Fsst frame: word dict]
-  *                  [HuffmanO1Wide block over the id bytes] — word model
+  *                  [shift-0 Huffman block over the id bytes] — word model
   *                  (WordModel) with FULL order-1 coding of the id stream
   *                  (vocab <= 256): "which word follows which", the static
   *                  recast of the reference's deep text contexts
@@ -35,14 +37,13 @@ import java.util.zip.CRC32
   *          mode 1: [u8 nSymbols][per symbol: u8 len, bytes][code bytes]
   *          mode 2: [u8 nSymbols][symbols][TokenCodec frame over the code
   *                  stream]
-  *          mode 3: [u8 nSymbols][symbols][Huffman block over the code
-  *                  stream]
-  *          mode 5: [u8 nSymbols][symbols][HuffmanO1 block over the code
-  *                  stream]
+  *          mode 3: [u8 nSymbols][symbols][shift-8 Huffman over the codes]
+  *          mode 5: [u8 nSymbols][symbols][shift-3 Huffman over the codes]
   *          mode 7: [varint dictFrameLen][inner Fsst frame: word dict]
   *                  [TokenCodec frame over the word-id stream]
-  *          mode 9: [HuffmanO1Wide block over the raw bytes]
-  * and, through `decodeShared`, the shared-table modes 10/11/14.
+  *          mode 9: [shift-0 Huffman block over the raw bytes]
+  * and, through `decodeShared`, the shared-table modes 10/11/14 (14 is a
+  * shift-3 bitstream under the shared `Huffman.trainModel` model).
   */
 object Fsst {
   final val EscapeCode = 255
@@ -367,7 +368,7 @@ object Fsst {
       if (b != null && b.length < body.length) { mode = m; body = b }
     if (allowWordModel && data.length >= 1024) consider(8, wordModel(data))
     if (data.length >= 64) {
-      consider(6, HuffmanO1.encode(data))
+      consider(6, Huffman.encode(data, Huffman.Order1))
       consider(4, Huffman.encode(data))
     }
     val bos = new java.io.ByteArrayOutputStream(body.length + 16)
@@ -397,7 +398,7 @@ object Fsst {
     val idBytes = new Array[Byte](ids.length)
     var i = 0
     while (i < ids.length) { idBytes(i) = ids(i).toByte; i += 1 }
-    val idsBlock = HuffmanO1Wide.encode(idBytes)
+    val idsBlock = Huffman.encode(idBytes, Huffman.Order1Full)
     val bos = new java.io.ByteArrayOutputStream(
       dictFrame.length + idsBlock.length + 8)
     Varint.write(bos, dictFrame.length.toLong)
@@ -458,7 +459,7 @@ object Fsst {
     * against — decoding with the wrong (but internally valid) dictionary
     * would otherwise produce silently wrong strings, the one failure mode
     * the data path must never have. */
-  def encodeShared(table: SymbolTable, o1Model: Array[Byte], dictFp: Int,
+  def encodeShared(table: SymbolTable, o1: Huffman.Tables, dictFp: Int,
                    data: Array[Byte]): Array[Byte] = {
     val inline = encode(data)
     var bestMode = -1
@@ -475,8 +476,8 @@ object Fsst {
       while (i < packed.length) { ints(i) = packed(i) & 0xff; i += 1 }
       consider(11, TokenCodec.encodeAutoFlat(ints))
     }
-    if (o1Model != null)
-      consider(14, HuffmanO1.encodeBitsWithModel(o1Model, data))
+    if (o1 != null)
+      consider(14, Huffman.encodeBitsWithModel(o1, data))
     if (bestBody == null) return inline
     val bos = new java.io.ByteArrayOutputStream()
     bos.write(MagicG); bos.write(MagicS)
@@ -497,7 +498,7 @@ object Fsst {
     * models (and verify the stored dictionary fingerprint); any other mode
     * delegates to the self-contained decoder (encodeShared falls back to
     * it when inline framing wins). */
-  def decodeShared(table: SymbolTable, o1Model: Array[Byte], dictFp: Int,
+  def decodeShared(table: SymbolTable, o1: Huffman.Tables, dictFp: Int,
                    bytes: Array[Byte]): Array[Byte] = {
     if (bytes.length < 7) throw TruncatedException
     if (bytes(0) != MagicG || bytes(1) != MagicS)
@@ -526,9 +527,8 @@ object Fsst {
       throw CorruptException(
         s"shared-dict fingerprint mismatch: frame ${storedFp.toHexString} " +
           s"vs supplied ${dictFp.toHexString} — wrong dictionary for this chunk")
-    if (mode == 14)
-      HuffmanO1.decodeBitsWithModel(o1Model, bytes, r.pos, end, rawLen)
-    else if (table == null || table.symbols.isEmpty)
+    if (mode == 14 && o1 != null) Huffman.decodeBits(o1, bytes, r.pos, end, rawLen)
+    else if (mode == 14 || table == null || table.symbols.isEmpty)
       throw CorruptException("shared-dict frame: external table required")
     else if (mode == 10) decompressWith(table, bytes, r.pos, end, rawLen)
     else {
@@ -582,11 +582,11 @@ object Fsst {
         if (out.length != rawLen) throw CorruptException("huffman raw length")
         out
       case 6 =>
-        val out = HuffmanO1.decode(bytes, r.pos, end)
+        val out = Huffman.decode(bytes, r.pos, end, Huffman.Order1)
         if (out.length != rawLen) throw CorruptException("o1 raw length")
         out
       case 9 =>
-        val out = HuffmanO1Wide.decode(bytes, r.pos, end)
+        val out = Huffman.decode(bytes, r.pos, end, Huffman.Order1Full)
         if (out.length != rawLen) throw CorruptException("o1w raw length")
         out
       case 7 | 8 =>
@@ -608,7 +608,7 @@ object Fsst {
             case Truncated  => throw TruncatedException
             case Corrupt(m) => throw CorruptException(m)
           } else {
-            val b = HuffmanO1Wide.decode(bytes, p, end)
+            val b = Huffman.decode(bytes, p, end, Huffman.Order1Full)
             val v = new Array[Int](b.length)
             var i = 0
             while (i < b.length) { v(i) = b(i) & 0xff; i += 1 }
@@ -654,7 +654,7 @@ object Fsst {
           val stream = Huffman.decode(bytes, p, end)
           decompressWith(new SymbolTable(symbols), stream, 0, stream.length, rawLen)
         } else if (mode == 5) {
-          val stream = HuffmanO1.decode(bytes, p, end)
+          val stream = Huffman.decode(bytes, p, end, Huffman.Order1)
           decompressWith(new SymbolTable(symbols), stream, 0, stream.length, rawLen)
         } else {
           // unpack the second-stage code stream back to bytes first

@@ -53,7 +53,7 @@ object ChunkBuilder {
     val dBlob = packStringsFront(docIds)
     val secD =
       if (sharedMeta != null)
-        Fsst.encodeShared(sharedMeta.fsst, sharedMeta.o1Model,
+        Fsst.encodeShared(sharedMeta.fsst, sharedMeta.o1Tables,
           sharedMeta.fingerprint, dBlob)
       else Fsst.encode(dBlob)
 
@@ -192,7 +192,7 @@ object ChunkBuilder {
       else {
         val dBlob =
           if (sharedMeta != null)
-            Fsst.decodeShared(sharedMeta.fsst, sharedMeta.o1Model,
+            Fsst.decodeShared(sharedMeta.fsst, sharedMeta.o1Tables,
               sharedMeta.fingerprint, sections(3))
           else Fsst.decode(sections(3))
         unpackStringBytesAuto(dBlob)

@@ -70,6 +70,11 @@ final case class EncoderConfig(
   * [version=1][varint fsstLen][fsst][varint o1Len][o1 model]. */
 final class MetaDict(val fsst: graft.codec.Fsst.SymbolTable,
                      val o1Model: Array[Byte]) {
+  /** The order-1 model's code and decode tables, built once per dictionary
+    * for every chunk that codes its doc_id section against it. */
+  lazy val o1Tables: graft.codec.Huffman.Tables =
+    graft.codec.Huffman.modelTables(o1Model)
+
   /** CRC32 of the serialized form, stored in every shared frame and checked
     * at decode: decoding against the WRONG (but internally valid)
     * dictionary must fail typed, never produce silently wrong strings. */
@@ -83,7 +88,7 @@ final class MetaDict(val fsst: graft.codec.Fsst.SymbolTable,
 object MetaDict {
   def train(blob: Array[Byte]): MetaDict =
     new MetaDict(graft.codec.Fsst.train(blob),
-      graft.codec.HuffmanO1.trainModel(blob))
+      graft.codec.Huffman.trainModel(blob))
 
   def toBytes(d: MetaDict): Array[Byte] = {
     val f = graft.codec.Fsst.tableToBytes(d.fsst)

@@ -1494,12 +1494,13 @@ class GraftDataWriter(dir: String, conf: Configuration, pid: Int,
 }
 
 /** Executor-level shared-dictionary cache. The DSv2 source schedules ONE
-  * TASK PER CHUNK, so a naive reader rebuilds the MetaDict models (Huffman
-  * bucket construction — tens of ms) thousands of times per query where
-  * the engine's mapPartitions path builds them once per task; at 7,683
-  * chunks that reconstruction dwarfed the decode itself. Keyed by
-  * (length, CRC32) of the serialized dict; executors hold a handful of
-  * dicts for their lifetime. */
+  * TASK PER CHUNK, so a naive reader rebuilds the MetaDict models (the FSST
+  * symbol buckets, and the order-1 Huffman tables a MetaDict builds once,
+  * on first use) thousands of times per query where the engine's
+  * mapPartitions path builds them once per task; at 7,683 chunks that
+  * reconstruction dwarfed the decode itself. Keyed by (length, CRC32) of
+  * the serialized dict; executors hold a handful of dicts for their
+  * lifetime. */
 private[spark] object MetaDictCache {
   // a long-lived executor serving MANY table dirs accumulates entries;
   // dicts are small (KBs) but unbounded growth is unbounded. True LRU

@@ -28,7 +28,7 @@ class FsstLegacyModeSpec extends AnyFunSuite with GenChecks {
           case 1 => codes
           case 2 => TokenCodec.encodeAutoFlat(codes.map(_ & 0xff))
           case 3 => Huffman.encode(codes)
-          case _ => HuffmanO1.encode(codes)
+          case _ => Huffman.encode(codes, Huffman.Order1)
         }
         inlineTable(table) ++ stream
       case 7 =>
@@ -38,7 +38,7 @@ class FsstLegacyModeSpec extends AnyFunSuite with GenChecks {
         val len = new java.io.ByteArrayOutputStream()
         Varint.write(len, dictFrame.length.toLong)
         len.toByteArray ++ dictFrame ++ TokenCodec.encodeAutoFlat(ids)
-      case 9 => HuffmanO1Wide.encode(data)
+      case 9 => Huffman.encode(data, Huffman.Order1Full)
     }
 
   for (mode <- Seq(1, 2, 3, 5, 7, 9))

@@ -119,6 +119,9 @@ class TokenCodecSpec extends AnyFunSuite with GenChecks {
           case other => fail(s"flip at $pos -> $other")
         }
     }
+    // twelve garbage bytes carry no magic at all
+    assert(TokenCodec.decode(Array.tabulate[Byte](12)(i => (i + 1).toByte)) ==
+      Corrupt("bad magic"))
   }
 
   test("dict overflow (card > 65536) downgrades away from dict") {

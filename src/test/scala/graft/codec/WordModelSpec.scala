@@ -3,7 +3,7 @@ package graft.codec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Word-level text model (Fsst modes 7/8) + the full-context order-1 coder
-  * (HuffmanO1Wide, mode 9 / mode-8 id stage): roundtrip, mode selection,
+  * (`Huffman` with shift 0, mode 9 / mode-8 id stage): roundtrip, mode selection,
   * and hostile-input behavior. */
 class WordModelSpec extends AnyFunSuite {
   import FsstFixtures.{markovText, mix}
@@ -39,15 +39,15 @@ class WordModelSpec extends AnyFunSuite {
     }
   }
 
-  test("HuffmanO1Wide roundtrips and rejects hostile input") {
+  test("full order-1 Huffman roundtrips and rejects hostile input") {
     val data = markovText(3000, 30, seed = 3L)
-    val enc = HuffmanO1Wide.encode(data)
+    val enc = Huffman.encode(data, Huffman.Order1Full)
     assert(java.util.Arrays.equals(
-      HuffmanO1Wide.decode(enc, 0, enc.length), data))
+      Huffman.decode(enc, 0, enc.length, Huffman.Order1Full), data))
     // truncations: never a crash or silent wrong answer, always the taxonomy
     Seq(1, 16, 33, enc.length / 2).foreach { keep =>
       intercept[Exception] {
-        val out = HuffmanO1Wide.decode(enc, 0, keep)
+        val out = Huffman.decode(enc, 0, keep, Huffman.Order1Full)
         assert(!java.util.Arrays.equals(out, data))
         throw TruncatedException // count "shorter but decoded" as handled
       }

@@ -65,9 +65,9 @@ class MetaCodecSpec extends AnyFunSuite with GenChecks {
       Array.tabulate(500)(i => f"blob/${i * 31}%x/item")))
     assert(dictA.fingerprint != dictB.fingerprint)
     forAll(genBlob, trials = 80) { blob =>
-      val enc = graft.codec.Fsst.encodeShared(dictA.fsst, dictA.o1Model,
+      val enc = graft.codec.Fsst.encodeShared(dictA.fsst, dictA.o1Tables,
         dictA.fingerprint, blob)
-      val back = graft.codec.Fsst.decodeShared(dictA.fsst, dictA.o1Model,
+      val back = graft.codec.Fsst.decodeShared(dictA.fsst, dictA.o1Tables,
         dictA.fingerprint, enc)
       assert(java.util.Arrays.equals(back, blob))
       // wrong-dict decode: typed failure for shared modes; inline-framed
@@ -75,7 +75,7 @@ class MetaCodecSpec extends AnyFunSuite with GenChecks {
       val mode = enc(2)
       if (mode == 10 || mode == 11 || mode == 14) {
         val e = intercept[graft.codec.CorruptException] {
-          graft.codec.Fsst.decodeShared(dictB.fsst, dictB.o1Model,
+          graft.codec.Fsst.decodeShared(dictB.fsst, dictB.o1Tables,
             dictB.fingerprint, enc)
         }
         assert(e.getMessage.contains("fingerprint"))
@@ -92,7 +92,7 @@ class MetaCodecSpec extends AnyFunSuite with GenChecks {
       Array.tabulate(400)(i => f"doc-$i%012d")))
     val blob = ChunkBuilder.packStringsFront(
       Array.tabulate(200)(i => f"doc-${i * 3}%012d"))
-    val enc = graft.codec.Fsst.encodeShared(dict.fsst, dict.o1Model,
+    val enc = graft.codec.Fsst.encodeShared(dict.fsst, dict.o1Tables,
       dict.fingerprint, blob)
     assert(enc(2) == 10 || enc(2) == 11 || enc(2) == 14) // shared mode won
     val rng = new scala.util.Random(42)
@@ -101,7 +101,7 @@ class MetaCodecSpec extends AnyFunSuite with GenChecks {
       val at = rng.nextInt(bad.length)
       bad(at) = (bad(at) ^ (1 << rng.nextInt(8))).toByte
       try {
-        graft.codec.Fsst.decodeShared(dict.fsst, dict.o1Model,
+        graft.codec.Fsst.decodeShared(dict.fsst, dict.o1Tables,
           dict.fingerprint, bad)
         fail(s"bit flip at $at decoded despite the frame CRC")
       } catch {
@@ -111,7 +111,7 @@ class MetaCodecSpec extends AnyFunSuite with GenChecks {
     }
     (0 until enc.length).foreach { cut =>
       intercept[Exception] {
-        graft.codec.Fsst.decodeShared(dict.fsst, dict.o1Model,
+        graft.codec.Fsst.decodeShared(dict.fsst, dict.o1Tables,
           dict.fingerprint, java.util.Arrays.copyOf(enc, cut))
       }
     }
