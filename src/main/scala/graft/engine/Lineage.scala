@@ -17,9 +17,14 @@ import org.apache.spark.util.SerializableConfiguration
   * real cluster):
   *   data/part-NNNNN.graft      framed chunks, concatenated:
   *                              [varint payloadLen][payload][varint metaLen][meta]*
-  *   _lineage/part-NNNNN.json   manifest: one JSON line per chunk
+  *   _lineage/part-NNNNN.json   manifest: one flat JSON line per chunk
   *                              (chunk_id codec n_rows n_tokens raw_bytes
-  *                               enc_bytes crc32 offset length min/max doc_id)
+  *                               enc_bytes crc32 offset length min/max tok,
+  *                               tok_set and src_stats as base64, gen,
+  *                               min/max doc_id); tok_set holds the sketch
+  *                               in its on-disk form (TokenSketch.pack:
+  *                               an exact bitmap Huffman-coded as mode 4),
+  *                               and the parse turns it back into mode 1
   *
   * Atomicity: data + manifest are written to `.inprogress` names and renamed;
   * the manifest rename is the commit point (rename is atomic on HDFS and
@@ -1147,55 +1152,134 @@ object Lineage {
     s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
       case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
 
-  private def manifestJson(r: ManifestRow): String =
+  /** One manifest line. The sketch is written in its on-disk form
+    * (`TokenSketch.pack`: an exact bitmap Huffman-coded as mode 4 when that
+    * is smaller); the blobs are base64, the doc_ids `esc`-escaped. */
+  private[engine] def manifestJson(r: ManifestRow): String =
     s"""{"part_id":${r.part_id},"seq":${r.seq},"chunk_id":${r.chunk_id},""" +
     s""""codec":${r.codec},"n_rows":${r.n_rows},"n_tokens":${r.n_tokens},""" +
     s""""raw_bytes":${r.raw_bytes},"enc_bytes":${r.enc_bytes},"crc32":${r.crc32},""" +
     s""""offset":${r.offset},"length":${r.length},""" +
     s""""min_tok":${r.min_tok},"max_tok":${r.max_tok},""" +
-    s""""tok_set":"${java.util.Base64.getEncoder.encodeToString(r.tok_set)}",""" +
+    s""""tok_set":"${java.util.Base64.getEncoder.encodeToString(TokenSketch.pack(r.tok_set))}",""" +
     s""""src_stats":"${java.util.Base64.getEncoder.encodeToString(r.src_stats)}",""" +
     s""""gen":${r.gen},""" +
     s""""min_doc_id":"${esc(r.min_doc_id)}","max_doc_id":"${esc(r.max_doc_id)}"}"""
 
-  private def parseManifestLine(line: String): ManifestRow = {
-    // flat known-schema JSON: extract with regexes (values are numbers or
-    // escaped strings we produced ourselves)
-    def num(k: String): Long = {
-      val m = s""""$k":(-?\\d+)""".r.findFirstMatchIn(line)
-      m.map(_.group(1).toLong).getOrElse(
-        throw new IllegalArgumentException(s"manifest line missing $k: $line"))
+  // the numeric fields of a manifest line; the first 11 are required
+  private val NumKeys = Array("part_id", "seq", "chunk_id", "codec", "n_rows",
+    "n_tokens", "raw_bytes", "enc_bytes", "crc32", "offset", "length",
+    "min_tok", "max_tok", "gen")
+  private val NumIdx: Map[String, Int] = NumKeys.zipWithIndex.toMap
+
+  /** Parse one manifest line in ONE pass over its flat `"key":value` object
+    * (every value a number or a string, keys in any order, unknown keys
+    * skipped). Strings decode every JSON escape, so a doc_id holding a
+    * control character reads back as written. Fields added after v1
+    * default instead of throwing, so a lineage dir written by an older
+    * engine still resumes/decodes: missing token zone bounds take the
+    * conservative "could contain anything" range, a missing or unreadable
+    * tok_set the empty "unknown" sketch (never prunes), a missing src_stats
+    * the empty blob (SrcStats reads it as "no stats": meta-read fallback),
+    * and a missing gen 0 (pre-gen manifests live in the gen-0 files). Any
+    * other missing field throws IllegalArgumentException. */
+  private[engine] def parseManifestLine(line: String): ManifestRow = {
+    val n = line.length
+    var p = 0
+    def bad(why: String): Nothing = throw new IllegalArgumentException(
+      s"malformed manifest line ($why at $p): $line")
+    def skipWs(): Unit = while (p < n && line.charAt(p) <= ' ') p += 1
+    def expect(c: Char): Unit = {
+      skipWs()
+      if (p >= n || line.charAt(p) != c) bad(s"expected '$c'")
+      p += 1
     }
-    // Fields added after v1 default instead of throwing, so a lineage dir
-    // written by an older engine still resumes/decodes. Missing token zone
-    // bounds default to the conservative "could contain anything" range
-    // (never prunes, always correct).
-    def numOr(k: String, dflt: Long): Long =
-      s""""$k":(-?\\d+)""".r.findFirstMatchIn(line)
-        .map(_.group(1).toLong).getOrElse(dflt)
-    def str(k: String): String = {
-      val m = (s""""$k":"((?:[^"\\\\]|\\\\.)*)"""").r.findFirstMatchIn(line)
-      val raw = m.map(_.group(1)).getOrElse(
-        throw new IllegalArgumentException(s"manifest line missing $k: $line"))
-      raw.replace("\\\"", "\"").replace("\\\\", "\\")
+    def num(): Long = {
+      val from = p
+      if (p < n && line.charAt(p) == '-') p += 1
+      while (p < n && line.charAt(p) >= '0' && line.charAt(p) <= '9') p += 1
+      java.lang.Long.parseLong(line, from, p, 10) // throws on "", "-", overflow
     }
-    // tok_set is base64 (never escaped); missing (pre-upgrade manifest)
-    // defaults to the empty "unknown" sketch, which never prunes
-    val tokSet = """"tok_set":"([A-Za-z0-9+/=]*)"""".r.findFirstMatchIn(line)
-      .map(m => java.util.Base64.getDecoder.decode(m.group(1)))
-      .getOrElse(Array.emptyByteArray)
-    // src_stats is base64 too; missing (pre-upgrade manifest) = empty blob,
-    // which SrcStats.decode reads as "no stats" (meta-read fallback)
-    val srcStats = """"src_stats":"([A-Za-z0-9+/=]*)"""".r.findFirstMatchIn(line)
-      .map(m => java.util.Base64.getDecoder.decode(m.group(1)))
-      .getOrElse(Array.emptyByteArray)
-    ManifestRow(num("part_id").toInt, num("seq").toInt, num("chunk_id"),
-      num("codec").toInt, num("n_rows").toInt, num("n_tokens"),
-      num("raw_bytes"), num("enc_bytes"), num("crc32"), num("offset"),
-      num("length"), str("min_doc_id"), str("max_doc_id"),
-      numOr("min_tok", Int.MinValue).toInt, numOr("max_tok", Int.MaxValue).toInt,
-      tokSet, srcStats,
-      // pre-gen manifests (no DELETE ever ran) live in the gen-0 files
-      gen = numOr("gen", 0).toInt)
+    def str(): String = {
+      expect('"')
+      val from = p
+      while (p < n && line.charAt(p) != '"' && line.charAt(p) != '\\') p += 1
+      if (p < n && line.charAt(p) == '"') { p += 1; return line.substring(from, p - 1) }
+      val sb = new java.lang.StringBuilder(p - from + 16).append(line, from, p)
+      while (p < n && line.charAt(p) != '"') {
+        val c = line.charAt(p)
+        if (c != '\\') { sb.append(c); p += 1 }
+        else if (p + 1 >= n) bad("dangling escape")
+        else {
+          line.charAt(p + 1) match {
+            case '"' => sb.append('"'); case '\\' => sb.append('\\')
+            case '/' => sb.append('/'); case 'b' => sb.append('\b')
+            case 'f' => sb.append('\f'); case 'n' => sb.append('\n')
+            case 'r' => sb.append('\r'); case 't' => sb.append('\t')
+            case 'u' =>
+              if (p + 6 > n) bad("short \\u escape")
+              var v = 0
+              var k = p + 2
+              while (k < p + 6) {
+                val d = Character.digit(line.charAt(k), 16)
+                if (d < 0) bad("bad \\u escape")
+                v = v << 4 | d
+                k += 1
+              }
+              sb.append(v.toChar)
+              p += 4
+            case e => bad(s"bad escape \\$e")
+          }
+          p += 2
+        }
+      }
+      if (p >= n) bad("unterminated string")
+      p += 1
+      sb.toString
+    }
+    def blob(): Array[Byte] = {
+      val b64 = str()
+      try java.util.Base64.getDecoder.decode(b64)
+      catch { case _: IllegalArgumentException => Array.emptyByteArray }
+    }
+    val nums = new Array[Long](NumKeys.length)
+    var seen = 0 // bit i set: NumKeys(i) was read
+    var minDoc: String = null
+    var maxDoc: String = null
+    var tokSet = Array.emptyByteArray
+    var srcStats = Array.emptyByteArray
+    expect('{')
+    skipWs()
+    var more = p >= n || line.charAt(p) != '}'
+    if (!more) p += 1
+    while (more) {
+      val key = str()
+      expect(':')
+      skipWs()
+      key match {
+        case "min_doc_id" => minDoc = str()
+        case "max_doc_id" => maxDoc = str()
+        case "tok_set" => tokSet = TokenSketch.unpack(blob())
+        case "src_stats" => srcStats = blob()
+        case _ =>
+          val i = NumIdx.getOrElse(key, -1)
+          if (i >= 0) { nums(i) = num(); seen |= 1 << i }
+          else if (p < n && line.charAt(p) == '"') str()
+          else num()
+      }
+      skipWs()
+      if (p < n && line.charAt(p) == ',') p += 1
+      else { expect('}'); more = false }
+    }
+    def missing(k: String): Nothing =
+      throw new IllegalArgumentException(s"manifest line missing $k: $line")
+    def req(i: Int): Long = if ((seen >>> i & 1) != 0) nums(i) else missing(NumKeys(i))
+    def opt(i: Int, dflt: Long): Long = if ((seen >>> i & 1) != 0) nums(i) else dflt
+    ManifestRow(req(0).toInt, req(1).toInt, req(2), req(3).toInt,
+      req(4).toInt, req(5), req(6), req(7), req(8), req(9), req(10),
+      if (minDoc != null) minDoc else missing("min_doc_id"),
+      if (maxDoc != null) maxDoc else missing("max_doc_id"),
+      opt(11, Int.MinValue).toInt, opt(12, Int.MaxValue).toInt,
+      tokSet, srcStats, gen = opt(13, 0).toInt)
   }
 }

@@ -1,5 +1,7 @@
 package graft.engine
 
+import graft.codec.{Huffman, TokenCodec, Varint}
+
 /** Per-chunk token CONTAINMENT sketch — the zone map's second level. min/max
   * bounds prune probes outside the chunk's value range, but on a zipf vocab
   * most chunks span nearly the whole range, so an in-vocab rare-token probe
@@ -18,10 +20,19 @@ package graft.engine
   *    wide int domains; false positives only cost a wasted decode, never a
   *    missed row.
   *
+  *  - mode 4 (packed bitmap, on disk only): the manifest form of mode 1,
+  *    `[4][varint range][Huffman order-0 of the bitmap bytes][u32 CRC32 of
+  *    the mode-1 sketch]`. `pack` writes it when it is smaller than mode 1
+  *    (a zipf chunk's bitmap codes about 55% smaller) and `unpack` turns it
+  *    back into mode 1 as the manifest line is parsed, so every sketch in
+  *    memory is mode 1, 2 or 3. A mode-4 sketch that does not decode to a
+  *    bitmap of its range with a matching CRC unpacks to the empty sketch.
+  *
   * An EMPTY sketch (old chunks/manifests written before this existed) means
   * "unknown": mightContain returns true, pruning degrades to min/max only.
   * The leading mode byte versions the format — old readers fail OPEN on
-  * mode 3 (the `case _` arm), old mode-2 sketches stay readable here.
+  * modes 3 and 4 (the `case _` arm), old mode-2 sketches stay readable
+  * here.
   * Reference analog: this is the engine's answer to selective chunked
   * decode (`/root/reference/tests/test_ppmd7.py:95-146`) for content
   * predicates rather than offsets. */
@@ -44,7 +55,7 @@ object TokenSketch {
       val nBytes = ((range + 7) / 8).toInt
       val out = new Array[Byte](1 + 5 + nBytes) // worst-case varint(range)
       out(0) = 1
-      var pos = graft.codec.Varint.write(out, 1, range)
+      var pos = Varint.write(out, 1, range)
       val bitBase = pos
       var i = 0
       while (i < tokens.length) {
@@ -73,7 +84,7 @@ object TokenSketch {
       val nBytes = bits >>> 3
       val head = new Array[Byte](1 + 5)
       head(0) = 3
-      val bodyAt = graft.codec.Varint.write(head, 1, nBytes.toLong)
+      val bodyAt = Varint.write(head, 1, nBytes.toLong)
       val out = new Array[Byte](bodyAt + nBytes)
       System.arraycopy(head, 0, out, 0, bodyAt)
       i = 0
@@ -106,7 +117,7 @@ object TokenSketch {
     if (sketch == null || sketch.length == 0) return true
     sketch(0) match {
       case 1 =>
-        val r = new graft.codec.Varint.Reader(sketch)
+        val r = new Varint.Reader(sketch)
         r.pos = 1
         val range = try r.read() catch { case _: Exception => return true }
         if (range <= 0 || range > BitmapMaxRange ||
@@ -131,7 +142,7 @@ object TokenSketch {
         }
         all
       case 3 =>
-        val r = new graft.codec.Varint.Reader(sketch)
+        val r = new Varint.Reader(sketch)
         r.pos = 1
         val nBytes = (try r.read() catch { case _: Exception => return true }).toInt
         val bits = nBytes.toLong * 8
@@ -154,6 +165,52 @@ object TokenSketch {
         all
       case _ => true // future mode: never prune what we can't read
     }
+  }
+
+  /** The on-disk form of `sk`: a mode-1 sketch becomes mode 4 when that is
+    * smaller; every other sketch (and a mode-1 sketch whose bitmap does not
+    * match its range) is returned as is. */
+  def pack(sk: Array[Byte]): Array[Byte] = {
+    if (sk.length == 0 || sk(0) != 1) return sk
+    val r = new Varint.Reader(sk)
+    r.pos = 1
+    val range = try r.read() catch { case _: Exception => return sk }
+    val bitsAt = r.pos
+    if (range <= 0 || range > BitmapMaxRange ||
+        sk.length - bitsAt != ((range + 7) / 8).toInt) return sk
+    val body = Huffman.encode(java.util.Arrays.copyOfRange(sk, bitsAt, sk.length))
+    if (bitsAt + body.length + 4 >= sk.length) return sk
+    val out = java.util.Arrays.copyOf(sk, bitsAt + body.length + 4)
+    out(0) = 4
+    System.arraycopy(body, 0, out, bitsAt, body.length)
+    TokenCodec.writeIntLE(out, out.length - 4, crc(sk))
+    out
+  }
+
+  /** The in-memory form of an on-disk sketch: mode 4 back to its mode-1
+    * bytes, anything else as is. A mode-4 sketch that is truncated or
+    * corrupt becomes the empty "unknown" sketch — never a wrong bitmap,
+    * which could deny a token the chunk holds. Never throws. */
+  def unpack(sk: Array[Byte]): Array[Byte] = {
+    if (sk.length == 0 || sk(0) != 4) return sk
+    try {
+      val r = new Varint.Reader(sk, 1, sk.length - 4)
+      val range = r.read()
+      if (range <= 0 || range > BitmapMaxRange) return Array.emptyByteArray
+      val bits = Huffman.decode(sk, r.pos, sk.length - 4)
+      if (bits.length != ((range + 7) / 8).toInt) return Array.emptyByteArray
+      val out = new Array[Byte](r.pos + bits.length)
+      System.arraycopy(sk, 0, out, 0, r.pos)
+      out(0) = 1
+      System.arraycopy(bits, 0, out, r.pos, bits.length)
+      if (crc(out) != TokenCodec.readIntLE(sk, sk.length - 4)) Array.emptyByteArray else out
+    } catch { case _: Exception => Array.emptyByteArray }
+  }
+
+  private def crc(b: Array[Byte]): Int = {
+    val c = new java.util.zip.CRC32()
+    c.update(b, 0, b.length)
+    c.getValue.toInt
   }
 
   private def mix(z0: Long): Long = {

@@ -132,6 +132,92 @@ class TokenSketchSpec extends AnyFunSuite with GenChecks {
     toks.foreach(t => assert(TokenSketch.mightContain(garbled, toks.min, t)))
   }
 
+  // mode-1 sketches of the shapes pack must round-trip: one token, the full
+  // 2^16 range, dense and sparse sets
+  private val genBitmapToks: Gen[Array[Int]] = Gen.oneOf(
+    Gen.choose(-100000, 100000).map(t => Array(t)),
+    Gen.choose(0, 1000).map(lo => Array(lo, lo + TokenSketch.BitmapMaxRange - 1)),
+    Gen.zip(Gen.choose(0, 1000), Gen.choose(1, 20000)).map { case (lo, n) =>
+      Array.tabulate(n)(i => lo + i) },
+    Gen.zip(Gen.choose(2, 200), Gen.choose(0, 60000)).flatMap { case (n, span) =>
+      Gen.listOfN(n, Gen.choose(0, span)).map(_.toArray) },
+    genVocabToks)
+
+  test("pack: mode 1 -> mode 4 -> mode 1 gives identical bytes") {
+    var packed = 0
+    forAll(genBitmapToks, trials = 120) { toks =>
+      val (lo, hi) = bounds(toks)
+      val sk = TokenSketch.build(toks, lo, hi)
+      assert(sk(0) == 1)
+      val disk = TokenSketch.pack(sk)
+      assert(disk(0) == 1 || disk(0) == 4)
+      if (disk(0) == 4) {
+        packed += 1
+        assert(disk.length < sk.length, "mode 4 is written only when smaller")
+      } else assert(disk eq sk)
+      assert(java.util.Arrays.equals(TokenSketch.unpack(disk), sk))
+    }
+    assert(packed > 0, "no generated sketch packed")
+    // a dense zipf-like chunk: the case the on-disk form exists for
+    val rnd = new scala.util.Random(7)
+    val toks = Array.fill(16384)((50257 * math.pow(rnd.nextDouble(), 3)).toInt)
+    val sk = TokenSketch.build(toks, toks.min, toks.max)
+    val disk = TokenSketch.pack(sk)
+    assert(disk(0) == 4 && disk.length < sk.length * 3 / 4,
+      s"${sk.length} -> ${disk.length}")
+    assert(java.util.Arrays.equals(TokenSketch.unpack(disk), sk))
+  }
+
+  test("pack/unpack pass mode 2, mode 3 and empty sketches through") {
+    val wideToks = Array.tabulate(3000)(i => i * 20011 + 7) :+ Int.MaxValue
+    val m3 = TokenSketch.build(wideToks, wideToks.min, Int.MaxValue)
+    assert(m3(0) == 3)
+    val m2 = Array[Byte](2) ++ Array.fill[Byte](TokenSketch.BloomBits / 8)(0x5a)
+    for (sk <- Seq(m3, m2, Array.emptyByteArray)) {
+      assert(TokenSketch.pack(sk) eq sk)
+      assert(TokenSketch.unpack(sk) eq sk)
+    }
+    // a mode-1 sketch whose bitmap does not match its range stays mode 1
+    val odd = TokenSketch.build(Array(1, 5, 9), 1, 9) :+ 0.toByte
+    assert(TokenSketch.pack(odd) eq odd)
+  }
+
+  test("a truncated or bit-flipped mode-4 sketch unpacks to empty, never " +
+      "throws, and raw mode-4 bytes never prune") {
+    val toks = Array.tabulate(600)(i => (i * i * 7) % 30000)
+    val sk = TokenSketch.build(toks, toks.min, toks.max)
+    val disk = TokenSketch.pack(sk)
+    assert(disk(0) == 4)
+    // the raw on-disk bytes read through the `case _` arm, as an older
+    // engine that knows no mode 4 reads them: every probe admits the chunk
+    (toks.min to toks.max by 97).foreach(t =>
+      assert(TokenSketch.mightContain(disk, toks.min, t)))
+    for (keep <- 0 until disk.length)
+      assert(TokenSketch.unpack(java.util.Arrays.copyOf(disk, keep)).isEmpty,
+        s"truncated to $keep")
+    // every bit after the mode byte: the CRC rejects each flip that changes
+    // the bitmap; only a flip of a bit the decoder never reads (the code
+    // stream's padding, the spare nibble of an odd-length header) decodes,
+    // to the same bitmap
+    var same = 0
+    for (bit <- 8 until disk.length * 8) {
+      val flip = disk.clone()
+      flip(bit >>> 3) = (flip(bit >>> 3) ^ (1 << (bit & 7))).toByte
+      val got = TokenSketch.unpack(flip)
+      if (got.nonEmpty) {
+        assert(java.util.Arrays.equals(got, sk), s"bit $bit flipped to a wrong bitmap")
+        same += 1
+      }
+    }
+    assert(same < 16, s"$same flipped bits decoded")
+    for (bit <- 0 until 8) { // a flipped mode byte is no mode the reader prunes with
+      val flip = disk.clone()
+      flip(0) = (flip(0) ^ (1 << bit)).toByte
+      toks.foreach(t => assert(TokenSketch.mightContain(
+        TokenSketch.unpack(flip), toks.min, t)))
+    }
+  }
+
   test("sketch roundtrips through the manifest JSON and the chunk frame") {
     val spark = graft.SparkTestSession.spark
     import org.apache.spark.sql.functions.{array_contains, col}
