@@ -47,26 +47,51 @@ object BlockCodec {
     out.result()
   }
 
-  def encode(values: Array[Int], splits: Array[Int]): Array[Byte] = {
-    val nBlocks = splits.length
-    // per-block stats pass gives exact framed lengths -> single allocation
-    val stats = new Array[ChunkStats](nBlocks)
-    var total = Varint.len(nBlocks.toLong)
+  /** Stats of each block of `values` split at `splits`, which choose each
+    * block's codec and size the payload (`payloadSize`) before any byte is
+    * written. */
+  def analyze(values: Array[Int], splits: Array[Int]): Array[ChunkStats] = {
+    val stats = new Array[ChunkStats](splits.length)
     var from = 0
     var b = 0
-    while (b < nBlocks) {
-      val st = ChunkStats.analyze(values, from, splits(b))
-      stats(b) = st
-      val framedLen = TokenCodec.Overhead + st.payloadSize(st.bestCodec)
-      total += Varint.len(framedLen.toLong) + framedLen
+    while (b < splits.length) {
+      stats(b) = ChunkStats.analyze(values, from, splits(b))
       from = splits(b)
       b += 1
     }
-    val out = new Array[Byte](total)
-    var pos = Varint.write(out, 0, nBlocks.toLong)
-    from = 0
-    b = 0
-    while (b < nBlocks) {
+    stats
+  }
+
+  /** Exact payload size of the blocks with these stats. */
+  def payloadSize(stats: Array[ChunkStats]): Int = {
+    var total = Varint.len(stats.length.toLong)
+    var b = 0
+    while (b < stats.length) {
+      val framedLen = TokenCodec.Overhead + stats(b).payloadSize(stats(b).bestCodec)
+      total += Varint.len(framedLen.toLong) + framedLen
+      b += 1
+    }
+    total
+  }
+
+  /** The blocks payload alone, allocated at its exact size (perfbench's
+    * layer timings call it; the frame path uses `encodeInto`). */
+  def encode(values: Array[Int], splits: Array[Int]): Array[Byte] = {
+    val stats = analyze(values, splits)
+    val out = new Array[Byte](payloadSize(stats))
+    val end = encodeInto(values, splits, stats, out, 0)
+    require(end == out.length, s"blocks size model mismatch: $end vs ${out.length}")
+    out
+  }
+
+  /** Write the payload of `values` split at `splits`, with `stats` from
+    * `analyze`, into `out` at `pos`; returns the end position. */
+  def encodeInto(values: Array[Int], splits: Array[Int], stats: Array[ChunkStats],
+                 out: Array[Byte], pos0: Int): Int = {
+    var pos = Varint.write(out, pos0, splits.length.toLong)
+    var from = 0
+    var b = 0
+    while (b < splits.length) {
       val st = stats(b)
       val framedLen = TokenCodec.Overhead + st.payloadSize(st.bestCodec)
       pos = Varint.write(out, pos, framedLen.toLong)
@@ -75,8 +100,7 @@ object BlockCodec {
       from = splits(b)
       b += 1
     }
-    require(pos == total, s"blocks size model mismatch: $pos vs $total")
-    out
+    pos
   }
 
   def decode(buf: Array[Byte], pos0: Int, limit: Int, n: Int,

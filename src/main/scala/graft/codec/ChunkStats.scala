@@ -11,9 +11,16 @@ package graft.codec
   *
   * The selector runs on every 256-token block, so `analyze` allocates
   * nothing per block beyond the distinct-value array: varint lengths are
-  * branch-free, and a slice whose values span fewer than 2^16 sets bits in
-  * a per-thread bitmap that is read out already sorted (no hashing, no
-  * sort). Only wider ranges fall back to a hash set and a sort.
+  * branch-free, the zigzag varint sum is taken only for a slice with a
+  * negative value, and a slice whose values span fewer than 2^16 sets a
+  * bit per new run value in a per-thread bitmap during the main pass
+  * (counting the distinct values as it goes), read out already sorted (no
+  * hashing, no sort). Only wider ranges fall back to a hash set and a
+  * sort.
+  *
+  * The whole-chunk analysis that `TokenCodec.encodeAuto` makes beside the
+  * per-block ones also gives the chunk's bounds and, through
+  * `distinctBitmap`, its token sketch, so no other pass reads the tokens.
   *
   * All fields are mergeable except the exact varint sums, so the Spark-side
   * reporting aggregate (graft.stats) carries a mergeable subset; selection
@@ -83,28 +90,39 @@ object ChunkStats {
 
   def analyze(v: Array[Int]): ChunkStats = analyze(v, 0, v.length)
 
-  /** Analysis of the slice [from, until): one pass for the range, runs and
-    * exact varint sums, then the sorted distinct set. */
+  /** Analysis of the slice [from, until): a pass for the range, then one
+    * for the runs, the exact varint sums and (for a range narrower than
+    * `BitmapSpan`) the distinct bitmap, then the sorted distinct set. */
   def analyze(v: Array[Int], from: Int, until: Int): ChunkStats = {
     val n = until - from
     if (n == 0) // dict payload for card=0: varint(0) + width byte = 2
       return ChunkStats(0, 0, 0, 0, 0, 0, Array.emptyIntArray, 0, 0, 2, 1)
 
+    // the range first: it decides whether the distinct values go into the
+    // bitmap during the main pass
+    var min = v(from)
+    var max = min
+    var i = from + 1
+    while (i < until) {
+      val x = v(i)
+      if (x < min) min = x
+      if (x > max) max = x
+      i += 1
+    }
+    val narrow = max.toLong - min.toLong < BitmapSpan
+    val bits = if (narrow) bitmap.get else null
     var prev = v(from)
-    var min = prev
-    var max = prev
     var runCount = 1
     var maxRun = 1
     var curRun = 1
     var rle = Varint.zlen32(prev) // first run's value; lengths added below
     var delta = Varint.zlen32(prev)
     var ulen = Varint.len32(prev) // unsigned; valid if min>=0
-    var zlenSum = Varint.zlen32(prev)
-    var i = from + 1
+    var nDistinct = 0
+    if (narrow) nDistinct = setBit(bits, prev - min)
+    i = from + 1
     while (i < until) {
       val x = v(i)
-      if (x < min) min = x
-      if (x > max) max = x
       if (x == prev) {
         curRun += 1
       } else {
@@ -112,10 +130,10 @@ object ChunkStats {
         if (curRun > maxRun) maxRun = curRun
         curRun = 1
         runCount += 1
+        if (narrow) nDistinct += setBit(bits, x - min)
       }
       delta += Varint.zlen(x.toLong - prev.toLong)
       ulen += Varint.len32(x)
-      zlenSum += Varint.zlen32(x)
       prev = x
       i += 1
     }
@@ -123,7 +141,7 @@ object ChunkStats {
     if (curRun > maxRun) maxRun = curRun
 
     val sorted =
-      if (max.toLong - min.toLong < BitmapSpan) distinctByBitmap(v, from, until, min, max)
+      if (narrow) readDistinct(bits, nDistinct, min, max)
       else distinctByHash(v, from, until)
     var card = -1
     var dictPayload = Int.MaxValue
@@ -140,43 +158,62 @@ object ChunkStats {
     }
 
     // the unsigned sum used `& 0xffffffffL` so it's only meaningful when all
-    // values are non-negative; with negatives the codec flags zigzag mode.
-    val varintPayload = 1 + (if (min >= 0) ulen else zlenSum)
+    // values are non-negative; with negatives the codec flags zigzag mode,
+    // and only then is the zigzag sum taken
+    val varintPayload = 1 + (if (min >= 0) ulen else zlenSum(v, from, until))
     ChunkStats(n, min, max, runCount, maxRun, card,
       if (sorted == null) Array.emptyIntArray else sorted, rle, delta,
       dictPayload, varintPayload)
   }
 
+  private def zlenSum(v: Array[Int], from: Int, until: Int): Int = {
+    var s = 0
+    var i = from
+    while (i < until) { s += Varint.zlen32(v(i)); i += 1 }
+    s
+  }
+
   /** Value ranges narrower than this take the bitmap path: 2^16 bits is an
     * 8 KB scratch per thread, and at most 2^16 distinct values can never
     * overflow `DictCap`. */
-  private final val BitmapSpan = 1 << 16
+  private[codec] final val BitmapSpan = 1 << 16
 
-  /** All-zero between calls: `distinctByBitmap` clears what it sets. */
-  private val bitmap = ThreadLocal.withInitial[Array[Long]](() => new Array[Long](BitmapSpan >>> 6))
+  /** All-zero between calls: `analyze` (through `readDistinct`) and
+    * `dictRanks` clear what they set. Words [0, 1024) hold one bit per
+    * value offset; the 16 words after them are `setBit`'s summary, one bit
+    * per word. */
+  private final val Summary = BitmapSpan >>> 12
+  private val bitmap = ThreadLocal.withInitial[Array[Long]](() =>
+    new Array[Long]((BitmapSpan >>> 6) + Summary))
 
-  /** Sorted distinct values of a slice whose range [min, max] is narrower
-    * than `BitmapSpan`: one bit per value offset, then the set bits read
-    * out in order (and cleared) with numberOfTrailingZeros. */
-  private def distinctByBitmap(v: Array[Int], from: Int, until: Int, min: Int,
-                               max: Int): Array[Int] = {
-    val bits = bitmap.get
-    var i = from
-    while (i < until) {
-      val d = v(i) - min
-      bits(d >>> 6) |= 1L << d
-      i += 1
-    }
-    val last = (max - min) >>> 6
-    var card = 0
-    var w = 0
-    while (w <= last) { card += java.lang.Long.bitCount(bits(w)); w += 1 }
+  /** Set bit d of the value bitmap and its word's summary bit; 1 if the
+    * bit was clear. */
+  @inline private def setBit(bits: Array[Long], d: Int): Int = {
+    val w = d >>> 6
+    val word = bits(w)
+    bits(w) = word | (1L << d)
+    bits((BitmapSpan >>> 6) + (w >>> 6)) |= 1L << w
+    (~(word >>> d) & 1L).toInt
+  }
+
+  /** The `card` values set in the bitmap over [min, max], in order, clearing
+    * the bitmap: the summary leads straight to the touched words (a block
+    * of 256 values spread over a 50K-token vocabulary touches a few
+    * hundred of its 782 words), whose bits are read out with
+    * numberOfTrailingZeros. */
+  private def readDistinct(bits: Array[Long], card: Int, min: Int,
+                           max: Int): Array[Int] = {
+    val sum = BitmapSpan >>> 6
     val out = new Array[Int](card)
+    val last = (max - min) >>> 12
     var k = 0
-    w = 0
-    while (w <= last) {
-      var word = bits(w)
-      if (word != 0L) {
+    var s = 0
+    while (s <= last) {
+      var touched = bits(sum + s)
+      bits(sum + s) = 0L
+      while (touched != 0L) {
+        val w = (s << 6) + java.lang.Long.numberOfTrailingZeros(touched)
+        var word = bits(w)
         bits(w) = 0L
         val base = min + (w << 6)
         while (word != 0L) {
@@ -184,10 +221,62 @@ object ChunkStats {
           k += 1
           word &= word - 1L
         }
+        touched &= touched - 1L
       }
-      w += 1
+      s += 1
     }
     out
+  }
+
+  /** Index of each value of v[from, until) in `dict`, the sorted distinct
+    * values of that slice, into idx(0..): a rank over a bitmap of `dict`
+    * (the bits below the value in its word, plus the per-word prefix count)
+    * instead of a binary search per value. `dict` must span fewer than
+    * `BitmapSpan` values. */
+  private[codec] def dictRanks(dict: Array[Int], v: Array[Int], from: Int,
+                               until: Int, idx: Array[Int]): Unit = {
+    if (dict.length == 0) return
+    val min = dict(0)
+    val bits = bitmap.get
+    val nWords = ((dict(dict.length - 1) - min) >>> 6) + 1
+    var j = 0
+    while (j < dict.length) {
+      val d = dict(j) - min
+      bits(d >>> 6) |= 1L << d
+      j += 1
+    }
+    val prefix = new Array[Int](nWords)
+    var c = 0
+    var w = 0
+    while (w < nWords) {
+      prefix(w) = c
+      c += java.lang.Long.bitCount(bits(w))
+      w += 1
+    }
+    var i = from
+    while (i < until) {
+      val d = v(i) - min
+      idx(i - from) = prefix(d >>> 6) +
+        java.lang.Long.bitCount(bits(d >>> 6) & ((1L << d) - 1L))
+      i += 1
+    }
+    java.util.Arrays.fill(bits, 0, nWords, 0L)
+  }
+
+  /** The distinct values of `st` as a bitmap over [st.min, st.max] (bit k
+    * of word w is the value min + 64w + k); null for an empty slice or a
+    * range of `BitmapSpan` or wider. */
+  def distinctBitmap(st: ChunkStats): Array[Long] = {
+    if (st.n == 0 || st.max.toLong - st.min.toLong >= BitmapSpan) return null
+    val words = new Array[Long](((st.max - st.min) >>> 6) + 1)
+    val values = st.sortedDistinct
+    var j = 0
+    while (j < values.length) {
+      val o = values(j) - st.min
+      words(o >>> 6) |= 1L << o
+      j += 1
+    }
+    words
   }
 
   /** Sorted distinct values of a wide-range slice, or null once more than

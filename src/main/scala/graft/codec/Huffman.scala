@@ -243,37 +243,51 @@ object Huffman {
 
   /** The one bit writer: `data`'s codes MSB-first from out(p0), each symbol
     * coded with words(class << 8 | symbol), its class that of the byte
-    * before it; returns the end position.
-    * The low nBits of acc are pending; codes are <= 15 bits, so draining
-    * at 32 keeps at most 46 pending. */
+    * before it (class 0 for order-0); returns the end position.
+    * Three codes (at most 45 bits) join the fewer than 8 pending bits in
+    * the low end of a 64-bit word with no test between them, then every
+    * whole byte goes out in one big-endian 64-bit store; the bytes past
+    * them are rewritten by the next store. The last 8 bytes, which such a
+    * store would overrun, are written a byte at a time. */
   private def writeBits(data: Array[Byte], shift: Int, words: Array[Int],
                         out: Array[Byte], p0: Int): Int = {
+    val bb = java.nio.ByteBuffer.wrap(out) // big-endian
+    val fastEnd = out.length - 8
     var p = p0
     var acc = 0L
     var nBits = 0
     var prev = 0
     var i = 0
+    val n3 = data.length - 2
+    while (i < n3 && p <= fastEnd) {
+      val s0 = data(i) & 0xff
+      val s1 = data(i + 1) & 0xff
+      val s2 = data(i + 2) & 0xff
+      val e0 = words(((prev >>> shift) << 8) | s0)
+      val e1 = words(((s0 >>> shift) << 8) | s1)
+      val e2 = words(((s1 >>> shift) << 8) | s2)
+      acc = (acc << (e0 & 0xf)) | (e0 >>> 4).toLong
+      acc = (acc << (e1 & 0xf)) | (e1 >>> 4).toLong
+      acc = (acc << (e2 & 0xf)) | (e2 >>> 4).toLong
+      nBits += (e0 & 0xf) + (e1 & 0xf) + (e2 & 0xf)
+      bb.putLong(p, acc << (64 - nBits))
+      p += nBits >>> 3
+      nBits &= 7
+      prev = s2
+      i += 3
+    }
     while (i < data.length) {
       val s = data(i) & 0xff
       val e = words(((prev >>> shift) << 8) | s)
       acc = (acc << (e & 0xf)) | (e >>> 4).toLong
       nBits += e & 0xf
-      if (nBits >= 32) {
-        nBits -= 32
-        val w = (acc >>> nBits).toInt
-        out(p) = (w >>> 24).toByte
-        out(p + 1) = (w >>> 16).toByte
-        out(p + 2) = (w >>> 8).toByte
-        out(p + 3) = w.toByte
-        p += 4
+      while (nBits >= 8) {
+        nBits -= 8
+        out(p) = (acc >>> nBits).toByte
+        p += 1
       }
       prev = s
       i += 1
-    }
-    while (nBits >= 8) {
-      nBits -= 8
-      out(p) = (acc >>> nBits).toByte
-      p += 1
     }
     if (nBits > 0) { out(p) = (acc << (8 - nBits)).toByte; p += 1 }
     p

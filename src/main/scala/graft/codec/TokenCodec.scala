@@ -99,25 +99,55 @@ object TokenCodec {
   def encodeAuto(values: Array[Int]): Array[Byte] =
     encodeAuto(values, null)
 
-  def encodeAuto(values: Array[Int], rowLens: Array[Int]): Array[Byte] = {
-    if (values.length < BlockCodec.MinTokens) return encodeAutoFlat(values)
+  def encodeAuto(values: Array[Int], rowLens: Array[Int]): Array[Byte] =
+    encodeAutoFrame(values, values.length, rowLens).frame
+
+  /** An auto-encoded frame and what its selection learned of the values:
+    * their bounds and their distinct set as a bitmap over [min, max] (bit
+    * k of word w is the value min + 64w + k), null when there are no
+    * values or they span 2^16 values or more. */
+  final class AutoFrame(val frame: Array[Byte], val min: Int, val max: Int,
+                        val distinct: Array[Long])
+
+  /** `encodeAuto` of values[0, n), with the bounds and distinct set.
+    *
+    * The per-block stats choose each block's codec and give the exact size
+    * of the blocks payload before any byte is written; the whole-vector
+    * stats give the best flat codec's size. The smaller is written, the
+    * blocks straight into the frame. The whole-vector stats also give the
+    * bounds and the distinct set, so no caller scans the values again. */
+  def encodeAutoFrame(values: Array[Int], n: Int, rowLens: Array[Int]): AutoFrame = {
+    val st = ChunkStats.analyze(values, 0, n)
+    if (n < BlockCodec.MinTokens) return analyzed(flatFrame(values, n, st), st)
     val splits =
       if (rowLens != null) BlockCodec.rowSplits(rowLens)
-      else BlockCodec.fixedSplits(values.length)
-    val stats = ChunkStats.analyze(values, 0, values.length)
-    val flatBest = stats.payloadSize(stats.bestCodec)
-    val inner = {
-      val blocked =
-        if (splits.length > 1) {
-          // encode block-wise once; the produced length IS the exact size,
-          // so no separate planning pass (each block is analyzed once)
-          val payload = BlockCodec.encode(values, splits)
-          if (payload.length < flatBest) frameBlocks(values.length, payload)
-          else null
-        } else null
-      if (blocked != null) blocked else encode(stats.bestCodec, values, stats)
-    }
-    hpackMaybe(inner, values.length)
+      else BlockCodec.fixedSplits(n)
+    if (splits.length <= 1) return analyzed(hpackMaybe(flatFrame(values, n, st), n), st)
+    val blocks = BlockCodec.analyze(values, splits)
+    val blockedLen = BlockCodec.payloadSize(blocks)
+    val inner =
+      if (blockedLen < st.payloadSize(st.bestCodec))
+        blocksFrame(values, n, splits, blocks, blockedLen)
+      else flatFrame(values, n, st)
+    analyzed(hpackMaybe(inner, n), st)
+  }
+
+  private def analyzed(frame: Array[Byte], st: ChunkStats): AutoFrame =
+    new AutoFrame(frame, st.min, st.max, ChunkStats.distinctBitmap(st))
+
+  private def flatFrame(values: Array[Int], n: Int, st: ChunkStats): Array[Byte] = {
+    val out = new Array[Byte](Overhead + st.payloadSize(st.bestCodec))
+    encodeInto(st.bestCodec, values, 0, n, st, out, 0)
+    out
+  }
+
+  private def blocksFrame(values: Array[Int], n: Int, splits: Array[Int],
+                          blocks: Array[ChunkStats], payloadLen: Int): Array[Byte] = {
+    val out = new Array[Byte](Overhead + payloadLen)
+    val end = BlockCodec.encodeInto(values, splits, blocks, out, HeaderLen)
+    require(end == HeaderLen + payloadLen,
+      s"blocks size model mismatch: ${end - HeaderLen} vs $payloadLen")
+    seal(out, CodecId.Blocks, n)
   }
 
   /** Optional entropy wrap (codec HPack): Huffman over the inner frame's
@@ -132,20 +162,23 @@ object TokenCodec {
     val packed = Huffman.encode(inner)
     if (Overhead + packed.length >= inner.length) return inner
     val out = new Array[Byte](Overhead + packed.length)
-    out(0) = MagicG; out(1) = MagicT; out(2) = CodecId.HPack
-    writeIntLE(out, 3, n)
     System.arraycopy(packed, 0, out, HeaderLen, packed.length)
+    seal(out, CodecId.HPack, n)
+  }
+
+  /** Fill in the header and the CRC of a frame whose body is in place. */
+  private def seal(out: Array[Byte], codec: Byte, n: Int): Array[Byte] = {
+    out(0) = MagicG; out(1) = MagicT; out(2) = codec
+    writeIntLE(out, 3, n)
     val crc = new CRC32
-    crc.update(out, 0, HeaderLen + packed.length)
-    writeIntLE(out, HeaderLen + packed.length, crc.getValue.toInt)
+    crc.update(out, 0, out.length - CrcLen)
+    writeIntLE(out, out.length - CrcLen, crc.getValue.toInt)
     out
   }
 
   /** Auto-select among the flat codecs only; whole array. */
-  def encodeAutoFlat(values: Array[Int]): Array[Byte] = {
-    val stats = ChunkStats.analyze(values, 0, values.length)
-    encode(stats.bestCodec, values, stats)
-  }
+  def encodeAutoFlat(values: Array[Int]): Array[Byte] =
+    flatFrame(values, values.length, ChunkStats.analyze(values))
 
   /** Auto-select among the flat codecs for a slice, framed into `out` at
     * `pos`; returns end position. */
@@ -159,17 +192,6 @@ object TokenCodec {
   def flatAutoSize(values: Array[Int], from: Int, until: Int): Int = {
     val stats = ChunkStats.analyze(values, from, until)
     Overhead + stats.payloadSize(stats.bestCodec)
-  }
-
-  private def frameBlocks(nValues: Int, payload: Array[Byte]): Array[Byte] = {
-    val out = new Array[Byte](Overhead + payload.length)
-    out(0) = MagicG; out(1) = MagicT; out(2) = CodecId.Blocks
-    writeIntLE(out, 3, nValues)
-    System.arraycopy(payload, 0, out, HeaderLen, payload.length)
-    val crc = new CRC32
-    crc.update(out, 0, HeaderLen + payload.length)
-    writeIntLE(out, HeaderLen + payload.length, crc.getValue.toInt)
-    out
   }
 
   /** Total-function decode: never throws, returns the error taxonomy. */
@@ -276,8 +298,8 @@ object TokenCodec {
       val x = v(i)
       var j = i + 1
       while (j < until && v(j) == x) j += 1
-      pos = Varint.writeZ(out, pos, x.toLong)
-      pos = Varint.write(out, pos, (j - i - 1).toLong)
+      pos = Varint.writeZ32(out, pos, x)
+      pos = Varint.write32(out, pos, j - i - 1)
       i = j
     }
     pos
@@ -314,13 +336,18 @@ object TokenCodec {
     val width = BitPacking.bitsFor((card - 1).toLong)
     out(pos) = width.toByte
     pos += 1
-    // map each value to its dict index via binary search (dict is sorted)
+    // each value's dict index: a bitmap rank when the dict spans fewer
+    // than 2^16 values, else a binary search (dict is sorted)
     val n = until - from
     val idx = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      idx(i) = java.util.Arrays.binarySearch(dict, v(from + i))
-      i += 1
+    if (card > 0 && dict(card - 1).toLong - dict(0).toLong < ChunkStats.BitmapSpan)
+      ChunkStats.dictRanks(dict, v, from, until, idx)
+    else {
+      var i = 0
+      while (i < n) {
+        idx(i) = java.util.Arrays.binarySearch(dict, v(from + i))
+        i += 1
+      }
     }
     BitPacking.pack(idx, 0, n, 0L, width, out, pos)
   }
@@ -388,8 +415,8 @@ object TokenCodec {
     var i = from
     while (i < until) {
       pos =
-        if (unsigned) Varint.write(out, pos, v(i).toLong)
-        else Varint.writeZ(out, pos, v(i).toLong)
+        if (unsigned) Varint.write32(out, pos, v(i))
+        else Varint.writeZ32(out, pos, v(i))
       i += 1
     }
     pos

@@ -42,6 +42,21 @@ object Varint {
     pos + 1
   }
 
+  /** `write(buf, pos, x & 0xffffffffL)`, with the one- and two-byte cases
+    * (most token values) written without a loop. */
+  def write32(buf: Array[Byte], pos: Int, x: Int): Int =
+    if ((x & ~0x7f) == 0) { buf(pos) = x.toByte; pos + 1 }
+    else if ((x & ~0x3fff) == 0) {
+      buf(pos) = (x | 0x80).toByte
+      buf(pos + 1) = (x >>> 7).toByte
+      pos + 2
+    } else write(buf, pos, x & 0xffffffffL)
+
+  /** `writeZ(buf, pos, x.toLong)` through `write32`: the 32-bit zigzag of
+    * an Int, read unsigned, is the 64-bit zigzag of its sign extension. */
+  def writeZ32(buf: Array[Byte], pos: Int, x: Int): Int =
+    write32(buf, pos, (x << 1) ^ (x >> 31))
+
   /** Write unsigned LEB128 to a stream: the same bytes as the array form. */
   def write(out: java.io.OutputStream, v: Long): Unit = {
     var x = v

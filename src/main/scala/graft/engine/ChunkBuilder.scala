@@ -29,11 +29,21 @@ object ChunkBuilder {
   def build(partId: Int, seq: Int, docIds: Array[String],
             sources: Array[String], tokens: Array[Int],
             rowLens: Array[Int],
-            sharedMeta: MetaDict = null): EncodedChunk = {
+            sharedMeta: MetaDict = null): EncodedChunk =
+    build(partId, seq, docIds, sources, tokens, tokens.length, rowLens,
+      sharedMeta)
+
+  /** `build` over the chunk's tokens tokens[0, nTok), so a writer can hand
+    * over its row buffer without a copy. The token bounds and the sketch
+    * come from the encode's own statistics, not from another pass. */
+  def build(partId: Int, seq: Int, docIds: Array[String],
+            sources: Array[String], tokens: Array[Int], nTok: Int,
+            rowLens: Array[Int], sharedMeta: MetaDict): EncodedChunk = {
     val nRows = docIds.length
     require(sources.length == nRows && rowLens.length == nRows)
 
-    val payload = TokenCodec.encodeAuto(tokens, rowLens)
+    val enc = TokenCodec.encodeAutoFrame(tokens, nTok, rowLens)
+    val payload = enc.frame
     val codec = if (payload.length > 2) payload(2) else CodecId.Raw
 
     // source dictionary (chunk-local, order of first appearance)
@@ -73,25 +83,25 @@ object ChunkBuilder {
     // Inverted sentinels for a zero-token chunk: (MaxValue, MinValue) can
     // never satisfy `min_tok <= t && max_tok >= t`, so the zone map never
     // falsely claims containment of token 0 (min=max=0 would).
-    var minTok = if (tokens.isEmpty) Int.MaxValue else tokens(0)
-    var maxTok = if (tokens.isEmpty) Int.MinValue else tokens(0)
-    i = 1
-    while (i < tokens.length) {
-      if (tokens(i) < minTok) minTok = tokens(i)
-      if (tokens(i) > maxTok) maxTok = tokens(i)
-      i += 1
-    }
+    val minTok = if (nTok == 0) Int.MaxValue else enc.min
+    val maxTok = if (nTok == 0) Int.MinValue else enc.max
+    val sketch =
+      if (nTok == 0) Array.emptyByteArray
+      else if (enc.distinct != null) TokenSketch.fromBitmap(enc.distinct, minTok, maxTok)
+      else TokenSketch.build(
+        if (tokens.length == nTok) tokens else java.util.Arrays.copyOf(tokens, nTok),
+        minTok, maxTok)
 
     EncodedChunk(
       chunk_id = (partId.toLong << 32) | (seq.toLong & 0xffffffffL),
       part_id = partId, seq = seq, codec = codec.toInt,
-      n_rows = nRows, n_tokens = tokens.length.toLong,
-      raw_bytes = 4L * tokens.length,
+      n_rows = nRows, n_tokens = nTok.toLong,
+      raw_bytes = 4L * nTok,
       enc_bytes = payload.length.toLong + meta.length.toLong,
       crc32 = crc.getValue,
       min_doc_id = minDoc, max_doc_id = maxDoc,
       min_tok = minTok, max_tok = maxTok,
-      tok_set = TokenSketch.build(tokens, minTok, maxTok),
+      tok_set = sketch,
       payload = payload, meta = meta,
       src_stats = SrcStats.encode(sources, rowLens))
   }

@@ -29,14 +29,18 @@ final class ChunkSlicer(partId: Int, chunkTokens: Int, dict: MetaDict) {
   /** Chunks taken so far. */
   def taken: Int = seq
 
-  def add(docId: String, source: String, tokens: Array[Int]): Unit = {
-    val n = tokens.length
+  def add(docId: String, source: String, tokens: Array[Int]): Unit =
+    add(docId, source, tokens.length)(System.arraycopy(tokens, 0, _, _, tokens.length))
+
+  /** Add a row of n tokens that `copy(buf, at)` writes straight into the
+    * row buffer at buf(at until at + n). */
+  def add(docId: String, source: String, n: Int)(copy: (Array[Int], Int) => Unit): Unit = {
     if (nTok + n > toks.length) {
       val want = math.max(toks.length * 2L, nTok.toLong + n)
       toks = java.util.Arrays.copyOf(toks,
         math.min(want, Int.MaxValue - 8).toInt)
     }
-    System.arraycopy(tokens, 0, toks, nTok, n)
+    copy(toks, nTok)
     docIds += docId
     sources += source
     lens += n
@@ -44,10 +48,11 @@ final class ChunkSlicer(partId: Int, chunkTokens: Int, dict: MetaDict) {
     nRows += 1
   }
 
-  /** Encode the buffered rows as the next chunk and empty the buffers. */
+  /** Encode the buffered rows as the next chunk and empty the buffers. The
+    * encoder reads the tokens in place: no chunk keeps the row buffer. */
   def take(): EncodedChunk = {
     val c = ChunkBuilder.build(partId, seq, docIds.result(), sources.result(),
-      java.util.Arrays.copyOf(toks, nTok), lens.result(), dict)
+      toks, nTok, lens.result(), dict)
     docIds.clear(); sources.clear(); lens.clear()
     nTok = 0; nRows = 0; seq += 1
     c

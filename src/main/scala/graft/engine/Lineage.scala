@@ -79,7 +79,7 @@ object Lineage {
     val spark = ds.sparkSession
     val hconf = new SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    val fs0 = FileSystem.get(new java.net.URI(dir), hconf.value)
+    val fs0 = EngineFs.get(dir, hconf.value)
     fs0.mkdirs(new Path(s"$dir/data"))
     fs0.mkdirs(new Path(s"$dir/_lineage"))
 
@@ -123,7 +123,7 @@ object Lineage {
     val done = spark.sparkContext.longAccumulator("partitions_encoded")
     arranged.foreachPartition { (it: Iterator[SeqRow]) =>
       val pid = TaskContext.getPartitionId()
-      val fs = FileSystem.get(new java.net.URI(dir), hconf.value)
+      val fs = EngineFs.get(dir, hconf.value)
       val committer = new PartitionCommitter(fs, dir, pid,
         TaskContext.get.taskAttemptId())
       if (!committer.alreadyDone) { // resume: skip completed partitions
@@ -340,7 +340,7 @@ object Lineage {
     * parquet copy compacted by an older engine is never read. */
   def readManifest(spark: SparkSession, dir: String): Dataset[ManifestRow] = {
     import spark.implicits._
-    val fs = FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
+    val fs = EngineFs.get(dir, spark.sparkContext.hadoopConfiguration)
     val files = manifestFiles(fs, dir)
     // a just-initialized table (catalog CREATE before first INSERT) has a
     // _lineage dir and zero manifest partitions; textFile() with an empty
@@ -386,7 +386,7 @@ object Lineage {
   def readManifestLocal(conf: org.apache.hadoop.conf.Configuration,
                         dir: String, maxBytes: Long)
       : (String, Option[Array[ManifestRow]]) = {
-    val fs = FileSystem.get(new java.net.URI(dir), conf)
+    val fs = EngineFs.get(dir, conf)
     val files = manifestFiles(fs, dir)
     val marker = listingMarker(files)
     if (files.iterator.map(_.getLen).sum > maxBytes) (marker, None)
@@ -504,7 +504,7 @@ object Lineage {
                     onlyPids: Option[Set[Int]] = None): DeleteStats = {
     val hconf = new SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    val fs0 = FileSystem.get(new java.net.URI(dir), hconf.value)
+    val fs0 = EngineFs.get(dir, hconf.value)
     if (!fs0.exists(new Path(s"$dir/_lineage")))
       throw new UnsupportedOperationException(
         s"DELETE needs a plain graft lineage table; $dir has none. " +
@@ -537,7 +537,7 @@ object Lineage {
                                classify: ManifestRow => Int,
                                pred: SeqRow => Boolean,
                                dictBytes: Option[Array[Byte]]): DeleteStats = {
-    val fs = FileSystem.get(new java.net.URI(dir), conf)
+    val fs = EngineFs.get(dir, conf)
     val rows = readManifestFile(fs, new Path(s"$dir/_lineage/$manifestName"))
     val classes = rows.map(classify)
     val none = DeleteStats(0, 0, 0, 0, 0)
@@ -843,7 +843,7 @@ object Lineage {
     * the same contract as DELETE). */
   def vacuum(conf: Configuration, dir: String,
              olderThanMs: Long = 24L * 3600 * 1000): VacuumStats = {
-    val fs = FileSystem.get(new java.net.URI(dir), conf)
+    val fs = EngineFs.get(dir, conf)
     // a dead row-level commit first: its intent decides roll forward/back,
     // and only after resolution are this sweep's superseded/orphan shapes
     // unambiguous
@@ -923,7 +923,7 @@ object Lineage {
     * qualifies by CONTENT (it has a _lineage dir), not by name — manual
     * layouts compose too. */
   def batchDirs(spark: SparkSession, root: String): Seq[String] = {
-    val fs = FileSystem.get(new java.net.URI(root),
+    val fs = EngineFs.get(root,
       spark.sparkContext.hadoopConfiguration)
     val p = new Path(root)
     if (!fs.exists(p)) Seq.empty
@@ -938,7 +938,7 @@ object Lineage {
     * consumed and then skipped forever by an advancing offset. Idempotent
     * (batch retries re-mark). */
   def markBatchReady(spark: SparkSession, batchDir: String): Unit = {
-    val fs = FileSystem.get(new java.net.URI(batchDir),
+    val fs = EngineFs.get(batchDir,
       spark.sparkContext.hadoopConfiguration)
     val m = new Path(s"$batchDir/_graft_batch_ready")
     if (!fs.exists(m)) fs.create(m, true).close()
@@ -952,7 +952,7 @@ object Lineage {
     * readers apply READY-marker semantics from the stream's very first
     * trigger. Idempotent. */
   def markStreamTree(spark: SparkSession, root: String): Unit = {
-    val fs = FileSystem.get(new java.net.URI(root),
+    val fs = EngineFs.get(root,
       spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new Path(root))
     val m = new Path(s"$root/_graft_stream_tree")
@@ -963,7 +963,7 @@ object Lineage {
     * readers must then trust only READY-marked batches, even when none is
     * ready yet. */
   def isStreamTree(spark: SparkSession, root: String): Boolean = {
-    val fs = FileSystem.get(new java.net.URI(root),
+    val fs = EngineFs.get(root,
       spark.sparkContext.hadoopConfiguration)
     fs.exists(new Path(s"$root/_graft_stream_tree"))
   }
@@ -984,7 +984,7 @@ object Lineage {
     * year of micro-batches that is the difference between 2 round trips
     * and tens of thousands, every trigger. */
   def readyBatchDirs(spark: SparkSession, root: String): Seq[String] = {
-    val fs = FileSystem.get(new java.net.URI(root),
+    val fs = EngineFs.get(root,
       spark.sparkContext.hadoopConfiguration)
     // subdir NAMES are unique within one root: compare by name to stay
     // scheme/authority-normalization-proof. A transient I/O error here must
@@ -1043,7 +1043,7 @@ object Lineage {
     * Callers own the policy; this is the mechanism. */
   def expireBatchesBelow(spark: SparkSession, root: String,
                          minBatchKept: Long): Long = {
-    val fs = FileSystem.get(new java.net.URI(root),
+    val fs = EngineFs.get(root,
       spark.sparkContext.hadoopConfiguration)
     val readyNames = readyBatchDirs(spark, root)
       .map(d => new Path(d).getName).toSet
@@ -1061,7 +1061,7 @@ object Lineage {
   /** Single-chunk fetch: seek to a manifest row's frame and unframe it.
     * Public for external readers (the `format("graft")` DSv2 source). */
   def readChunk(conf: Configuration, dir: String, m: ManifestRow): EncodedChunk = {
-    val fs = FileSystem.get(new java.net.URI(dir), conf)
+    val fs = EngineFs.get(dir, conf)
     val in = fs.open(dataPath(dir, m.part_id, m.gen))
     try {
       // typed bound BEFORE the narrowing: a manifest frame length past the
@@ -1086,7 +1086,7 @@ object Lineage {
     * payloads it would otherwise read and skip. Returns a chunk whose
     * `payload` is EMPTY — callers must only open side/meta iterators on it. */
   def readChunkMeta(conf: Configuration, dir: String, m: ManifestRow): EncodedChunk = {
-    val fs = FileSystem.get(new java.net.URI(dir), conf)
+    val fs = EngineFs.get(dir, conf)
     val in = fs.open(dataPath(dir, m.part_id, m.gen))
     try {
       in.seek(m.offset)
@@ -1121,7 +1121,7 @@ object Lineage {
   /** The dir's serialized shared meta dictionary, if published — public for
     * external readers that open chunks themselves. */
   def sharedDictBytes(spark: SparkSession, dir: String): Option[Array[Byte]] =
-    sharedDictBytes(FileSystem.get(new java.net.URI(dir),
+    sharedDictBytes(EngineFs.get(dir,
       spark.sparkContext.hadoopConfiguration), dir)
 
   // ---- chunk record framing ---------------------------------------------------

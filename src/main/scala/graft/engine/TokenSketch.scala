@@ -52,18 +52,14 @@ object TokenSketch {
     if (tokens.isEmpty) return Array.emptyByteArray
     val range = maxTok.toLong - minTok.toLong + 1L
     if (range <= BitmapMaxRange) {
-      val nBytes = ((range + 7) / 8).toInt
-      val out = new Array[Byte](1 + 5 + nBytes) // worst-case varint(range)
-      out(0) = 1
-      var pos = Varint.write(out, 1, range)
-      val bitBase = pos
+      val words = new Array[Long](((range + 63) >>> 6).toInt)
       var i = 0
       while (i < tokens.length) {
         val off = tokens(i) - minTok
-        out(bitBase + (off >>> 3)) = (out(bitBase + (off >>> 3)) | (1 << (off & 7))).toByte
+        words(off >>> 6) |= 1L << off
         i += 1
       }
-      java.util.Arrays.copyOf(out, bitBase + nBytes)
+      fromBitmap(words, minTok, maxTok)
     } else {
       // mode 3: size the filter from the chunk's distinct count. A sort of
       // a copy is O(n log n) on at most chunkTokens ints — noise next to
@@ -104,6 +100,27 @@ object TokenSketch {
       }
       out
     }
+  }
+
+  /** The mode-1 sketch of a chunk whose distinct tokens are `distinct`, a
+    * bitmap over [minTok, maxTok] (bit k of word w is the token
+    * minTok + 64w + k) whose range fits `BitmapMaxRange`: the bytes `build`
+    * writes for that chunk, the words stored little-endian. */
+  def fromBitmap(distinct: Array[Long], minTok: Int, maxTok: Int): Array[Byte] = {
+    val range = maxTok.toLong - minTok.toLong + 1L
+    require(range <= BitmapMaxRange && distinct.length == ((range + 63) >>> 6),
+      s"bitmap of ${distinct.length} words for range $range")
+    val nBytes = ((range + 7) / 8).toInt
+    val head = Varint.len(range) + 1
+    val out = new Array[Byte](head + nBytes)
+    out(0) = 1
+    Varint.write(out, 1, range)
+    var j = 0
+    while (j < nBytes) {
+      out(head + j) = (distinct(j >>> 3) >>> ((j & 7) << 3)).toByte
+      j += 1
+    }
+    out
   }
 
   /** Consult the sketch; `true` means "must decode". Fails OPEN on anything

@@ -20,7 +20,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.engine.{ChunkBuilder, ChunkSlicer, EncoderConfig, Lineage, MetaDict, SeqRow, TokenSketch}
+import graft.engine.{ChunkBuilder, ChunkSlicer, EncoderConfig, EngineFs, Lineage, MetaDict, SeqRow, TokenSketch}
 
 /** `spark.read.format("graft").load(dir)` — a DataSourceV2 reader over a
   * lineage table dir, making the engine's storage a first-class Spark
@@ -139,7 +139,7 @@ class GraftTable(path: String) extends Table
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
+    val fs = EngineFs.get(path,
       SparkSession.active.sparkContext.hadoopConfiguration)
     Lineage.recoverReplaceIntent(fs, path)
     () => new GraftRowLevelOperation(path, info.command)
@@ -403,7 +403,7 @@ class GraftScan(path: String, pushed: Array[Filter], required: StructType,
       limit.isEmpty && resolvedDirs.nonEmpty
     if (!enabled) None
     else {
-      val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
+      val fs = EngineFs.get(path,
         spark.sparkContext.hadoopConfiguration)
       val ns = resolvedDirs.map(d => Lineage.readBucketMarker(fs, d))
       if (ns.forall(_.isDefined) && ns.flatten.distinct.size == 1) ns.head
@@ -666,7 +666,7 @@ private[spark] object ManifestCache {
   private def dropDeleted(conf: org.apache.hadoop.conf.Configuration): Unit =
     cache.keySet.forEach { d =>
       val p = new org.apache.hadoop.fs.Path(s"$d/_lineage")
-      if (!p.getFileSystem(conf).exists(p)) cache.remove(d)
+      if (!EngineFs.get(d, conf).exists(p)) cache.remove(d)
     }
 
   /** Drops the entries of `dir` and of the batch dirs under it. */
@@ -692,7 +692,7 @@ private[spark] object GraftPlanning {
     * reads too; marker-less at-rest trees read in full). */
   def resolveReadDirs(spark: SparkSession, path: String,
                       untilBatch: Option[Long] = None): Seq[String] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
+    val fs = EngineFs.get(path,
       spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_lineage"))) {
       // a plain table has no batch numbers: a snapshot bound here would be
@@ -1128,7 +1128,7 @@ class GraftMicroBatchStream(root: String, pushed: Array[Filter],
   // loud misuse check at stream construction: a missing root or a plain
   // lineage dir must not read as an eternally empty stream
   locally {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(root),
+    val fs = EngineFs.get(root,
       SparkSession.active.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(root)))
       throw new IllegalArgumentException(
@@ -1287,7 +1287,7 @@ class GraftWrite(path: String, inputSchema: StructType, doTruncate: Boolean,
       info: PhysicalWriteInfo): DataWriterFactory = {
     GraftWrite.requireGraftSchema(inputSchema)
     val spark = SparkSession.active
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
+    val fs = EngineFs.get(path,
       spark.sparkContext.hadoopConfiguration)
     import org.apache.hadoop.fs.Path
     // mirror image of the streaming sink's plain-table guard: a batch
@@ -1380,7 +1380,7 @@ class GraftStreamingWrite(path: String, inputSchema: StructType,
     // every streamed epoch unreachable, no error anywhere. Mirror the
     // streaming READER's root validation and refuse up front.
     locally {
-      val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
+      val fs = EngineFs.get(path,
         spark.sparkContext.hadoopConfiguration)
       val lin = new org.apache.hadoop.fs.Path(s"$path/_lineage")
       if (fs.exists(lin)) {
@@ -1412,7 +1412,7 @@ class GraftStreamingWrite(path: String, inputSchema: StructType,
   override def commit(epochId: Long,
                       messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
+    val fs = EngineFs.get(path,
       spark.sparkContext.hadoopConfiguration)
     // an all-empty epoch writes no files (GraftDataWriter.commit skips
     // the committer when no chunk was ever added), so no batch dir exists
@@ -1454,7 +1454,7 @@ class GraftDataWriter(dir: String, conf: Configuration, pid: Int,
                       chunkTokens: Int, resume: Boolean)
     extends DataWriter[InternalRow] {
   private val fs =
-    org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir), conf)
+    EngineFs.get(dir, conf)
   private val committer = new Lineage.PartitionCommitter(fs, dir, pid, taskId)
   // only RESUME mode may skip (re-running the same deterministic write);
   // in plain append the partition ids are fresh, so alreadyDone here means
@@ -1470,12 +1470,12 @@ class GraftDataWriter(dir: String, conf: Configuration, pid: Int,
       throw new IllegalArgumentException(
         "graft sink: doc_id, tokens, n_tok and source must be non-null " +
           s"(partition $pid)")
-    val arr = row.getArray(1).toIntArray()
+    val arr = row.getArray(1)
     val n = row.getInt(2)
-    require(n == arr.length,
-      s"row ${row.getUTF8String(0)}: n_tok $n != tokens.length ${arr.length}")
+    require(n == arr.numElements(),
+      s"row ${row.getUTF8String(0)}: n_tok $n != tokens.length ${arr.numElements()}")
     slicer.add(row.getUTF8String(0).toString, row.getUTF8String(3).toString,
-      arr)
+      n)(GraftDataWriter.copyInts(arr, _, _))
   }
 
   override def commit(): WriterCommitMessage =
@@ -1491,6 +1491,26 @@ class GraftDataWriter(dir: String, conf: Configuration, pid: Int,
     }
   override def abort(): Unit = if (!skip) committer.abort()
   override def close(): Unit = ()
+}
+
+private[spark] object GraftDataWriter {
+  /** The ints of `arr` into buf(at until at + arr.numElements()): one bulk
+    * copy out of an UnsafeArrayData's backing memory (what its
+    * `toIntArray` copies, without the intermediate array), else per
+    * element. */
+  def copyInts(arr: org.apache.spark.sql.catalyst.util.ArrayData,
+               buf: Array[Int], at: Int): Unit = arr match {
+    case u: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData =>
+      val n = u.numElements()
+      org.apache.spark.unsafe.Platform.copyMemory(u.getBaseObject,
+        u.getBaseOffset + org.apache.spark.sql.catalyst.expressions
+          .UnsafeArrayData.calculateHeaderPortionInBytes(n),
+        buf, org.apache.spark.unsafe.Platform.INT_ARRAY_OFFSET + 4L * at,
+        4L * n)
+    case a =>
+      var i = 0
+      while (i < a.numElements()) { buf(at + i) = a.getInt(i); i += 1 }
+  }
 }
 
 /** Executor-level shared-dictionary cache. The DSv2 source schedules ONE

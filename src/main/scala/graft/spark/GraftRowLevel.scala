@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.engine.{ChunkSlicer, Lineage, MetaDict}
+import graft.engine.{ChunkSlicer, EngineFs, Lineage, MetaDict}
 
 /** Group-based (copy-on-write) row-level operations — `UPDATE`, `MERGE
   * INTO`, and the DELETEs whose predicates `SupportsDelete` cannot take
@@ -108,7 +108,7 @@ class GraftReplaceDataWrite(path: String, schema: StructType,
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory = {
     val spark = SparkSession.active
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
+    val fs = EngineFs.get(path,
       spark.sparkContext.hadoopConfiguration)
     // plain lineage tables only — a batch TREE's committed batches are
     // immutable history (untilBatch snapshots), the same refusal DELETE
@@ -129,7 +129,7 @@ class GraftReplaceDataWrite(path: String, schema: StructType,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
+    val fs = EngineFs.get(path,
       spark.sparkContext.hadoopConfiguration)
     val scan = scanRef().getOrElse(throw new IllegalStateException(
       "replace-data commit without the rewrite scan — nothing defines " +
@@ -171,7 +171,7 @@ class GraftReplaceDataWrite(path: String, schema: StructType,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
+    val fs = EngineFs.get(path,
       SparkSession.active.sparkContext.hadoopConfiguration)
     messages.collect { case GraftReplaceCommitMessage(Some(g)) => g }
       .foreach(g => fs.delete(new Path(g.staged), false))
@@ -199,7 +199,7 @@ class GraftReplaceWriter(dir: String, conf: Configuration, partitionId: Int,
                          srcOrd: Int)
     extends DataWriter[InternalRow] {
   private val fs =
-    org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir), conf)
+    EngineFs.get(dir, conf)
   private val stager = new Lineage.GroupStager(fs, dir, partitionId,
     s"$taskId-${java.util.UUID.randomUUID()}")
   private val slicer = new ChunkSlicer(partitionId,
