@@ -180,20 +180,6 @@ object TokenCodec {
   def encodeAutoFlat(values: Array[Int]): Array[Byte] =
     flatFrame(values, values.length, ChunkStats.analyze(values))
 
-  /** Auto-select among the flat codecs for a slice, framed into `out` at
-    * `pos`; returns end position. */
-  def encodeAutoFlatInto(values: Array[Int], from: Int, until: Int,
-                         out: Array[Byte], pos: Int): Int = {
-    val stats = ChunkStats.analyze(values, from, until)
-    encodeInto(stats.bestCodec, values, from, until, stats, out, pos)
-  }
-
-  /** Framed size the flat auto-encode of a slice would produce. */
-  def flatAutoSize(values: Array[Int], from: Int, until: Int): Int = {
-    val stats = ChunkStats.analyze(values, from, until)
-    Overhead + stats.payloadSize(stats.bestCodec)
-  }
-
   /** Total-function decode: never throws, returns the error taxonomy. */
   def decode(bytes: Array[Byte]): DecodeResult = {
     if (bytes == null || bytes.length < Overhead) return Truncated

@@ -1,7 +1,7 @@
 package graft.engine
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 /** Table-level encode: Dataset[SeqRow] -> Dataset[EncodedChunk].
@@ -58,9 +58,9 @@ object Encoder {
   private[graft] def chunkIterator(rows: Iterator[SeqRow], partId: Int,
                                     cfg: EncoderConfig): Iterator[EncodedChunk] =
     new Iterator[EncodedChunk] {
-      // built once per task, not per chunk (bucket construction is the cost)
-      private val slicer = new ChunkSlicer(partId, cfg.chunkTokens,
-        cfg.sharedMetaDict.map(MetaDict.fromBytes).orNull)
+      // built once per task, not per chunk; self-contained chunks (no
+      // shared meta dictionary)
+      private val slicer = new ChunkSlicer(partId, cfg.chunkTokens, null)
       def hasNext: Boolean = rows.hasNext
       def next(): EncodedChunk = {
         while (rows.hasNext && !slicer.full) {
@@ -110,24 +110,13 @@ object Encoder {
   * threads — the engine's answer to the reference's dedicated decoder pthread
   * (`/root/reference/src/lib/buffer/ThreadDecoder.c:98-149`). */
 object Decoder {
-  def decodeTable(chunks: Dataset[EncodedChunk]): Dataset[SeqRow] =
-    decodeTable(chunks, None)
-
-  /** `sharedDict`: the serialized shared meta table the chunks were encoded
-    * with (EncoderConfig.sharedMetaDict / Lineage `_shared_dict.bin`). Plain
-    * Encoder.encodeTable output is self-contained — pass None. A shared-
-    * coded chunk opened without its table fails TYPED and loud. */
-  def decodeTable(chunks: Dataset[EncodedChunk],
-                  sharedDict: Option[Array[Byte]]): Dataset[SeqRow] = {
+  /** Decode self-contained chunks (Encoder.encodeTable output). A chunk
+    * coded against a table's shared meta dictionary fails TYPED and loud
+    * here; such tables are read through the `format("graft")` source. */
+  def decodeTable(chunks: Dataset[EncodedChunk]): Dataset[SeqRow] = {
     val spark = chunks.sparkSession
     import spark.implicits._
-    sharedDict match {
-      case None => chunks.flatMap(c => ChunkBuilder.open(c))
-      case Some(bytes) => chunks.mapPartitions { it =>
-        val t = MetaDict.fromBytes(bytes)
-        it.flatMap(c => ChunkBuilder.open(c, t))
-      }
-    }
+    chunks.flatMap(c => ChunkBuilder.open(c))
   }
 
   /** Decode with verification against the source table; returns mismatched

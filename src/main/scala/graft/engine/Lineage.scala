@@ -2,7 +2,6 @@ package graft.engine
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 
@@ -31,6 +30,11 @@ import org.apache.spark.util.SerializableConfiguration
   * POSIX). A partition is "done" iff its manifest exists, so a task killed
   * mid-write leaves no visible state and re-runs from scratch — per-chunk
   * CRCs guard the read side.
+  *
+  * One batch writer: the DSv2 sink (`format("graft")`, GraftDataWriter)
+  * writes every partition through PartitionCommitter, and `encodeToDir` is
+  * that sink's arranged resume write. A partition that receives no row
+  * writes no file at all.
   */
 object Lineage {
 
@@ -64,83 +68,53 @@ object Lineage {
     case _ => None
   }
 
-  /** Encode `ds` into `dir`. Partitions whose manifest already exists are
-    * skipped (resume). Returns the number of partitions encoded this run. */
+  /** Encode `ds` into `dir`: the DSv2 sink's arranged resume write.
+    * `option("arrange", n)` makes Spark hash-cluster the rows by doc_id into
+    * exactly `cfg.numPartitions` partitions, sorted (source, doc_id) within
+    * each; `option("resume", true)` keeps the partition ids and skips every
+    * committed partition. Returns the number of partitions this run
+    * committed. */
   def encodeToDir(ds: Dataset[SeqRow], dir: String,
                   cfg: EncoderConfig = EncoderConfig()): Long = {
     // Resume is only sound when partition membership is a pure function of
     // the data: a re-run must rebuild EXACTLY the rows a completed
-    // partition held. cfg.numPartitions > 0 forces the deterministic hash
-    // repartition in Encoder.arrange; 0 would inherit whatever upstream
-    // partitioning the first run happened to have.
+    // partition held. The arranged write's hash clustering is such a
+    // function; 0 partitions would inherit whatever upstream partitioning
+    // the first run happened to have.
     require(cfg.numPartitions > 0,
       "Lineage.encodeToDir needs an explicit numPartitions (deterministic " +
         "partitioning is what makes resume sound)")
     val spark = ds.sparkSession
-    val hconf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val fs0 = EngineFs.get(dir, hconf.value)
-    fs0.mkdirs(new Path(s"$dir/data"))
-    fs0.mkdirs(new Path(s"$dir/_lineage"))
-
-    // bucket-layout marker: a FRESH table's layout is exactly
-    // pmod(murmur3_42(doc_id), numPartitions) by construction (arrange's
-    // deterministic repartition below). On a table with committed
-    // partitions the marker survives only when this run's arrangement
-    // matches it — a re-run with a different count would otherwise keep
-    // advertising a bucketing the files no longer have.
-    val lineageListing = fs0.listStatus(new Path(s"$dir/_lineage"))
-    val hasCommitted = lineageListing
-      .exists(_.getPath.getName.endsWith(".json"))
-    if (!hasCommitted) writeBucketMarker(fs0, dir, cfg.numPartitions)
-    else if (!readBucketMarker(fs0, dir).contains(cfg.numPartitions))
-      clearBucketMarker(fs0, dir)
-
-    // RESUME SHORT-CIRCUIT: when every partition this run would produce
-    // (0 until numPartitions — arrange's repartition fixes the pid domain)
-    // is already committed at SOME generation, the job below is a provable
-    // no-op: every task would find committer.alreadyDone and skip. Answer
-    // from the listing already in hand instead of scheduling a full
-    // regenerate+shuffle of the dataset — at bench scale this is the whole
-    // fixed cost of a resumed encode; at 100 TB it is a full table read
-    // avoided. (A gen>0 manifest counts as committed, exactly like
-    // PartitionCommitter.alreadyDone — a DELETE-rewritten partition must
-    // never be re-encoded.)
-    val committedPids: Set[Int] = lineageListing.iterator
-      .flatMap(f => manifestPidGen(f.getPath.getName)).map(_._1).toSet
-    if ((0 until cfg.numPartitions).forall(committedPids.contains))
-      return 0L
-
+    requireNotBatchTree(spark, dir) // before anything is created under dir
+    val fs = EngineFs.get(dir, spark.sparkContext.hadoopConfiguration)
+    // A gen>0 manifest counts as committed, exactly like
+    // PartitionCommitter.alreadyDone: a DELETE-rewritten partition must
+    // never be re-encoded.
+    def committedPids(): Set[Int] =
+      try committedPidGens(fs, dir).iterator.map(_._1).toSet
+      catch { case _: java.io.FileNotFoundException => Set.empty }
+    val before = committedPids()
+    // RESUME SHORT-CIRCUIT: when every partition of the arrangement is
+    // already committed, the write is a provable no-op; answer from the
+    // listing instead of scheduling a full regenerate+shuffle of the data.
+    if ((0 until cfg.numPartitions).forall(before.contains)) return 0L
     // One shared meta dictionary per TABLE dir (trained on the first run,
-    // read back on every later one): chunks code their doc_id section
-    // against it instead of each training a private table — the
-    // cross-stream PPMd-ism (one model amortized over many writes) at the
-    // storage layer, without any cross-task coupling.
-    val cfgEnc = cfg.copy(sharedMetaDict = Some(sharedDictFor(ds, fs0, dir)))
-
-    val arranged = Encoder.arrange(ds, cfgEnc) // deterministic across runs
-
-    val done = spark.sparkContext.longAccumulator("partitions_encoded")
-    arranged.foreachPartition { (it: Iterator[SeqRow]) =>
-      val pid = TaskContext.getPartitionId()
-      val fs = EngineFs.get(dir, hconf.value)
-      val committer = new PartitionCommitter(fs, dir, pid,
-        TaskContext.get.taskAttemptId())
-      if (!committer.alreadyDone) { // resume: skip completed partitions
-        Encoder.chunkIterator(it, pid, cfgEnc).foreach(committer.add)
-        if (committer.commit()) done.add(1L)
-      }
-    }
-    done.value
+    // read back on every later one); the sink honours the published one.
+    sharedDictFor(ds, fs, dir)
+    ds.write.format("graft").mode("append")
+      .option("arrange", cfg.numPartitions.toLong).option("resume", true)
+      .option("chunkTokens", cfg.chunkTokens.toLong).save(dir)
+    (committedPids() -- before).size.toLong
   }
 
-  /** The per-partition atomic data+manifest commit protocol, shared by
-    * encodeToDir and the DSv2 sink — exactly ONE copy of the delicate
+  /** The per-partition atomic data+manifest commit protocol of the DSv2
+    * sink's writer (GraftDataWriter) — exactly ONE copy of the delicate
     * dance. Temp names carry the task attempt id so speculative/zombie
     * attempts never interleave writes into one temp file; the manifest
     * rename is the commit point; a loser discards its temp and walks away.
     * Usage: check alreadyDone, add() every chunk, then commit() exactly
-    * once (or abort() on failure). */
+    * once (or abort() on failure); a partition that added no chunk is
+    * never committed. */
   private[graft] final class PartitionCommitter(fs: FileSystem, dir: String,
                                                 pid: Int, attempt: Long) {
     private val manifest = new Path(s"$dir/_lineage/${pn(pid)}.json")
@@ -164,7 +138,6 @@ object Lineage {
 
     /** Returns true iff THIS attempt committed the manifest. */
     def commit(): Boolean = {
-      appender.open() // empty partition: 0 chunks, still an empty data file
       appender.close()
       // Re-check the commit point IMMEDIATELY before touching dataFinal: a
       // losing speculative/zombie attempt that passed the entry check may
@@ -215,7 +188,7 @@ object Lineage {
   /** Frames chunks into ONE data file and builds each chunk's manifest row
     * at its running offset — the append step PartitionCommitter and
     * GroupStager (and through it the DELETE rewrite) share. The file is
-    * created on the first append (or by `open`). */
+    * created on the first append. */
   private final class ChunkAppender(fs: FileSystem, path: Path) {
     val rows = new scala.collection.mutable.ArrayBuffer[ManifestRow]()
     private var offset = 0L
@@ -237,13 +210,12 @@ object Lineage {
       write(frame, m.copy(offset = offset))
 
     private def write(frame: Array[Byte], row: ManifestRow): Unit = {
-      open()
+      if (out == null) out = fs.create(path, true)
       out.write(frame)
       rows += row
       offset += frame.length
     }
 
-    def open(): Unit = if (out == null) out = fs.create(path, true)
     def close(): Unit = if (out != null) out.close()
   }
 
@@ -421,9 +393,9 @@ object Lineage {
   // ---- bucket-layout marker ------------------------------------------------
   /** `_graft_buckets` holds n iff every committed part file contains exactly
     * the rows Spark's hash clustering assigns it: part_id % n ==
-    * pmod(murmur3_42(doc_id), n) for every row. Written only by writers that
-    * PRODUCED that layout (encodeToDir's deterministic repartition; the DSv2
-    * sink under `option("arrange", n)`), deleted by any write that breaks it
+    * pmod(murmur3_42(doc_id), n) for every row. Written only by a write that
+    * PRODUCED that layout (the DSv2 sink under `option("arrange", n)`, which
+    * encodeToDir is), deleted by any write that breaks it
     * (unarranged appends, mismatched partition counts). The marker is what
     * lets the DSv2 scan report KeyGroupedPartitioning for storage-partitioned
     * (shuffle-free) joins — a WRONG marker makes such a join silently drop
@@ -968,6 +940,19 @@ object Lineage {
     fs.exists(new Path(s"$root/_graft_stream_tree"))
   }
 
+  /** Refuse a batch write into a batch-TREE root: it would create
+    * `dir/_lineage`, after which resolveReadDirs resolves the ROOT as a
+    * plain table and every batch=N subdir goes silently invisible to batch
+    * reads (and a restarted stream reader fails on its root check). The
+    * one guard of the DSv2 sink and encodeToDir, run before either creates
+    * anything under `dir`. */
+  def requireNotBatchTree(spark: SparkSession, dir: String): Unit =
+    if (isStreamTree(spark, dir) || batchDirs(spark, dir).nonEmpty)
+      throw new IllegalArgumentException(
+        s"$dir is a batch TREE (streaming-sink output / batch=N layout) " +
+          "— batch writes target plain lineage tables; use writeStream " +
+          "or a fresh root")
+
   /** The batch subdirs a BATCH read of the tree may trust: READY-marked
     * dirs when the tree is marker-aware (any ready marker present, or the
     * tree-level stream marker says markers are coming), the full at-rest
@@ -1004,9 +989,10 @@ object Lineage {
 
   /** Compact a streaming batch TREE into one at-rest lineage TABLE: a
     * year of micro-batches leaves thousands of small batch dirs whose
-    * chunks are epoch-sized; re-encoding through the normal deterministic
-    * arrange gives full-size chunks, one shared dictionary, and one
-    * manifest — the table the batch readers actually want.
+    * chunks are epoch-sized; re-encoding through encodeToDir (the sink's
+    * arranged resume write) gives full-size chunks, one shared dictionary,
+    * and one manifest — the table the batch readers actually want. `dst`
+    * must not be a batch-tree root: encodeToDir refuses one.
     *
     * The input is PINNED, never "the tree right now": only READY batches
     * with number <= `untilBatch` are consumed. That pin is what makes the
@@ -1018,7 +1004,8 @@ object Lineage {
     * expires exactly the consumed range: `expireBatchesBelow(root,
     * untilBatch + 1)` — no listing race, because the pin IS the frontier.
     * The decoded Dataset is persisted across encodeToDir's two passes
-    * (dict training + encode) so the tree's payloads decode once. */
+    * (dict training + the arranged write) so the tree's payloads decode
+    * once. */
   def compactTreeToTable(spark: SparkSession, root: String, dst: String,
                          cfg: EncoderConfig, untilBatch: Long): Long = {
     import spark.implicits._

@@ -44,12 +44,7 @@ final case class EncodedChunk(
   * well under executor memory at any cluster scale. */
 final case class EncoderConfig(
     chunkTokens: Int = ChunkSlicer.DefaultChunkTokens,
-    numPartitions: Int = 0, // 0 = keep upstream partitioning
-    // serialized shared FSST table (Fsst.tableToBytes) for the doc_id meta
-    // section: trained once per TABLE, stored once (the lineage dir keeps it
-    // in _lineage/_shared_dict.bin), coded against by every chunk — a few KB
-    // captured into task closures, immutable after training
-    sharedMetaDict: Option[Array[Byte]] = None) {
+    numPartitions: Int = 0) { // 0 = keep upstream partitioning
   require(chunkTokens > 0)
 }
 

@@ -9,8 +9,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** The V2 `bucket(numBuckets, doc_id)` function the graft catalog serves —
   * the hash identity that makes storage-partitioned joins SOUND.
   *
-  * Graft tables written by `Lineage.encodeToDir` / the DSv2 sink under
-  * `option("arrange", n)` lay rows out by Spark's own hash clustering:
+  * Graft tables written by the DSv2 sink under `option("arrange", n)`
+  * (`Lineage.encodeToDir` is that write) lay rows out by Spark's own hash
+  * clustering:
   * part file id = pmod(murmur3_seed42(doc_id utf8 bytes), n) — the exact
   * expression `repartition(n, col("doc_id"))` / HashPartitioning evaluates.
   * This function computes THAT value (via catalyst's Murmur3HashFunction —

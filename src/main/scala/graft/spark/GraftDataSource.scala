@@ -20,7 +20,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.engine.{ChunkBuilder, ChunkSlicer, EncoderConfig, EngineFs, Lineage, MetaDict, SeqRow, TokenSketch}
+import graft.engine.{ChunkBuilder, ChunkSlicer, EngineFs, Lineage, MetaDict, SeqRow, TokenSketch}
 
 /** `spark.read.format("graft").load(dir)` — a DataSourceV2 reader over a
   * lineage table dir, making the engine's storage a first-class Spark
@@ -1201,9 +1201,11 @@ class GraftMicroBatchStream(root: String, pushed: Array[Filter],
 // ---- write path ------------------------------------------------------------
 
 /** `df.write.format("graft").mode("append"|"overwrite").save(dir)` — the
-  * sink half of the source above, riding the SAME atomic per-partition
-  * commit protocol as Lineage.encodeToDir (one copy of the delicate dance:
-  * Lineage.PartitionCommitter). Semantics:
+  * sink half of the source above and the engine's one batch writer, each
+  * partition committed through Lineage.PartitionCommitter (one copy of the
+  * delicate dance). `Lineage.encodeToDir` is this sink's arranged resume
+  * write: `option("arrange", n)` + `option("resume", "true")` after it
+  * publishes the table's shared dictionary. Semantics:
   *  - rows are chunked AS PARTITIONED (the sink never reshuffles — encode
   *    where the data lives; repartition deterministically upstream if you
   *    want resume-sound partition membership);
@@ -1211,13 +1213,14 @@ class GraftMicroBatchStream(root: String, pushed: Array[Filter],
   *    partition files (ids offset past the committed ones) — never a
   *    silent skip of new data. Concurrent appends to one dir need external
   *    coordination (the offset is computed once, driver-side);
-  *  - `option("resume", "true")` switches append to encodeToDir's RESUME
-  *    semantics instead: partition ids are kept and already-committed ones
+  *  - `option("resume", "true")` switches append to RESUME semantics
+  *    instead: partition ids are kept and already-committed ones
   *    are skipped — for re-running the exact same deterministic write
   *    after a failure, NOT for adding new data;
   *  - overwrite truncates the table dir first (driver-side, once);
   *  - an already-published shared meta dictionary is honored; fresh dirs
-  *    write self-contained chunks;
+  *    write self-contained chunks (encodeToDir publishes one first);
+  *  - a partition that receives no row writes no file;
   *  - `option("chunkTokens", n)` tunes the chunk budget.
   *
   * `df.writeStream.format("graft")` writes the STREAMING batch-tree
@@ -1267,10 +1270,11 @@ class GraftWrite(path: String, inputSchema: StructType, doTruncate: Boolean,
   // resume-sound write needs — hash-cluster by doc_id into exactly n
   // partitions, sorted (source, doc_id) within each — via the declarative
   // write-distribution API instead of a caller-side
-  // repartition(n, doc_id).sortWithinPartitions(...). The produced layout
-  // is BYTE-IDENTICAL to Lineage.encodeToDir(numPartitions = n) on the
-  // same dict (spec-pinned). Without the option: unspecified distribution,
-  // rows chunk AS PARTITIONED (the no-shuffle contract stands).
+  // repartition(n, doc_id).sortWithinPartitions(...), and BYTE-IDENTICAL
+  // to it on the same dict (spec-pinned). Lineage.encodeToDir is this
+  // arranged write in resume mode. Without the option: unspecified
+  // distribution, rows chunk AS PARTITIONED (the no-shuffle contract
+  // stands).
   import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
   import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
   override def requiredDistribution(): Distribution =
@@ -1290,17 +1294,8 @@ class GraftWrite(path: String, inputSchema: StructType, doTruncate: Boolean,
     val fs = EngineFs.get(path,
       spark.sparkContext.hadoopConfiguration)
     import org.apache.hadoop.fs.Path
-    // mirror image of the streaming sink's plain-table guard: a batch
-    // write into a batch-TREE root would mkdir `$path/_lineage`, after
-    // which resolveReadDirs resolves the ROOT as a plain table and every
-    // batch=N subdir goes silently invisible to batch reads (and a
-    // restarted stream reader fails on its root check) — refuse up front
-    if (Lineage.isStreamTree(spark, path) ||
-        Lineage.batchDirs(spark, path).nonEmpty)
-      throw new IllegalArgumentException(
-        s"$path is a batch TREE (streaming-sink output / batch=N layout) " +
-          "— batch writes target plain lineage tables; use writeStream " +
-          "or a fresh root")
+    // mirror image of the streaming sink's plain-table guard
+    Lineage.requireNotBatchTree(spark, path)
     if (doTruncate) {
       fs.delete(new Path(s"$path/data"), true)
       fs.delete(new Path(s"$path/_lineage"), true)
