@@ -47,15 +47,15 @@ object BlockCodec {
     out.result()
   }
 
-  /** Stats of each block of `values` split at `splits`, which choose each
-    * block's codec and size the payload (`payloadSize`) before any byte is
-    * written. */
+  /** Selection stats (`ChunkStats.select`) of each block of `values` split
+    * at `splits`, which choose each block's codec and size the payload
+    * (`payloadSize`) before any byte is written. */
   def analyze(values: Array[Int], splits: Array[Int]): Array[ChunkStats] = {
     val stats = new Array[ChunkStats](splits.length)
     var from = 0
     var b = 0
     while (b < splits.length) {
-      stats(b) = ChunkStats.analyze(values, from, splits(b))
+      stats(b) = ChunkStats.select(values, from, splits(b))
       from = splits(b)
       b += 1
     }
@@ -104,7 +104,13 @@ object BlockCodec {
   }
 
   def decode(buf: Array[Byte], pos0: Int, limit: Int, n: Int,
-             out: Array[Int]): Unit = {
+             out: Array[Int]): Unit = decode(buf, pos0, limit, n, out, 0)
+
+  /** Decode the n values of the blocks payload in [pos0, limit) into
+    * out(at..), each block's frame in place (no copy of its bytes or of its
+    * values). */
+  def decode(buf: Array[Byte], pos0: Int, limit: Int, n: Int,
+             out: Array[Int], at: Int): Unit = {
     val r = new Varint.Reader(buf, pos0, limit)
     val nBlocks = r.read().toInt
     if (nBlocks < 0) throw CorruptException("block count")
@@ -113,8 +119,7 @@ object BlockCodec {
     while (b < nBlocks) {
       val len = r.read().toInt
       if (len < 0 || r.pos + len > limit) throw TruncatedException
-      // decode the inner frame in place (no copy); header validated minimally
-      // (outer CRC already covered these bytes)
+      // header validated minimally (outer CRC already covered these bytes)
       if (len < TokenCodec.Overhead) throw TruncatedException
       val p = r.pos
       if (buf(p) != TokenCodec.MagicG || buf(p + 1) != TokenCodec.MagicT)
@@ -123,10 +128,8 @@ object BlockCodec {
       if (bn < 0 || o + bn > n) throw CorruptException("block overrun")
       val codec = buf(p + 2)
       if (codec == CodecId.Blocks) throw CorruptException("nested blocks")
-      val inner = new Array[Int](bn)
       TokenCodec.decodeBody(codec, buf, p + TokenCodec.HeaderLen,
-        p + len - TokenCodec.CrcLen, bn, inner)
-      System.arraycopy(inner, 0, out, o, bn)
+        p + len - TokenCodec.CrcLen, bn, out, at + o)
       o += bn
       r.pos += len
       b += 1

@@ -26,9 +26,10 @@ package graft.codec
   * Code lengths are capped at 15 by the classic frequency-halving retry.
   *
   * Decode goes through `Tables`: per present class, a fast lookup table
-  * min(maxLen, 12) bits wide (at most 8 KB, cache-resident); longer codes
-  * finish on the canonical first-code limits. Lengths that oversubscribe
-  * the code space are rejected.
+  * min(maxLen, 12) bits wide (at most 8 KB, cache-resident), narrower when
+  * a frame's classes would together need more than 4 entries per coded
+  * symbol; longer codes finish on the canonical first-code limits. Lengths
+  * that oversubscribe the code space are rejected.
   */
 object Huffman {
   final val MaxLen = 15
@@ -191,7 +192,18 @@ object Huffman {
     * framed block. The block size is known before any byte is written
     * (header + ceil(sum of freq * codeLen / 8)), so the output is allocated
     * once at its exact size and the code stream goes straight into it. */
-  def encode(data: Array[Byte], shift: Int): Array[Byte] = {
+  def encode(data: Array[Byte], shift: Int): Array[Byte] =
+    encodeAt(data, shift, 0, 0, Int.MaxValue)
+
+  /** The order-0 block of `data` at out(pre) of an array with `post` bytes
+    * after it (a frame around the block, filled in by the caller), or null
+    * without coding when that array would be `limit` bytes or longer. */
+  private[codec] def encodeFramed(data: Array[Byte], pre: Int, post: Int,
+                                  limit: Int): Array[Byte] =
+    encodeAt(data, Order0, pre, post, limit)
+
+  private def encodeAt(data: Array[Byte], shift: Int, pre: Int, post: Int,
+                       limit: Int): Array[Byte] = {
     val nClass = 256 >>> shift
     val freq = new Array[Int](nClass << 8)
     var prev = 0
@@ -225,19 +237,22 @@ object Huffman {
       }
       c += 1
     }
-    val out = new Array[Byte](size + ((bits + 7) >>> 3).toInt)
-    var p = if (nClass == 1) 0 else nClass >>> 3
+    val total = pre + size + ((bits + 7) >>> 3) + post
+    if (total >= limit) return null
+    val out = new Array[Byte](total.toInt)
+    var p = pre + (if (nClass == 1) 0 else nClass >>> 3)
     c = 0
     while (c < nClass) { // the present bitmap and the length headers
       if (present(c)) {
-        if (nClass > 1) out(c >>> 3) = (out(c >>> 3) | (1 << (c & 7))).toByte
+        if (nClass > 1) out(pre + (c >>> 3)) = (out(pre + (c >>> 3)) | (1 << (c & 7))).toByte
         p = writeHeader(lens, c << 8, out, p)
       }
       c += 1
     }
     p = Varint.write(out, p, data.length.toLong)
     p = writeBits(data, shift, words, out, p)
-    require(p == out.length, s"huffman size model mismatch: wrote $p, predicted ${out.length}")
+    require(p == out.length - post,
+      s"huffman size model mismatch: wrote $p, predicted ${out.length - post}")
     out
   }
 
@@ -247,8 +262,9 @@ object Huffman {
     * Three codes (at most 45 bits) join the fewer than 8 pending bits in
     * the low end of a 64-bit word with no test between them, then every
     * whole byte goes out in one big-endian 64-bit store; the bytes past
-    * them are rewritten by the next store. The last 8 bytes, which such a
-    * store would overrun, are written a byte at a time. */
+    * them are rewritten by the next store (or, past the block's end, by the
+    * caller's frame). The last 8 bytes of `out`, which such a store would
+    * overrun, are written a byte at a time. */
   private def writeBits(data: Array[Byte], shift: Int, words: Array[Int],
                         out: Array[Byte], p0: Int): Int = {
     val bb = java.nio.ByteBuffer.wrap(out) // big-endian
@@ -297,9 +313,17 @@ object Huffman {
 
   /** Code and decode tables of one model: for each present class its codes,
     * a fast lookup table and the canonical first-code limits. Immutable once
-    * built, so one instance serves every thread. */
+    * built, so one instance serves every thread.
+    *
+    * The fast tables together hold at most `budget` entries: when 2^min(
+    * maxLen, 12) per class would be more, every class's table is narrowed
+    * to the same smaller width, and longer codes finish on the limits. A
+    * frame with many dense contexts (full order-1 over varied bytes) then
+    * builds tables in proportion to what it decodes, not 4,096 entries for
+    * each of up to 256 classes. */
   final class Tables private[Huffman] (private[Huffman] val shift: Int,
-                                       slot: Array[Int], lens: Array[Int]) {
+                                       slot: Array[Int], lens: Array[Int],
+                                       budget: Int) {
     /** code << 4 | len per present class and symbol. */
     private[Huffman] val words = new Array[Int](lens.length)
     /** Per class: fastOff << 8 | fastBits << 4 | maxLen, or -1 if absent. */
@@ -334,8 +358,18 @@ object Huffman {
             l += 1
           }
           if (kraft > (1 << MaxLen)) throw CorruptException("huffman code table")
-          val fb = math.min(maxLen, FastBits)
-          info(c) = (size << 8) | (fb << 4) | maxLen
+          info(c) = maxLen
+        }
+        c += 1
+      }
+      // the widest common cap on the fast index that keeps to the budget
+      var cap = FastBits
+      while (cap > 1 && fastEntries(cap) > budget) cap -= 1
+      c = 0
+      while (c < slot.length) { // each present class's fast table's place
+        if (info(c) >= 0) {
+          val fb = math.min(info(c), cap)
+          info(c) = (size << 8) | (fb << 4) | info(c)
           size += 1 << fb
         }
         c += 1
@@ -358,6 +392,18 @@ object Huffman {
         c += 1
       }
       table
+    }
+
+    /** Fast entries of all present classes (`info` holding each one's
+      * maxLen) with the index capped at `cap` bits. */
+    private def fastEntries(cap: Int): Long = {
+      var total = 0L
+      var c = 0
+      while (c < info.length) {
+        if (info(c) >= 0) total += 1L << math.min(info(c), cap)
+        c += 1
+      }
+      total
     }
 
     /** sym << 4 | len of the code that begins the maxLen-bit window w of
@@ -399,7 +445,7 @@ object Huffman {
     // is corruption — reject BEFORE allocating (a mutated count varint must
     // not become a multi-GB allocation)
     if (count > (until - r.pos).toLong * 8) throw TruncatedException
-    val t = new Tables(shift, slot, lens)
+    val t = new Tables(shift, slot, lens, math.max(1 << FastBits, 4 * count.toInt))
     val out = new Array[Byte](count.toInt)
     if (nClass == 1) decodeOrder0(t, bytes, r.pos, until, out)
     else decodeContext(t, bytes, r.pos, until, out)
@@ -501,7 +547,7 @@ object Huffman {
     var c = 0
     while (c < 32) { unpackNibbles(model, c * 128, lens, c << 8, 256); c += 1 }
     if (lens.contains(0)) throw CorruptException("o1 shared model incomplete")
-    new Tables(Order1, Array.range(0, 32), lens)
+    new Tables(Order1, Array.range(0, 32), lens, Int.MaxValue)
   }
 
   /** Bitstream ONLY (no tables, no count — the caller's envelope carries the

@@ -111,25 +111,36 @@ object TokenCodec {
 
   /** `encodeAuto` of values[0, n), with the bounds and distinct set.
     *
-    * The per-block stats choose each block's codec and give the exact size
-    * of the blocks payload before any byte is written; the whole-vector
-    * stats give the best flat codec's size. The smaller is written, the
-    * blocks straight into the frame. The whole-vector stats also give the
-    * bounds and the distinct set, so no caller scans the values again. */
+    * One statistics pass (`ChunkStats.analyzeSplit`) gives each block's
+    * stats, which choose its codec and give the exact size of the blocks
+    * payload before any byte is written, and the whole vector's, derived
+    * from the blocks', which give the best flat codec's size, the bounds
+    * and the distinct set. The smaller of the two is written, the blocks
+    * straight into the frame, and the entropy wrap writes its code
+    * straight into its own frame. A vector too short to split, or split
+    * into one block, is analyzed whole. */
   def encodeAutoFrame(values: Array[Int], n: Int, rowLens: Array[Int]): AutoFrame = {
-    val st = ChunkStats.analyze(values, 0, n)
-    if (n < BlockCodec.MinTokens) return analyzed(flatFrame(values, n, st), st)
+    if (n < BlockCodec.MinTokens) {
+      val st = ChunkStats.analyze(values, 0, n)
+      return analyzed(flatFrame(values, n, st), st)
+    }
     val splits =
       if (rowLens != null) BlockCodec.rowSplits(rowLens)
       else BlockCodec.fixedSplits(n)
-    if (splits.length <= 1) return analyzed(hpackMaybe(flatFrame(values, n, st), n), st)
-    val blocks = BlockCodec.analyze(values, splits)
-    val blockedLen = BlockCodec.payloadSize(blocks)
+    if (splits.length <= 1) {
+      val st = ChunkStats.analyze(values, 0, n)
+      return analyzed(hpackMaybe(flatFrame(values, n, st), n), st)
+    }
+    require(splits(splits.length - 1) == n,
+      s"row lengths cover ${splits(splits.length - 1)} of $n values")
+    val split = ChunkStats.analyzeSplit(values, splits)
+    val st = split.whole
+    val blockedLen = BlockCodec.payloadSize(split.blocks)
     val inner =
       if (blockedLen < st.payloadSize(st.bestCodec))
-        blocksFrame(values, n, splits, blocks, blockedLen)
+        blocksFrame(values, n, splits, split.blocks, blockedLen)
       else flatFrame(values, n, st)
-    analyzed(hpackMaybe(inner, n), st)
+    new AutoFrame(hpackMaybe(inner, n), st.min, st.max, split.distinct)
   }
 
   private def analyzed(frame: Array[Byte], st: ChunkStats): AutoFrame =
@@ -156,14 +167,13 @@ object TokenCodec {
     * values; bit-packed lanes repeat); a static order-0 code claws that
     * back with one extra sequential pass each way. Framed like any codec so
     * decode dispatch is uniform; never taken for small frames (header
-    * overhead) or incompressible ones. */
+    * overhead) or incompressible ones. The Huffman block is written in
+    * place in the frame, and not at all when its exact size shows it
+    * loses. */
   private def hpackMaybe(inner: Array[Byte], n: Int): Array[Byte] = {
     if (inner.length < (1 << 10)) return inner
-    val packed = Huffman.encode(inner)
-    if (Overhead + packed.length >= inner.length) return inner
-    val out = new Array[Byte](Overhead + packed.length)
-    System.arraycopy(packed, 0, out, HeaderLen, packed.length)
-    seal(out, CodecId.HPack, n)
+    val out = Huffman.encodeFramed(inner, HeaderLen, CrcLen, inner.length)
+    if (out == null) inner else seal(out, CodecId.HPack, n)
   }
 
   /** Fill in the header and the CRC of a frame whose body is in place. */
@@ -187,21 +197,11 @@ object TokenCodec {
   }
 
   /** Decode a framed record occupying [pos, limit) of `bytes`. */
-  def decodeRange(bytes: Array[Byte], pos: Int, limit: Int): DecodeResult = {
-    if (limit - pos < Overhead) return Truncated
-    if (bytes(pos) != MagicG || bytes(pos + 1) != MagicT)
-      return Corrupt("bad magic")
-    val end = limit - CrcLen
-    val crc = new CRC32
-    crc.update(bytes, pos, end - pos)
-    if (crc.getValue.toInt != readIntLE(bytes, end))
-      return Corrupt("crc mismatch")
-    val n = readIntLE(bytes, pos + 3)
-    if (n < 0) return Corrupt("negative count")
-    val codec = bytes(pos + 2)
+  def decodeRange(bytes: Array[Byte], pos: Int, limit: Int): DecodeResult =
     try {
+      val n = checkFrame(bytes, pos, limit)
       val out = new Array[Int](n)
-      decodeBody(codec, bytes, pos + HeaderLen, end, n, out)
+      decodeBody(bytes(pos + 2), bytes, pos + HeaderLen, limit - CrcLen, n, out, 0)
       Decoded(out)
     } catch {
       case TruncatedException => Truncated
@@ -209,29 +209,42 @@ object TokenCodec {
       case _: ArrayIndexOutOfBoundsException => Truncated
       case _: NegativeArraySizeException => Corrupt("bad length")
     }
+
+  /** The value count of the frame in [pos, limit), after checking its
+    * length, magic and CRC. */
+  private def checkFrame(bytes: Array[Byte], pos: Int, limit: Int): Int = {
+    if (limit - pos < Overhead) throw TruncatedException
+    if (bytes(pos) != MagicG || bytes(pos + 1) != MagicT)
+      throw CorruptException("bad magic")
+    val end = limit - CrcLen
+    val crc = new CRC32
+    crc.update(bytes, pos, end - pos)
+    if (crc.getValue.toInt != readIntLE(bytes, end))
+      throw CorruptException("crc mismatch")
+    val n = readIntLE(bytes, pos + 3)
+    if (n < 0) throw CorruptException("negative count")
+    n
   }
 
+  /** Decode the n values of a `codec` body in [body, end) into out(at..):
+    * the blocks and the entropy wrap's inner frame decode in place too. */
   private[codec] def decodeBody(codec: Byte, bytes: Array[Byte], body: Int,
-                                end: Int, n: Int, out: Array[Int]): Unit =
+                                end: Int, n: Int, out: Array[Int], at: Int): Unit =
     codec match {
-      case CodecId.Raw     => decodeRaw(bytes, body, end, n, out)
-      case CodecId.BitPack => decodeBitPack(bytes, body, end, n, out)
-      case CodecId.Rle     => decodeRle(bytes, body, end, n, out)
-      case CodecId.Dict    => decodeDict(bytes, body, end, n, out)
-      case CodecId.Delta   => decodeDelta(bytes, body, end, n, out)
-      case CodecId.VarInt  => decodeVarint(bytes, body, end, n, out)
-      case CodecId.Blocks  => BlockCodec.decode(bytes, body, end, n, out)
+      case CodecId.Raw     => decodeRaw(bytes, body, end, n, out, at)
+      case CodecId.BitPack => decodeBitPack(bytes, body, end, n, out, at)
+      case CodecId.Rle     => decodeRle(bytes, body, end, n, out, at)
+      case CodecId.Dict    => decodeDict(bytes, body, end, n, out, at)
+      case CodecId.Delta   => decodeDelta(bytes, body, end, n, out, at)
+      case CodecId.VarInt  => decodeVarint(bytes, body, end, n, out, at)
+      case CodecId.Blocks  => BlockCodec.decode(bytes, body, end, n, out, at)
       case CodecId.HPack =>
         val inner = Huffman.decode(bytes, body, end)
         if (inner.length >= 3 && inner(2) == CodecId.HPack)
           throw CorruptException("nested hpack") // encoder never nests
-        decodeRange(inner, 0, inner.length) match {
-          case Decoded(v) =>
-            if (v.length != n) throw CorruptException("hpack count mismatch")
-            System.arraycopy(v, 0, out, 0, n)
-          case Truncated  => throw TruncatedException
-          case Corrupt(m) => throw CorruptException(m)
-        }
+        if (checkFrame(inner, 0, inner.length) != n)
+          throw CorruptException("hpack count mismatch")
+        decodeBody(inner(2), inner, HeaderLen, inner.length - CrcLen, n, out, at)
       case other => throw CorruptException(s"unknown codec $other")
     }
 
@@ -250,10 +263,10 @@ object TokenCodec {
     pos
   }
   private def decodeRaw(b: Array[Byte], pos0: Int, limit: Int, n: Int,
-                        out: Array[Int]): Unit = {
+                        out: Array[Int], at: Int): Unit = {
     if (pos0 + 4L * n > limit) throw TruncatedException
     var pos = pos0; var i = 0
-    while (i < n) { out(i) = readIntLE(b, pos); pos += 4; i += 1 }
+    while (i < n) { out(at + i) = readIntLE(b, pos); pos += 4; i += 1 }
   }
 
   // ---- frame-of-reference + bit-pack --------------------------------------
@@ -265,12 +278,12 @@ object TokenCodec {
     BitPacking.pack(v, from, until, st.min.toLong, st.forWidth, out, pos0 + 5)
   }
   private def decodeBitPack(b: Array[Byte], pos0: Int, limit: Int, n: Int,
-                            out: Array[Int]): Unit = {
+                            out: Array[Int], at: Int): Unit = {
     if (pos0 + 5 > limit) throw TruncatedException
     val base = readIntLE(b, pos0).toLong
     val width = b(pos0 + 4) & 0xff
     if (width > 32) throw CorruptException(s"bitpack width $width")
-    BitPacking.unpack(b, pos0 + 5, limit, n, width, base, out, 0)
+    BitPacking.unpack(b, pos0 + 5, limit, n, width, base, out, at)
   }
 
   // ---- run-length ----------------------------------------------------------
@@ -291,14 +304,14 @@ object TokenCodec {
     pos
   }
   private def decodeRle(b: Array[Byte], pos0: Int, limit: Int, n: Int,
-                        out: Array[Int]): Unit = {
+                        out: Array[Int], at: Int): Unit = {
     val r = new Varint.Reader(b, pos0, limit)
     var i = 0
     while (i < n) {
       val x = r.readZ().toInt
       val run = r.read().toInt + 1
       if (run <= 0 || i + run > n) throw CorruptException("rle overrun")
-      java.util.Arrays.fill(out, i, i + run, x)
+      java.util.Arrays.fill(out, at + i, at + i + run, x)
       i += run
     }
   }
@@ -338,7 +351,7 @@ object TokenCodec {
     BitPacking.pack(idx, 0, n, 0L, width, out, pos)
   }
   private def decodeDict(b: Array[Byte], pos0: Int, limit: Int, n: Int,
-                         out: Array[Int]): Unit = {
+                         out: Array[Int], at: Int): Unit = {
     val r = new Varint.Reader(b, pos0, limit)
     val card = r.read().toInt
     if (card < 0 || card > ChunkStats.DictCap) throw CorruptException("dict card")
@@ -357,7 +370,7 @@ object TokenCodec {
     while (i < n) {
       val k = idx(i)
       if (k < 0 || k >= card) throw CorruptException("dict index out of range")
-      out(i) = dict(k)
+      out(at + i) = dict(k)
       i += 1
     }
   }
@@ -378,15 +391,15 @@ object TokenCodec {
     pos
   }
   private def decodeDelta(b: Array[Byte], pos0: Int, limit: Int, n: Int,
-                          out: Array[Int]): Unit = {
+                          out: Array[Int], at: Int): Unit = {
     if (n == 0) return
     val r = new Varint.Reader(b, pos0, limit)
     var prev = r.readZ()
-    out(0) = prev.toInt
+    out(at) = prev.toInt
     var i = 1
     while (i < n) {
       prev += r.readZ()
-      out(i) = prev.toInt
+      out(at + i) = prev.toInt
       i += 1
     }
   }
@@ -408,14 +421,14 @@ object TokenCodec {
     pos
   }
   private def decodeVarint(b: Array[Byte], pos0: Int, limit: Int, n: Int,
-                           out: Array[Int]): Unit = {
+                           out: Array[Int], at: Int): Unit = {
     if (n == 0) return
     if (pos0 >= limit) throw TruncatedException
     val unsigned = b(pos0) == 0
     val r = new Varint.Reader(b, pos0 + 1, limit)
     var i = 0
     while (i < n) {
-      out(i) = if (unsigned) r.read().toInt else r.readZ().toInt
+      out(at + i) = if (unsigned) r.read().toInt else r.readZ().toInt
       i += 1
     }
   }

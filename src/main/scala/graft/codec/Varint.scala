@@ -42,14 +42,19 @@ object Varint {
     pos + 1
   }
 
-  /** `write(buf, pos, x & 0xffffffffL)`, with the one- and two-byte cases
-    * (most token values) written without a loop. */
+  /** `write(buf, pos, x & 0xffffffffL)`, with the one- to three-byte cases
+    * (every token value of a 50K vocabulary) written without a loop. */
   def write32(buf: Array[Byte], pos: Int, x: Int): Int =
     if ((x & ~0x7f) == 0) { buf(pos) = x.toByte; pos + 1 }
     else if ((x & ~0x3fff) == 0) {
       buf(pos) = (x | 0x80).toByte
       buf(pos + 1) = (x >>> 7).toByte
       pos + 2
+    } else if ((x & ~0x1fffff) == 0) {
+      buf(pos) = (x | 0x80).toByte
+      buf(pos + 1) = ((x >>> 7) | 0x80).toByte
+      buf(pos + 2) = (x >>> 14).toByte
+      pos + 3
     } else write(buf, pos, x & 0xffffffffL)
 
   /** `writeZ(buf, pos, x.toLong)` through `write32`: the 32-bit zigzag of

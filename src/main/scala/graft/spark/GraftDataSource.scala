@@ -4,6 +4,7 @@ import java.util
 import java.util.OptionalLong
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -1338,15 +1339,22 @@ class GraftWrite(path: String, inputSchema: StructType, doTruncate: Boolean,
       }
     }
     val dict = Lineage.sharedDictBytes(spark, path)
-    new GraftWriterFactory(path,
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration),
-      dict, chunkTokens, pidOffset, resume)
+    // one broadcast of the Hadoop conf per write: each executor reads it
+    // once, where a conf in the factory would be deserialized by every task
+    conf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+    new GraftWriterFactory(path, conf, dict, chunkTokens, pidOffset, resume)
   }
+  private var conf: Broadcast[SerializableConfiguration] = _
+  private def releaseConf(): Unit =
+    if (conf != null) { conf.destroy(); conf = null }
+
   // per-partition commits are already durable+atomic (manifest renames);
-  // the job-level commit has nothing left to do, and failed jobs leave
-  // only committed partitions — exactly the resume contract
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+  // the job-level commit has only the conf broadcast left to release, and
+  // failed jobs leave only committed partitions — exactly the resume
+  // contract
+  override def commit(messages: Array[WriterCommitMessage]): Unit = releaseConf()
+  override def abort(messages: Array[WriterCommitMessage]): Unit = releaseConf()
 }
 
 object GraftWrite {
@@ -1434,13 +1442,13 @@ class GraftStreamingWriterFactory(root: String, conf: SerializableConfiguration,
 case class GraftCommitMessage(pid: Int, committed: Boolean)
     extends WriterCommitMessage
 
-class GraftWriterFactory(dir: String, conf: SerializableConfiguration,
+class GraftWriterFactory(dir: String, conf: Broadcast[SerializableConfiguration],
                          dict: Option[Array[Byte]], chunkTokens: Int,
                          pidOffset: Int, resume: Boolean)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int,
                             taskId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(dir, conf.value, pidOffset + partitionId, taskId,
+    new GraftDataWriter(dir, conf.value.value, pidOffset + partitionId, taskId,
       dict, chunkTokens, resume)
 }
 

@@ -130,6 +130,86 @@ class AutoSelectSpec extends AnyFunSuite with GenChecks {
       Huffman.decode(enc, TokenCodec.HeaderLen, enc.length - TokenCodec.CrcLen)(2) != CodecId.Blocks))
   }
 
+  /** `checkAuto`, and the whole-chunk stats that `analyzeSplit` derives
+    * from the blocks' must equal `analyze` of the whole chunk, field by
+    * field; its distinct bitmap must be `distinctBitmap` of that. */
+  private def checkMerged(v: Array[Int], rowLens: Array[Int]): Unit = {
+    checkAuto(v, rowLens)
+    val splits =
+      if (rowLens != null) BlockCodec.rowSplits(rowLens)
+      else BlockCodec.fixedSplits(v.length)
+    if (splits.nonEmpty) {
+      val ctx = s"n=${v.length} blocks=${splits.length}"
+      val split = ChunkStats.analyzeSplit(v, splits)
+      val want = ChunkStats.analyze(v)
+      assert(split.whole.copy(sortedDistinct = null) == want.copy(sortedDistinct = null), ctx)
+      assert(split.whole.sortedDistinct.sameElements(want.sortedDistinct), ctx)
+      assert(java.util.Arrays.equals(split.distinct, ChunkStats.distinctBitmap(want)), ctx)
+      // each block's stats choose and size what analyze of the block would
+      var from = 0
+      for ((b, k) <- split.blocks.zipWithIndex) {
+        val exact = ChunkStats.analyze(v, from, splits(k))
+        assert(b.bestCodec == exact.bestCodec && b.bestSize == exact.bestSize,
+          s"$ctx block $k")
+        from = splits(k)
+      }
+    }
+  }
+
+  test("merged stats: a chunk spanning 2^16 or more whose every block is narrow") {
+    val rng = new scala.util.Random(3)
+    // four 600-token rows, each within 300 values, 40,000 apart
+    val v = Array.tabulate(2400)(i => (i / 600) * 40000 + rng.nextInt(300))
+    checkMerged(v, Array.fill(4)(600))
+    checkMerged(v.map(_ - 70000), Array.fill(4)(600)) // and below zero
+    val wide = Array.tabulate(3000)(i => if (i < 1500) rng.nextInt(200) else Int.MaxValue - rng.nextInt(200))
+    checkMerged(wide, Array.fill(10)(300))
+  }
+
+  test("merged stats: negative values in one block only") {
+    val rng = new scala.util.Random(4)
+    val v = Array.tabulate(3000)(i => if (i >= 1200 && i < 1500) -1 - rng.nextInt(50) else rng.nextInt(5000))
+    checkMerged(v, Array.fill(10)(300))
+    checkMerged(v, null)
+    val far = v.clone()
+    far(1300) = Int.MinValue
+    checkMerged(far, Array.fill(10)(300))
+  }
+
+  test("merged stats: a run over three and more whole blocks") {
+    val rng = new scala.util.Random(5)
+    def noise(n: Int) = Array.fill(n)(rng.nextInt(40))
+    for (whole <- Seq(3, 4, 7); lead <- Seq(0, 1, 77); trail <- Seq(0, 1, 130)) {
+      // a run that starts `lead` tokens before a block end, fills `whole`
+      // 300-token blocks, and ends `trail` tokens into the next block
+      val v = noise(300 - lead) ++ Array.fill(lead + 300 * whole + trail)(9) ++ noise(600 - trail)
+      val rl = Array.fill(v.length / 300)(300)
+      checkMerged(v, rl)
+      val st = ChunkStats.analyze(v)
+      assert(st.maxRun >= 300 * whole)
+    }
+    // the whole chunk one value, split in many blocks
+    checkMerged(Array.fill(5000)(-3), Array.fill(20)(250))
+  }
+
+  test("merged stats: single-block and fixed-split chunks") {
+    val rng = new scala.util.Random(6)
+    for (n <- Seq(512, 4096, 9000)) {
+      val v = Array.fill(n)(rng.nextInt(50257))
+      checkMerged(v, Array(n))    // one row: one block, analyzed whole
+      checkMerged(v, null)        // fixed 4096 splits
+      checkMerged(v.sorted, null)
+    }
+    forAll(Gen.zip(Gen.choose(2, 80), Gen.choose(1L, 1000000L)), trials = 60) {
+      case (nRows, seed) =>
+        val (v, rl) = rows(nRows, Gen.choose(0, 900),
+          Gen.oneOf(Gen.choose(0, 300), Gen.choose(-40, 40), Gen.choose(0, 50256),
+            Gen.choose(Int.MinValue, Int.MaxValue)), carry = true, seed)
+        checkMerged(v, rl)
+        checkMerged(v, null)
+    }
+  }
+
   test("dict ranks write what the binary-search encoder wrote") {
     def check(v: Array[Int], from: Int, until: Int): Unit = {
       val st = ChunkStats.analyze(v, from, until)
